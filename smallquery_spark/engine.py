@@ -1,13 +1,17 @@
 """The engine facade.
 
-Three entry points mirroring the reference's lifecycle (SURVEY.md §3.4):
+Entry points mirroring the reference's lifecycle (SURVEY.md §3.4):
 
 1. ``engine.sql(query, workspace=..., version=...)`` — resolve versioned
    tables, register temp views, hand the query to Catalyst.
 2. ``engine.table(name)`` — DataFrame-builder entry; thin resolution then
    plain PySpark DataFrame.
-3. ``engine.stream(name)`` — Structured Streaming entry (see
-   smallquery_spark.streaming).
+3. ``engine.write_table(df, name, ...)`` — commit a small result as a new
+   version of a workspace table.
+
+Every spelling of a table name (plain ``name``, ``name@ver``,
+``name VERSION AS OF 'ver'``, ``engine.table``) resolves through the one
+lookup rule of ``catalog.workspace.find_table``.
 
 Version resolution happens driver-side *before* planning (SURVEY.md
 §4.3): Spark never sees the git layer, only an immutable snapshot
@@ -22,7 +26,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 from smallquery_spark.catalog import VersionedCatalog
-from smallquery_spark.catalog.workspace import LATEST
+from smallquery_spark.catalog.workspace import LATEST, find_table
 from smallquery_spark.errors import EngineError
 from smallquery_spark.sources import read_any
 
@@ -128,38 +132,34 @@ class Engine:
         query: str,
         workspace: str | None = None,
         version: str = LATEST,
-        tables: dict[str, str] | None = None,
     ) -> DataFrame:
         """Run SQL against versioned workspace tables.
 
         ``table@version`` references in the query are resolved through the
         workspace catalog and rewritten to registered temp views before
-        Catalyst sees the text. Plain table names are resolved at
-        ``version`` (default ``latest`` = HEAD, reference
+        Catalyst sees the text. Plain table names are looked up in the
+        snapshot at ``version`` (default ``latest`` = HEAD, reference
         http_server.rs:106-110) when a workspace is given, or must already
-        be registered views otherwise. ``tables`` maps extra view names to
-        concrete paths.
+        be registered views otherwise.
         """
         with self._sql_lock:
-            for name, path in (tables or {}).items():
-                read_any(self.spark, path).createOrReplaceTempView(name)
-
             if workspace is not None:
                 ws = self._require_catalog().workspace(workspace)
                 query = self._rewrite_versioned_refs(query, ws)
-                # Register un-suffixed names present in the snapshot at
-                # `version` (identifier scan runs on literal-masked text so
-                # string contents can't trigger spurious registrations).
-                snap_tables = self._snapshot_tables(ws, version)
-                masked = _mask_literals(query)
+                # Register the un-suffixed names that are tables in the
+                # snapshot at `version` (identifier scan runs on
+                # literal-masked text so string contents can't trigger
+                # spurious registrations).
+                snap = ws.snapshot(version)
                 referenced = set(
-                    re.findall(r"\b[A-Za-z_][A-Za-z0-9_]*\b", masked)
+                    re.findall(r"\b[A-Za-z_][A-Za-z0-9_]*\b", _mask_literals(query))
                 )
                 # `"tbl"` / `` `tbl` `` quoted references count as referenced
                 referenced |= set(re.findall(r'["`]([A-Za-z_][A-Za-z0-9_]*)["`]', query))
-                for tbl, path in snap_tables.items():
-                    if tbl in referenced:
-                        read_any(self.spark, path).createOrReplaceTempView(tbl)
+                for name in referenced:
+                    path = find_table(snap, name)
+                    if path is not None:
+                        read_any(self.spark, path).createOrReplaceTempView(name)
             return self.spark.sql(query)
 
     def _rewrite_versioned_refs(self, query: str, ws) -> str:
@@ -198,19 +198,6 @@ class Engine:
         out.append(query[last:])
         return "".join(out)
 
-    @staticmethod
-    def _snapshot_tables(ws, version: str) -> dict[str, str]:
-        import os
-
-        snap = ws.snapshot(version)
-        out: dict[str, str] = {}
-        for dirpath, _dirnames, filenames in os.walk(snap):
-            for fn in filenames:
-                base, ext = os.path.splitext(fn)
-                if ext.lower() in (".parquet", ".csv", ".json", ".jsonl"):
-                    out.setdefault(base, os.path.join(dirpath, fn))
-        return out
-
     # -- write entry -------------------------------------------------------
 
     def write_table(
@@ -227,9 +214,3 @@ class Engine:
 
         ws = self._require_catalog().workspace(workspace)
         return write_table_version(ws, df, table, message, tag=tag)
-
-    # -- streaming entry ---------------------------------------------------
-
-    def stream(self, path: str, schema, fmt: str = "parquet") -> DataFrame:
-        """Structured Streaming source over a directory (SURVEY B50)."""
-        return self.spark.readStream.schema(schema).format(fmt).load(path)

@@ -351,7 +351,7 @@ def b08_html_render(spark, sf_dir):
     from smallquery_spark.sinks.render import render_html
 
     df = t(spark, sf_dir, "region")
-    html = render_html(df, limit=10)
+    html = render_html(df.columns, df.limit(10).collect())
     has_table = "<table" in html and "r_name" in html
     rows_ok = html.count("<tr>") == 1 + df.count()  # header + one per region
     return spark.createDataFrame(
@@ -376,7 +376,7 @@ def b08_chart_svg(spark, sf_dir):
         .agg(F.count("*").alias("n"))
         .orderBy("o_orderpriority")
     )
-    svg = render_chart_svg(agg, x="o_orderpriority", y="n")
+    svg = render_chart_svg(agg.columns, agg.collect())
     svg_ok = svg.startswith("<svg") and svg.endswith("</svg>")
     bars_ok = svg.count("<rect") == agg.count()
     return spark.createDataFrame(
@@ -396,7 +396,7 @@ def b08_pdf_render(spark, sf_dir):
     from smallquery_spark.sinks.render import render_pdf
 
     df = t(spark, sf_dir, "nation").orderBy("n_nationkey")
-    pdf = render_pdf(df, title="nation", limit=25)
+    pdf = render_pdf(df.columns, df.limit(25).collect(), title="nation")
     pdf_ok = pdf.startswith(b"%PDF-1.4") and pdf.rstrip().endswith(b"%%EOF")
     rows_ok = pdf.count(b" Tj ET") == 1 + 1 + 25  # title + header + rows
     return spark.createDataFrame(

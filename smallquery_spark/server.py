@@ -29,15 +29,29 @@ version do zero git work.
 
 from __future__ import annotations
 
-import html
 import json
+import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import AnalysisException
+
 from smallquery_spark.catalog import VersionedCatalog
+from smallquery_spark.catalog.workspace import (
+    list_snapshot_dir,
+    read_snapshot_file,
+    snapshot_path,
+)
 from smallquery_spark.errors import EngineError
-from smallquery_spark.sinks.render import render_error, render_listing
+from smallquery_spark.sinks.render import (
+    render_chart_svg,
+    render_error,
+    render_file,
+    render_html,
+    render_listing,
+    render_pdf,
+)
 
 _PAGE = """<!DOCTYPE html>
 <html><head><title>{title}</title></head>
@@ -96,8 +110,6 @@ class _Handler(BaseHTTPRequestHandler):
     # -- static assets (reference A8, web.rs:7-20) ------------------------
 
     def _web_asset(self, tail: str):
-        import os
-
         base = os.path.join(os.path.dirname(__file__), "web_assets")
         full = os.path.normpath(os.path.join(base, tail))
         # stay inside the embedded asset dir (the reference's embed macro
@@ -111,18 +123,12 @@ class _Handler(BaseHTTPRequestHandler):
     # -- workspace file/dir query (reference A3/A4/A7) --------------------
 
     def _workspace(self, name: str, path: str, version: str):
-        ws = self.catalog.workspace(name)
-        import os
-
-        from smallquery_spark.sinks.render import render_file
-
-        snap = ws.snapshot(version)
-        rel_full = os.path.join(snap, path) if path else snap
-        if os.path.isfile(rel_full):
-            contents = ws.read_file(path, version)
-            return self._reply(render_file(path or name, contents))
-        items = ws.list_dir(path, version)
-        rels = [os.path.relpath(i, snap) for i in items]
+        # one version resolution per request: every read below is inside
+        # the snapshot it returned
+        snap = self.catalog.workspace(name).snapshot(version)
+        if os.path.isfile(snapshot_path(snap, path)):
+            return self._reply(render_file(path or name, read_snapshot_file(snap, path)))
+        rels = [os.path.relpath(i, snap) for i in list_snapshot_dir(snap, path)]
         return self._reply(render_listing(path or name, rels))
 
     # -- SQL query endpoint (Tier B surface) ------------------------------
@@ -131,11 +137,24 @@ class _Handler(BaseHTTPRequestHandler):
         sql = q.get("sql")
         if not sql:
             return self._reply(render_error("missing ?sql="), status=400)
+        limit = q.get("limit", "1000")
+        # Spark's limit is a 32-bit int
+        if not limit.isdecimal() or int(limit) >= 2**31:
+            return self._reply(
+                render_error(f"limit must be an integer in [0, 2^31), got {limit!r}"),
+                status=400,
+            )
         fmt = q.get("format", "html")
-        df = self.engine.sql(sql, workspace=name, version=version)
-        limit = int(q.get("limit", "1000"))
-        rows = df.limit(limit).collect()
+        try:
+            df = self.engine.sql(sql, workspace=name, version=version)
+        except AnalysisException as e:
+            # the SQL does not parse or analyze (ParseException is a subclass)
+            return self._reply(render_error(str(e)), status=400)
         cols = df.columns
+        if fmt == "svg" and len(cols) < 2:
+            return self._reply(render_error("svg format needs >= 2 columns"), status=400)
+        # the query runs once; every format renders these rows
+        rows = df.limit(int(limit)).collect()
         if fmt == "json":
             payload = json.dumps([{c: _j(r[c]) for c in cols} for r in rows])
             return self._reply(payload, ctype="application/json")
@@ -147,27 +166,16 @@ class _Handler(BaseHTTPRequestHandler):
         if fmt == "svg":
             # bar chart of the first two columns (x, y) — the reference's
             # declared "quickly creating charts" purpose (README.md:7)
-            if len(cols) < 2:
-                return self._reply(
-                    render_error("svg format needs >= 2 columns"), status=400
-                )
-            from smallquery_spark.sinks.render import render_chart_svg
-
-            svg = render_chart_svg(df, x=cols[0], y=cols[1], limit=limit)
-            return self._reply(svg, ctype="image/svg+xml")
+            return self._reply(render_chart_svg(cols, rows), ctype="image/svg+xml")
         if fmt == "pdf":
-            from smallquery_spark.sinks.render import render_pdf
-
-            pdf = render_pdf(df, title="query result", limit=min(limit, 55))
+            pdf = render_pdf(cols, rows[:55], title="query result")
             self.send_response(200)
             self.send_header("Content-Type", "application/pdf")
             self.send_header("Content-Length", str(len(pdf)))
             self.end_headers()
             self.wfile.write(pdf)
             return None
-        from smallquery_spark.sinks.render import render_html
-
-        return self._reply(render_html(df, limit=limit, title="query result"))
+        return self._reply(render_html(cols, rows, title="query result"))
 
 
 def _j(v):

@@ -1,20 +1,19 @@
 """Result-rendering sinks (SURVEY.md §2 B8; reference A7).
 
 The reference renders query results to HTML via Handlebars templates
-(reference src/template.rs:24-46, templates/page.hbs). Here the result
-of any DataFrame is rendered driver-side after an explicit ``limit`` —
-rendering is a presentation concern and must never pull an unbounded
-result set to the driver.
-
-Chart/PDF rendering (reference README.md:7) is gated behind optional
-imports: matplotlib isn't guaranteed in the runtime image.
+(reference src/template.rs:24-46, templates/page.hbs). Here every sink
+renders rows the caller has already collected — column names plus a
+sequence of row tuples, normally ``df.limit(n).collect()`` — so rendering
+never runs a Spark job and a result is collected once whatever the
+format. The caller's explicit limit keeps an unbounded result set off the
+driver. Chart (SVG) and PDF rendering (reference README.md:7) need no
+dependencies.
 """
 
 from __future__ import annotations
 
 import html as _html
-
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
 
 # Page layout mirrors the reference's Handlebars structure
 # (templates/page.hbs:1-14): inline `title` / `content` partials, the
@@ -44,16 +43,14 @@ def _sectioned(h1: str, logs: str, result_html: str) -> str:
     )
 
 
-def render_html(df: DataFrame, limit: int = 100, title: str = "result") -> str:
-    """Render the first ``limit`` rows as an HTML table inside the
-    sectioned page layout (reference templates/found_file.hbs)."""
-    rows = df.limit(limit).collect()
-    cols = df.columns
+def render_html(
+    cols: Sequence[str], rows: Sequence[Sequence], title: str = "result"
+) -> str:
+    """Render ``rows`` as an HTML table inside the sectioned page layout
+    (reference templates/found_file.hbs)."""
     head = "".join(f"<th>{_html.escape(c)}</th>" for c in cols)
     body_rows = "".join(
-        "<tr>"
-        + "".join(f"<td>{_html.escape(str(r[c]))}</td>" for c in cols)
-        + "</tr>"
+        "<tr>" + "".join(f"<td>{_html.escape(str(v))}</td>" for v in r) + "</tr>"
         for r in rows
     )
     table = f"<table><thead><tr>{head}</tr></thead><tbody>{body_rows}</tbody></table>"
@@ -89,35 +86,14 @@ def render_listing(name: str, items: list[str]) -> str:
     )
 
 
-def render_chart_png(df: DataFrame, x: str, y: str, limit: int = 1000) -> bytes:
-    """Bar chart of x vs y → PNG bytes. Optional dependency; raises a
-    clear error when matplotlib is absent (not in the v1 image)."""
-    try:
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import io
-
-        import matplotlib.pyplot as plt
-    except ImportError as e:  # pragma: no cover - env without matplotlib
-        raise NotImplementedError(
-            "chart rendering requires matplotlib, which is not installed"
-        ) from e
-    pdf = df.select(x, y).limit(limit).toPandas()
-    fig, ax = plt.subplots()
-    ax.bar(pdf[x].astype(str), pdf[y])
-    ax.set_xlabel(x)
-    ax.set_ylabel(y)
-    buf = io.BytesIO()
-    fig.savefig(buf, format="png")
-    plt.close(fig)
-    return buf.getvalue()
-
-
 def render_chart_svg(
-    df: DataFrame, x: str, y: str, limit: int = 50, width: int = 640, height: int = 360
+    cols: Sequence[str],
+    rows: Sequence[Sequence],
+    width: int = 640,
+    height: int = 360,
 ) -> str:
-    """Bar chart of x vs y → standalone SVG (no dependencies).
+    """Bar chart of the first column (labels) vs the second (values) →
+    standalone SVG (no dependencies); one bar per row.
 
     Realizes the reference's declared charting purpose
     (/root/reference/README.md:7 "Quickly creating charts … from CSV
@@ -125,11 +101,11 @@ def render_chart_svg(
     always a small aggregate by the time it is drawn — the heavy work
     stayed distributed.
     """
-    rows = df.select(x, y).limit(limit).collect()
     if not rows:
         return f'<svg xmlns="http://www.w3.org/2000/svg" width="{width}" height="{height}"/>'
-    vals = [float(r[y]) if r[y] is not None else 0.0 for r in rows]
-    labels = [str(r[x]) for r in rows]
+    x, y = cols[0], cols[1]
+    vals = [float(r[1]) if r[1] is not None else 0.0 for r in rows]
+    labels = [str(r[0]) for r in rows]
     vmax = max(max(vals), 0.0) or 1.0
     pad, axis_h = 40, 20
     plot_w, plot_h = width - 2 * pad, height - 2 * pad - axis_h
@@ -158,19 +134,18 @@ def render_chart_svg(
     return "".join(parts)
 
 
-def render_pdf(df: DataFrame, title: str = "result", limit: int = 40) -> bytes:
+def render_pdf(
+    cols: Sequence[str], rows: Sequence[Sequence], title: str = "result"
+) -> bytes:
     """Result table → minimal single-page PDF (no dependencies).
 
-    Hand-assembled PDF 1.4: one page, Helvetica, one text line per row.
+    Hand-assembled PDF 1.4: one page, Helvetica, one text line per row
+    (the page holds the header and about 60 rows; the rest are cut).
     Completes the reference's "charts and PDFs" purpose
     (/root/reference/README.md:7) for result export; rendering is
     driver-side over an already-small collected result.
     """
-    rows = df.limit(limit).collect()
-    cols = df.columns
-    lines = [" | ".join(cols)] + [
-        " | ".join(str(r[c]) for c in cols) for r in rows
-    ]
+    lines = [" | ".join(cols)] + [" | ".join(str(v) for v in r) for r in rows]
 
     def esc(s: str) -> str:
         return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")

@@ -1,8 +1,3 @@
-from smallquery_spark.sources.readers import (
-    TABLES,
-    load_dir,
-    read_any,
-    register_views,
-)
+from smallquery_spark.sources.readers import TABLES, read_any
 
-__all__ = ["TABLES", "load_dir", "read_any", "register_views"]
+__all__ = ["TABLES", "read_any"]

@@ -24,7 +24,6 @@ partition (header files don't split safely without an index).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -221,9 +220,10 @@ class GitWorkspaceWriter(DataSourceWriter):
     DataFrame as a NEW VERSION of the table in the workspace repo.
 
     Executors serialize their partitions into commit messages; the
-    driver-side commit() assembles them, writes the table CSV into the
-    worktree and creates the git commit (optionally tagged via
-    option("tag", ...)). Result tables at this surface are small
+    driver-side commit() assembles them and commits the table CSV through
+    the catalog's one git writer (``catalog.workspace.commit_table``,
+    optionally tagged via option("tag", ...)): unchanged content makes no
+    new commit. Result tables at this surface are small
     (post-aggregation); bulk data belongs in parquet outside git.
     """
 
@@ -242,33 +242,16 @@ class GitWorkspaceWriter(DataSourceWriter):
 
     def commit(self, messages) -> None:
         import pyarrow as pa
-        import pyarrow.csv as pacsv
 
         from smallquery_spark.catalog import VersionedCatalog
-        from smallquery_spark.catalog.workspace import _git, sanitize_path
+        from smallquery_spark.catalog.workspace import commit_table
 
         ws = VersionedCatalog(self.mount).workspace(self.workspace)
         names = [f.name for f in self.schema.fields]
         rows = [r for m in messages for r in m.rows]
         cols = list(zip(*rows)) if rows else [[] for _ in names]
         tbl = pa.table({n: list(c) for n, c in zip(names, cols)})
-        rel = sanitize_path(f"{self.table}.csv")
-        path = os.path.join(ws.repo_dir, rel)
-        pacsv.write_csv(tbl, path)
-        # stage ONLY the written table (never sweep stray worktree files
-        # into the data version — ADVICE r1); --allow-empty keeps the
-        # "every write creates a version" contract when content repeats.
-        _git(ws.repo_dir, "add", "--", rel)
-        # commit() runs in a data-source Python worker whose env has no
-        # git identity — pass one explicitly.
-        _git(
-            ws.repo_dir,
-            "-c", "user.name=smallquery",
-            "-c", "user.email=engine@smallquery",
-            "commit", "--allow-empty", "-m", self.message,
-        )
-        if self.tag:
-            _git(ws.repo_dir, "tag", self.tag)
+        commit_table(ws, tbl, self.table, self.message, self.tag)
 
     def abort(self, messages) -> None:
         pass

@@ -56,20 +56,3 @@ def read_any(
             options.setdefault("inferSchema", True)
     return reader.options(**options).format(fmt).load(path)
 
-
-def load_dir(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table present in ``sf_dir`` as a DataFrame."""
-    out: dict[str, DataFrame] = {}
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            out[t] = spark.read.parquet(p)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each fixture table as a temp view for ``spark.sql``."""
-    dfs = load_dir(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

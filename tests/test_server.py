@@ -177,3 +177,61 @@ def test_concurrent_queries_different_versions(server):
     with concurrent.futures.ThreadPoolExecutor(max_workers=8) as ex:
         results = list(ex.map(lambda a: hit(*a), jobs))
     assert all(results)
+
+
+def test_client_mistakes_are_400(server):
+    """A bad ``limit`` or SQL that does not parse or analyze is the
+    client's mistake: 400 with the error page, not a 500."""
+    base = f"{server}/workspaces/demo/query?format=json&sql="
+    for limit in ("ten", "-1", "1.5", str(2**31)):
+        status, body = _get(f"{base}SELECT+k+FROM+nums&limit={limit}")
+        assert status == 400 and "limit" in body, limit
+    status, body = _get(f"{base}SELECT+k+FROM+nums&limit=2")
+    assert status == 200 and len(json.loads(body)) == 2
+    status, body = _get(f"{base}SELEC+k+FRM+nums")  # parse error
+    assert status == 400 and "<h1>Error</h1>" in body
+    status, body = _get(f"{base}SELECT+no_such_col+FROM+nums")  # analysis
+    assert status == 400 and "no_such_col" in body
+
+
+def test_each_reply_runs_its_query_once(server, spark, monkeypatch):
+    """Every /query format renders from one collect of ``df.limit(n)``."""
+    df_cls = type(spark.range(1))
+    calls = []
+    collect = df_cls.collect
+
+    def counting(self):
+        calls.append(1)
+        return collect(self)
+
+    monkeypatch.setattr(df_cls, "collect", counting)
+    for fmt in ("json", "csv", "html", "svg", "pdf"):
+        calls.clear()
+        with urllib.request.urlopen(
+            f"{server}/workspaces/demo/query?sql=SELECT+k,+v+FROM+nums&format={fmt}"
+        ) as r:
+            assert r.status == 200
+            body = r.read()
+        assert len(calls) == 1, fmt
+        assert b"40" in body, fmt
+
+
+def test_browse_resolves_version_once(server, monkeypatch):
+    """A file read and a listing at a tag each resolve the version once."""
+    from smallquery_spark.catalog.workspace import Workspace
+
+    calls = []
+    resolve = Workspace.resolve_version
+
+    def counting(self, version="latest"):
+        calls.append(version)
+        return resolve(self, version)
+
+    monkeypatch.setattr(Workspace, "resolve_version", counting)
+    status, body = _get(f"{server}/workspaces/demo?path=nums.csv&version=v1")
+    assert status == 200 and "3,30" in body and "4,40" not in body
+    assert calls == ["v1"]
+    calls.clear()
+    status, body = _get(f"{server}/workspaces/demo?version=v1")
+    assert status == 200 and "<li>nums.csv</li>" in body
+    assert calls == ["v1"]

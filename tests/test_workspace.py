@@ -261,3 +261,68 @@ def test_gitws_stream_arity_without_tagcommit(mount, spark):
     replay = list(tagged.readBetweenOffsets({"n": 0}, {"n": 1}))
     assert len(replay) == 2
     assert len(replay) < len(trows)
+
+
+@pytest.fixture(scope="module")
+def lookup_mount(tmp_path_factory, spark):
+    """One snapshot holding ``t.csv`` (3 rows) next to a Spark-written
+    ``t.parquet/`` directory (5 rows), a ``facts.parquet/`` directory with
+    no CSV, and a ``docs/`` directory that is not a table."""
+    mount = tmp_path_factory.mktemp("lookup")
+    repo = mount / "ws"
+    repo.mkdir()
+    _git(repo, "init", "-b", "main")
+    (repo / "t.csv").write_text("id\n1\n2\n3\n")
+    spark.range(5).write.parquet(str(repo / "t.parquet"))
+    spark.range(7).write.parquet(str(repo / "facts.parquet"))
+    (repo / "docs").mkdir()
+    (repo / "docs" / "README.md").write_text("not a table\n")
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-m", "v1")
+    _git(repo, "tag", "v1")
+    return str(mount)
+
+
+def test_one_lookup_rule_for_every_spelling(lookup_mount, spark):
+    """Plain name, name@ver, VERSION AS OF and Engine.table all resolve
+    ``t`` to the same snapshot file (parquet before csv); a Spark-written
+    directory is a table by plain name; ``docs/`` is not a table."""
+    from smallquery_spark.engine import Engine
+
+    eng = Engine(spark, workspace_mount=lookup_mount)
+
+    def n(sql):
+        return eng.sql(sql, workspace="ws").collect()[0]["n"]
+
+    assert n("SELECT count(*) AS n FROM t") == 5
+    assert n("SELECT count(*) AS n FROM t@latest") == 5
+    assert n("SELECT count(*) AS n FROM t VERSION AS OF 'v1'") == 5
+    assert eng.table("t", workspace="ws").count() == 5
+    assert n("SELECT count(*) AS n FROM facts") == 7
+    # `docs` used only as an alias: nothing is registered under it
+    assert n("SELECT count(docs.id) AS n FROM t docs") == 5
+    ws = VersionedCatalog(lookup_mount).workspace("ws")
+    assert ws.table_path("t").endswith("t.parquet")
+    with pytest.raises(PathNotFound):
+        ws.table_path("docs")
+
+
+def test_gitws_write_unchanged_content_makes_no_commit(mount, spark):
+    """The gitws sink shares write_table_version's git writer: writing
+    the same rows again returns the existing commit and still tags it."""
+    from smallquery_spark.sources.gitws_datasource import GitWorkspaceDataSource
+
+    spark.dataSource.register(GitWorkspaceDataSource)
+    ws = VersionedCatalog(mount).workspace("sales")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string").coalesce(1)
+
+    def write(tag):
+        (
+            df.write.format("gitws").mode("append")
+            .option("mount", mount).option("workspace", "sales")
+            .option("table", "same").option("tag", tag).save()
+        )
+        return ws.resolve_version(tag)
+
+    first = write("same1")
+    assert write("same2") == first == ws.resolve_version()
