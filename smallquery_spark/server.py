@@ -15,7 +15,7 @@ Routes mirror the reference server (reference src/http_server.rs:22-37):
       → file contents or recursive directory listing rendered to HTML
         (http_server.rs:100-290), defaults ``version=latest``,
         ``path=""`` (http_server.rs:106-115)
-- ``GET /workspaces/<name>/query?sql=...&version=...&format=html|json|csv``
+- ``GET /workspaces/<name>/query?sql=...&version=...&format=html|json|csv|svg|pdf``
       → NEW: run SQL over the workspace's tables at that version through
         the Spark engine (the Tier B surface the reference README
         promises, README.md:3-8).
@@ -52,6 +52,9 @@ from smallquery_spark.sinks.render import (
     render_listing,
     render_pdf,
 )
+
+# /query reply formats
+_QUERY_FORMATS = ("html", "json", "csv", "svg", "pdf")
 
 _PAGE = """<!DOCTYPE html>
 <html><head><title>{title}</title></head>
@@ -145,6 +148,13 @@ class _Handler(BaseHTTPRequestHandler):
                 status=400,
             )
         fmt = q.get("format", "html")
+        if fmt not in _QUERY_FORMATS:
+            return self._reply(
+                render_error(
+                    f"unknown format {fmt!r}; accepted: {', '.join(_QUERY_FORMATS)}"
+                ),
+                status=400,
+            )
         try:
             df = self.engine.sql(sql, workspace=name, version=version)
         except AnalysisException as e:

@@ -18,12 +18,15 @@ materializes the snapshot, and serves the table's rows.
 Execution shape: version resolution happens DRIVER-side at planning
 (schema() / partitions()); executors receive only (snapshot file path,
 row-group slice) partitions and read with pyarrow — so reads scale out
-per row-group like a native parquet scan. CSV snapshots read as one
+per row-group like a native parquet scan. Every table form
+``find_table`` returns is read: a parquet, CSV or JSON-lines file, or a
+Spark-written directory of them. Each CSV or JSON file reads as one
 partition (header files don't split safely without an index).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -41,7 +44,25 @@ def _tagcommit(options) -> bool:
     return str(options.get("tagcommit", "")).lower() == "true"
 
 
+# pyarrow dataset format of each table extension (catalog TABLE_EXTENSIONS)
+_ARROW_FORMATS = {
+    ".parquet": "parquet", ".csv": "csv", ".jsonl": "json", ".json": "json",
+}
+
+
+def _dataset(path: str, schema=None):
+    """pyarrow dataset over a table path: a single file, or a Spark-written
+    directory whose part files it lists (skipping ``_SUCCESS`` and
+    ``.crc`` files)."""
+    import pyarrow.dataset as ds
+
+    fmt = _ARROW_FORMATS[os.path.splitext(path)[1]]
+    return ds.dataset(path, format=fmt, schema=schema)
+
+
 class _Slice(InputPartition):
+    """One file of a table, or one row group of a parquet file."""
+
     def __init__(self, path: str, row_group: int | None, commit: str | None = None):
         self.path = path
         self.row_group = row_group
@@ -49,7 +70,7 @@ class _Slice(InputPartition):
 
 
 def _resolve(options) -> str:
-    """Driver-side: (mount, workspace, table, version) → concrete file."""
+    """(mount, workspace, table, version) → table path, at planning time."""
     from smallquery_spark.catalog import VersionedCatalog
 
     mount = options.get("mount")
@@ -66,6 +87,9 @@ class GitWorkspaceReader(DataSourceReader):
     def __init__(self, options, schema):
         self.path = _resolve(options)
         self._schema = schema
+        # every file reads with the table's schema (the part files of one
+        # CSV directory could otherwise infer different types)
+        self._arrow_schema = _dataset(self.path).schema
         self._commit = None
         if _tagcommit(options):
             from smallquery_spark.catalog import VersionedCatalog
@@ -76,26 +100,25 @@ class GitWorkspaceReader(DataSourceReader):
             self._commit = ws.resolve_version(options.get("version") or "latest")
 
     def partitions(self):
-        if self.path.endswith(".parquet"):
-            import pyarrow.parquet as pq
+        import pyarrow.dataset as ds
 
-            n = pq.ParquetFile(self.path).num_row_groups
-            return [_Slice(self.path, g, self._commit) for g in range(max(n, 1))]
-        return [_Slice(self.path, None, self._commit)]
+        slices = []
+        for frag in _dataset(self.path, self._arrow_schema).get_fragments():
+            if isinstance(frag, ds.ParquetFileFragment):
+                groups = range(frag.metadata.num_row_groups)
+                slices += [_Slice(frag.path, g, self._commit) for g in groups]
+            else:
+                slices.append(_Slice(frag.path, None, self._commit))
+        return slices or [_Slice(self.path, None, self._commit)]
 
     def read(self, partition: _Slice) -> Iterator:
         """Executor-side: yield arrow batches for one slice."""
-        if partition.path.endswith(".parquet"):
+        if partition.row_group is not None:
             import pyarrow.parquet as pq
 
-            pf = pq.ParquetFile(partition.path)
-            if pf.num_row_groups == 0:
-                return
-            tbl = pf.read_row_group(partition.row_group)
+            tbl = pq.ParquetFile(partition.path).read_row_group(partition.row_group)
         else:
-            import pyarrow.csv as pacsv
-
-            tbl = pacsv.read_csv(partition.path)
+            tbl = _dataset(partition.path, self._arrow_schema).to_table()
         if partition.commit is not None:
             import pyarrow as pa
 
@@ -113,15 +136,7 @@ class GitWorkspaceDataSource(DataSource):
     def schema(self):
         from pyspark.sql.types import StringType, StructField, StructType
 
-        path = _resolve(self.options)
-        if path.endswith(".parquet"):
-            import pyarrow.parquet as pq
-
-            base = from_arrow_schema(pq.ParquetFile(path).schema_arrow)
-        else:
-            import pyarrow.csv as pacsv
-
-            base = from_arrow_schema(pacsv.read_csv(path).schema)
+        base = from_arrow_schema(_dataset(_resolve(self.options)).schema)
         if _tagcommit(self.options):
             return StructType(
                 list(base.fields) + [StructField("commit", StringType())]
@@ -185,15 +200,7 @@ class GitWorkspaceStreamReader(SimpleDataSourceStreamReader):
                 path = ws.table_path(self.table, commit)
             except Exception:
                 continue  # table absent at this commit
-            if path.endswith(".parquet"):
-                import pyarrow.parquet as pq
-
-                tbl = pq.read_table(path)
-            else:
-                import pyarrow.csv as pacsv
-
-                tbl = pacsv.read_csv(path)
-            for rec in tbl.to_pylist():
+            for rec in _dataset(path).to_table().to_pylist():
                 row = tuple(rec.values())
                 rows.append(row + (commit,) if self.tagcommit else row)
         return rows

@@ -18,6 +18,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smallquery_spark.sources import read_any
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File stream source over the events fixture (B50).
@@ -62,7 +64,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise FileNotFoundError(
             f"staged stream source is a dangling link: {link} -> {path}"
         )
-    schema = spark.read.parquet(path).schema
+    schema = read_any(spark, path).schema
     sdf = spark.readStream.schema(schema).format("parquet").load(stage)
     return normalize_events_ts(sdf)
 

@@ -180,8 +180,9 @@ def test_concurrent_queries_different_versions(server):
 
 
 def test_client_mistakes_are_400(server):
-    """A bad ``limit`` or SQL that does not parse or analyze is the
-    client's mistake: 400 with the error page, not a 500."""
+    """A bad ``limit``, an unknown ``format`` or SQL that does not parse
+    or analyze is the client's mistake: 400 with the error page, not a
+    500."""
     base = f"{server}/workspaces/demo/query?format=json&sql="
     for limit in ("ten", "-1", "1.5", str(2**31)):
         status, body = _get(f"{base}SELECT+k+FROM+nums&limit={limit}")
@@ -192,6 +193,10 @@ def test_client_mistakes_are_400(server):
     assert status == 400 and "<h1>Error</h1>" in body
     status, body = _get(f"{base}SELECT+no_such_col+FROM+nums")  # analysis
     assert status == 400 and "no_such_col" in body
+    status, body = _get(
+        f"{server}/workspaces/demo/query?sql=SELECT+k+FROM+nums&format=xml"
+    )
+    assert status == 400 and "xml" in body and "html, json, csv, svg, pdf" in body
 
 
 def test_each_reply_runs_its_query_once(server, spark, monkeypatch):

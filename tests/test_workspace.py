@@ -326,3 +326,55 @@ def test_gitws_write_unchanged_content_makes_no_commit(mount, spark):
 
     first = write("same1")
     assert write("same2") == first == ws.resolve_version()
+
+
+_FORM_ROWS = {(1, "a"), (2, "b")}
+
+
+@pytest.fixture(scope="module")
+def forms_mount(tmp_path_factory, spark):
+    """The same two rows in every table form ``find_table`` returns: a
+    parquet, CSV, JSON-lines or JSON file, or a Spark-written directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mount = tmp_path_factory.mktemp("forms")
+    repo = mount / "ws"
+    repo.mkdir()
+    _git(repo, "init", "-b", "main")
+    pq.write_table(
+        pa.table({"k": [1, 2], "s": ["a", "b"]}), str(repo / "pfile.parquet")
+    )
+    (repo / "cfile.csv").write_text("k,s\n1,a\n2,b\n")
+    lines = '{"k": 1, "s": "a"}\n{"k": 2, "s": "b"}\n'
+    (repo / "lfile.jsonl").write_text(lines)
+    (repo / "jfile.json").write_text(lines)
+    df = spark.createDataFrame(sorted(_FORM_ROWS), "k long, s string").repartition(2)
+    df.write.parquet(str(repo / "pdir.parquet"))
+    df.write.option("header", True).csv(str(repo / "cdir.csv"))
+    df.write.json(str(repo / "jdir.json"))
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-m", "v1")
+    return str(mount)
+
+
+@pytest.mark.parametrize(
+    "table", ["pfile", "pdir", "cfile", "cdir", "lfile", "jfile", "jdir"]
+)
+def test_gitws_reads_every_table_form(forms_mount, spark, table):
+    """gitws batch and stream reads return the rows Engine.table reads."""
+    from smallquery_spark.engine import Engine
+    from smallquery_spark.sources.gitws_datasource import (
+        GitWorkspaceDataSource,
+        GitWorkspaceStreamReader,
+    )
+
+    opts = {"mount": forms_mount, "workspace": "ws", "table": table}
+    spark.dataSource.register(GitWorkspaceDataSource)
+    batch = spark.read.format("gitws").options(**opts).load().collect()
+    assert {(r["k"], r["s"]) for r in batch} == _FORM_ROWS
+    assert len(batch) == 2
+    stream = list(GitWorkspaceStreamReader(opts, None).read({"n": 0})[0])
+    assert sorted(stream) == sorted(_FORM_ROWS)
+    native = Engine(spark, workspace_mount=forms_mount).table(table, workspace="ws")
+    assert {(r["k"], r["s"]) for r in native.collect()} == _FORM_ROWS
