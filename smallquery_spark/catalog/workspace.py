@@ -283,6 +283,9 @@ class VersionedCatalog:
     def __init__(self, mount: str, cache_dir: str | None = None):
         self.mount = mount
         self.cache_dir = cache_dir or os.path.join(mount, ".snapshots")
+        # parquet twins of snapshot CSV/JSON tables (readers.read_any):
+        # in the cache, outside every per-commit snapshot dir
+        self.twin_dir = os.path.join(self.cache_dir, ".twins")
         self._workspaces: dict[str, Workspace] = {}
         self._lock = threading.Lock()
 
@@ -328,20 +331,18 @@ def write_table_version(
     The result is collected through Arrow and committed as the table's
     CSV (:func:`commit_table`). Result tables at the IDE surface are
     post-aggregation and small; bulk data stays in parquet outside the
-    git layer — ``max_rows`` enforces that contract (fail fast BEFORE
-    collecting, so this driver-side path can never OOM on an
-    unaggregated fact table — VERDICT r1 item 6)."""
+    git layer — ``max_rows`` enforces that contract: one collect of at
+    most ``max_rows + 1`` rows, so this driver-side path can never OOM
+    on an unaggregated fact table (VERDICT r1 item 6)."""
     import pyarrow as pa
 
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
+    tbl = pa.Table.from_batches(df.limit(max_rows + 1)._collect_as_arrow())
+    if tbl.num_rows > max_rows:
         raise ValueError(
             f"write_table_version is a small-result path (> {max_rows} rows);"
             " write bulk data to parquet with df.write instead"
         )
-    return commit_table(
-        ws, pa.Table.from_batches(df._collect_as_arrow()), table, message, tag
-    )
+    return commit_table(ws, tbl, table, message, tag)
 
 
 def commit_table(

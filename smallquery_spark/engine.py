@@ -11,7 +11,19 @@ Entry points mirroring the reference's lifecycle (SURVEY.md §3.4):
 
 Every spelling of a table name (plain ``name``, ``name@ver``,
 ``name VERSION AS OF 'ver'``, ``engine.table``) resolves through the one
-lookup rule of ``catalog.workspace.find_table``.
+lookup rule of ``catalog.workspace.find_table`` and is read by the one
+reader ``Engine._read``.
+
+Parquet twins: a snapshot table stored as a CSV, JSON-lines or JSON file
+is parsed once per (commit, table file, reader options, inference confs)
+and written as a parquet copy, its twin, under the catalog's
+``twin_dir`` (``<snapshot cache>/.twins``, outside every per-commit
+snapshot dir, so browse listings do not show it). Every read of that
+table, including the first, scans the twin with the source's cached
+schema. A twin is not a result cache: it is a decoded copy of an
+immutable input, content-addressed like the snapshot itself, and no
+rows are held in memory. Parquet files, Spark-written directories and
+paths outside a snapshot are read as they are.
 
 Version resolution happens driver-side *before* planning (SURVEY.md
 §4.3): Spark never sees the git layer, only an immutable snapshot
@@ -87,7 +99,8 @@ def _mask_literals(sql: str) -> str:
 
 
 class Engine:
-    """A SparkSession bound to an optional workspace mount."""
+    """A SparkSession bound to an optional workspace mount. Workspace
+    tables are read through parquet twins (module docstring)."""
 
     def __init__(self, spark: SparkSession, workspace_mount: str | None = None):
         self.spark = spark
@@ -121,9 +134,13 @@ class Engine:
         """
         if workspace is not None:
             ws = self._require_catalog().workspace(workspace)
-            path = ws.table_path(name, version)
-            return read_any(self.spark, path)
+            return self._read(ws.table_path(name, version))
         return read_any(self.spark, name)
+
+    def _read(self, path: str) -> DataFrame:
+        """The one reader of a snapshot table, behind every spelling: a
+        CSV/JSON file is served from its parquet twin (``read_any``)."""
+        return read_any(self.spark, path, twin_dir=self.catalog.twin_dir)
 
     # -- SQL entry ---------------------------------------------------------
 
@@ -159,7 +176,7 @@ class Engine:
                 for name in referenced:
                     path = find_table(snap, name)
                     if path is not None:
-                        read_any(self.spark, path).createOrReplaceTempView(name)
+                        self._read(path).createOrReplaceTempView(name)
             return self.spark.sql(query)
 
     def _rewrite_versioned_refs(self, query: str, ws) -> str:
@@ -186,7 +203,7 @@ class Engine:
                 except EngineError:
                     continue  # not a versioned table reference — leave as-is
                 view = f"{tbl}__{re.sub(r'[^A-Za-z0-9_]', '_', ver)}"
-                read_any(self.spark, path).createOrReplaceTempView(view)
+                self._read(path).createOrReplaceTempView(view)
                 repls.append((m.start(), m.end(), view))
         out, last = [], 0
         for start, end, view in sorted(repls):

@@ -51,13 +51,32 @@ _ARROW_FORMATS = {
 
 
 def _dataset(path: str, schema=None):
-    """pyarrow dataset over a table path: a single file, or a Spark-written
-    directory whose part files it lists (skipping ``_SUCCESS`` and
-    ``.crc`` files)."""
+    """pyarrow dataset over a table path: a single file, or the part files
+    of a Spark-written directory (skipping ``_SUCCESS``, ``.crc`` and
+    zero-byte parts, which hold no rows and no schema). Without
+    ``schema``, the schema is unified over every file, so a part file
+    with no rows (its columns typed null) never decides a column's type."""
+    import pyarrow as pa
     import pyarrow.dataset as ds
 
     fmt = _ARROW_FORMATS[os.path.splitext(path)[1]]
-    return ds.dataset(path, format=fmt, schema=schema)
+    files = [path]
+    if os.path.isdir(path):
+        files = []
+        for d, dirs, names in os.walk(path):
+            dirs[:] = sorted(x for x in dirs if not x.startswith((".", "_")))
+            files += [
+                os.path.join(d, f) for f in sorted(names)
+                if not f.startswith((".", "_")) and os.path.getsize(os.path.join(d, f))
+            ]
+    dataset = ds.dataset(files, format=fmt, schema=schema)
+    if schema is None and len(files) > 1:
+        schema = pa.unify_schemas(
+            [f.physical_schema for f in dataset.get_fragments()],
+            promote_options="permissive",
+        )
+        dataset = ds.dataset(files, format=fmt, schema=schema)
+    return dataset
 
 
 class _Slice(InputPartition):

@@ -9,7 +9,10 @@ reference README.md:7).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -54,6 +57,7 @@ def read_any(
     path: str,
     fmt: str | None = None,
     schema: T.StructType | str | None = None,
+    twin_dir: str | None = None,
     **options,
 ) -> DataFrame:
     """Read a dataset by path, inferring format from the extension.
@@ -69,6 +73,12 @@ def read_any(
     immutable workspace snapshot) launches no header, inference or
     footer-merge job. Results are never cached. Directories are always
     inferred afresh.
+
+    ``twin_dir`` is for immutable files only (a table in a workspace
+    snapshot): a CSV, JSON-lines or JSON file is parsed once per cache
+    key above into a parquet copy, its *twin*, under ``twin_dir``, and
+    every read is served from the twin with the source's cached schema,
+    so a repeated read decodes no text and launches no footer job.
     """
     if fmt is None:
         ext = os.path.splitext(path)[1].lower().lstrip(".")
@@ -93,8 +103,37 @@ def read_any(
         tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
     )
     hit = _SCHEMA_CACHE.get(real)
-    if hit is not None and hit[0] == key:
-        return reader.schema(hit[1]).load(path)
-    df = reader.load(path)
-    _SCHEMA_CACHE[real] = (key, df.schema)
-    return df
+    cached = hit[1] if hit is not None and hit[0] == key else None
+    twin = None
+    if twin_dir is not None and fmt in ("csv", "json"):
+        digest = hashlib.sha1(repr((real, key)).encode()).hexdigest()
+        twin = os.path.join(twin_dir, f"{digest}.parquet")
+        if cached is not None and os.path.isdir(twin):
+            return spark.read.schema(cached).parquet(twin)
+    if cached is not None:
+        df = reader.schema(cached).load(path)
+    else:
+        df = reader.load(path)
+        _SCHEMA_CACHE[real] = (key, df.schema)
+    if twin is None or not df.schema.fields:  # parquet cannot hold no columns
+        return df
+    if not os.path.isdir(twin):
+        _publish(df, twin)
+    return spark.read.schema(df.schema).parquet(twin)
+
+
+def _publish(df: DataFrame, dest: str) -> None:
+    """Write ``df`` as parquet directory ``dest`` via a private temporary
+    directory and an atomic rename, so readers see ``dest`` absent or
+    complete; a writer that loses the race discards its copy (the twin is
+    content-addressed, so both copies hold the same rows)."""
+    tmp = f"{dest}.tmp.{os.getpid()}.{threading.get_ident()}"
+    try:
+        df.write.parquet(tmp)
+        try:
+            os.rename(tmp, dest)
+        except OSError:
+            if not os.path.isdir(dest):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

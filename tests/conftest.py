@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from smallquery_spark.session import get_session
@@ -29,3 +31,16 @@ def duck():
             con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM read_parquet('{p}')")
     yield con
     con.close()
+
+
+def spark_jobs(spark, fn) -> tuple[int, object]:
+    """(Spark jobs launched by ``fn()`` on this thread, its result)."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out

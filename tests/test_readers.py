@@ -5,7 +5,6 @@ from __future__ import annotations
 import os
 import sys
 import threading
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -13,19 +12,7 @@ import pytest
 from pyspark.sql import types as T
 
 from smallquery_spark.sources import read_any
-
-
-def _jobs(spark, fn) -> tuple[int, object]:
-    """(Spark jobs launched by ``fn()`` on this thread, its result)."""
-    sc = spark.sparkContext
-    group = f"test-readers-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+from tests.conftest import spark_jobs as _jobs
 
 
 def _csv(tmp_path, text: str) -> str:

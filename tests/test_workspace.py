@@ -236,6 +236,24 @@ def test_write_table_version_guard_and_noop(mount, spark, tmp_path):
         write_table_version(ws, big, "big", "too big", max_rows=10)
 
 
+def test_write_table_version_is_one_collect(mount, spark):
+    """A write launches exactly the jobs of one bounded Arrow collect, and
+    the row cap still fails one row over the limit."""
+    from smallquery_spark.catalog.workspace import write_table_version
+    from tests.conftest import spark_jobs
+
+    ws = VersionedCatalog(mount).workspace("sales")
+    df = spark.range(0, 20).selectExpr("id", "id * 2 AS v")
+    collect, _ = spark_jobs(spark, lambda: df.limit(21)._collect_as_arrow())
+    write, commit = spark_jobs(
+        spark, lambda: write_table_version(ws, df, "onecollect", "w", max_rows=20)
+    )
+    assert write == collect >= 1
+    assert ws.read_file("onecollect.csv", commit).count("\n") == 21
+    with pytest.raises(ValueError, match="small-result"):
+        write_table_version(ws, df, "onecollect", "too big", max_rows=19)
+
+
 def test_gitws_stream_arity_without_tagcommit(mount, spark):
     """ADVICE r1 (gitws): plain readStream (no tagcommit) must emit rows
     matching schema() — no extra commit field; with tagcommit=true the
@@ -353,13 +371,22 @@ def forms_mount(tmp_path_factory, spark):
     df.write.parquet(str(repo / "pdir.parquet"))
     df.write.option("header", True).csv(str(repo / "cdir.csv"))
     df.write.json(str(repo / "jdir.json"))
+    # directories whose first part file is empty, as a partitioner leaves
+    # them when the first task gets no rows
+    for name, part in (("cempty.csv", "k,s\n1,a\n2,b\n"), ("jempty.json", lines)):
+        ext = os.path.splitext(name)[1]
+        (repo / name).mkdir()
+        (repo / name / f"part-00000{ext}").write_text("")
+        (repo / name / f"part-00001{ext}").write_text(part)
+        (repo / name / "_SUCCESS").write_text("")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-m", "v1")
     return str(mount)
 
 
 @pytest.mark.parametrize(
-    "table", ["pfile", "pdir", "cfile", "cdir", "lfile", "jfile", "jdir"]
+    "table",
+    ["pfile", "pdir", "cfile", "cdir", "lfile", "jfile", "jdir", "cempty", "jempty"],
 )
 def test_gitws_reads_every_table_form(forms_mount, spark, table):
     """gitws batch and stream reads return the rows Engine.table reads."""
