@@ -2,8 +2,8 @@
 
 Entry points mirroring the reference's lifecycle (SURVEY.md §3.4):
 
-1. ``engine.sql(query, workspace=..., version=...)`` — resolve versioned
-   tables, register temp views, hand the query to Catalyst.
+1. ``engine.sql(query, workspace=..., version=...)`` — bind the query's
+   tables to one workspace snapshot, hand the query to Catalyst.
 2. ``engine.table(name)`` — DataFrame-builder entry; thin resolution then
    plain PySpark DataFrame.
 3. ``engine.write_table(df, name, ...)`` — commit a small result as a new
@@ -13,6 +13,18 @@ Every spelling of a table name (plain ``name``, ``name@ver``,
 ``name VERSION AS OF 'ver'``, ``engine.table``) resolves through the one
 lookup rule of ``catalog.workspace.find_table`` and is read by the one
 reader ``Engine._read``.
+
+Binding workspace SQL: one ``sqlParser().parseQuery`` (Catalyst's
+``query`` rule; anything else raises ``ParseException``) and one walk of
+the plan through ``children`` and ``innerChildren`` (CTE bodies,
+subqueries). A single-part name no CTE in scope shadows binds to a view
+of the snapshot's table (else ``TableNotFound``); ``tbl VERSION AS OF
+'ver'`` to a view ``tbl@<commit>`` spliced in over the parser's offsets.
+Any other relation (``parquet.`/path```, ``db.t``, ``IDENTIFIER(...)``,
+``TIMESTAMP AS OF``), or one view name for two tables, raises
+``UnsupportedRelation``. ``tbl@ver`` becomes ``tbl VERSION AS OF 'ver'``
+before the parse where Spark's lexer finds its ``@`` outside literals
+and comments.
 
 Parquet twins: a snapshot table stored as a CSV, JSON-lines or JSON file
 is parsed once per (commit, table file, reader options, inference confs)
@@ -32,6 +44,7 @@ directory, so all built-in optimizations apply unchanged.
 
 from __future__ import annotations
 
+import os
 import re
 import threading
 
@@ -39,63 +52,44 @@ from pyspark.sql import DataFrame, SparkSession
 
 from smallquery_spark.catalog import VersionedCatalog
 from smallquery_spark.catalog.workspace import LATEST, find_table
-from smallquery_spark.errors import EngineError
+from smallquery_spark.errors import TableNotFound, UnsupportedRelation
 from smallquery_spark.sources import read_any
 
-# `table@version` spelling inside engine.sql() queries.
-_AT_VERSION = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)@([A-Za-z0-9_./-]+)\b")
-# Delta/Iceberg-style time travel: `FROM tbl VERSION AS OF 'ref'`.
-_VERSION_AS_OF = re.compile(
-    r"\b([A-Za-z_][A-Za-z0-9_]*)\s+VERSION\s+AS\s+OF\s+'([^']+)'",
-    re.IGNORECASE,
-)
+# A `tbl@ver` ref; starting at a word boundary keeps one pass linear.
+_AT_REF = re.compile(r"\b([A-Za-z_]\w*)@([\w./-]*\w)", re.A)
 
 
-def _mask_literals(sql: str) -> str:
-    """Return ``sql`` with the CONTENTS of string literals ('' escaping),
-    double-quoted identifiers, and -- / block comments blanked out (same
-    length, so regex match positions line up with the original text).
+def _parse_query(spark: SparkSession, text: str):
+    """``(text, plan)``: ``text`` with each ``tbl@ver`` spliced in as
+    `` `tbl` VERSION AS OF 'ver' ``, parsed by Catalyst's ``query`` rule.
+    A ref's ``@`` is an ``UNRECOGNIZED`` token of Spark's own lexer, on
+    the char stream Spark's parser lexes: outside literals and comments."""
+    if _AT_REF.search(text):
+        parser = spark._jvm.org.apache.spark.sql.catalyst.parser
+        antlr = spark._jvm.org.antlr.v4.runtime
+        chars = parser.UpperCaseCharStream(antlr.CharStreams.fromString(text))
+        tokens = antlr.CommonTokenStream(parser.SqlBaseLexer(chars))
+        tokens.fill()
+        ats = tokens.getTokens(0, tokens.size() - 1, parser.SqlBaseLexer.UNRECOGNIZED)
+        at = {ats.get(i).getStartIndex() for i in range(ats.size() if ats else 0)}
+        text = _AT_REF.sub(
+            lambda m: f"`{m[1]}` VERSION AS OF '{m[2]}'" if m.end(1) in at else m[0],
+            text,
+        )
+    return text, spark._jsparkSession.sessionState().sqlParser().parseQuery(text)
 
-    Version-reference rewriting must never fire inside a literal:
-    ``WHERE email = 'bob@example.com'`` is not a versioned table ref
-    (ADVICE r1, engine.py:101)."""
-    out = list(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            for k in range(i + 1, min(j, n)):
-                out[k] = " "
-            i = j + 1
-        elif ch == '"':
-            j = sql.find('"', i + 1)
-            j = n if j == -1 else j
-            for k in range(i + 1, j):
-                out[k] = " "
-            i = j + 1
-        elif sql.startswith("--", i):
-            j = sql.find("\n", i)
-            j = n if j == -1 else j
-            for k in range(i, j):
-                out[k] = " "
-            i = j
-        elif sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            j = n if j == -1 else j + 2
-            for k in range(i, j):
-                out[k] = " "
-            i = j
-        else:
-            i += 1
-    return "".join(out)
+
+def _quote(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _single_name(relation) -> str:
+    """The one part of an ``UnresolvedRelation``'s name."""
+    parts = relation.multipartIdentifier()
+    if parts.size() != 1:
+        raise UnsupportedRelation(f"{relation.tableName()} is not a workspace table")
+    return parts.apply(0)
 
 
 class Engine:
@@ -105,12 +99,9 @@ class Engine:
     def __init__(self, spark: SparkSession, workspace_mount: str | None = None):
         self.spark = spark
         self.catalog = VersionedCatalog(workspace_mount) if workspace_mount else None
-        # Temp views are session-global; concurrent sql() calls for
-        # different workspaces/versions could clobber each other's views
-        # between registration and analysis (ADVICE r1, server.py:115).
-        # spark.sql() analyzes (and binds views) eagerly, so holding the
-        # lock through registration + analysis is sufficient — execution
-        # of the returned DataFrame runs outside the lock.
+        # Temp views are session-global: one query's view registration
+        # and analysis (spark.sql analyzes eagerly) run under this lock;
+        # execution of the returned DataFrame runs outside it.
         self._sql_lock = threading.Lock()
 
     # -- resolution --------------------------------------------------------
@@ -152,68 +143,76 @@ class Engine:
     ) -> DataFrame:
         """Run SQL against versioned workspace tables.
 
-        ``table@version`` references in the query are resolved through the
-        workspace catalog and rewritten to registered temp views before
-        Catalyst sees the text. Plain table names are looked up in the
-        snapshot at ``version`` (default ``latest`` = HEAD, reference
-        http_server.rs:106-110) when a workspace is given, or must already
-        be registered views otherwise.
+        With a workspace, ``query`` must be one query; each table it reads
+        is bound (module docstring) from the snapshot at ``version``
+        (default ``latest`` = HEAD, reference http_server.rs:106-110), or
+        at ``ver`` for ``tbl@ver`` / ``tbl VERSION AS OF 'ver'``. Raises
+        ``ParseException``, ``TableNotFound`` (no such table or CTE) or
+        ``UnsupportedRelation``. Without a workspace, names must already
+        be registered views.
         """
+        views = {}
+        if workspace is not None:
+            ws = self._require_catalog().workspace(workspace)
+            query, views = self._bind(query, ws, version)
         with self._sql_lock:
-            if workspace is not None:
-                ws = self._require_catalog().workspace(workspace)
-                query = self._rewrite_versioned_refs(query, ws)
-                # Register the un-suffixed names that are tables in the
-                # snapshot at `version` (identifier scan runs on
-                # literal-masked text so string contents can't trigger
-                # spurious registrations).
-                snap = ws.snapshot(version)
-                referenced = set(
-                    re.findall(r"\b[A-Za-z_][A-Za-z0-9_]*\b", _mask_literals(query))
-                )
-                # `"tbl"` / `` `tbl` `` quoted references count as referenced
-                referenced |= set(re.findall(r'["`]([A-Za-z_][A-Za-z0-9_]*)["`]', query))
-                for name in referenced:
-                    path = find_table(snap, name)
-                    if path is not None:
-                        self._read(path).createOrReplaceTempView(name)
+            for name, df in views.items():
+                df.createOrReplaceTempView(_quote(name))
             return self.spark.sql(query)
 
-    def _rewrite_versioned_refs(self, query: str, ws) -> str:
-        """Rewrite ``tbl@version`` / ``tbl VERSION AS OF 'ref'`` tokens to
-        registered snapshot views.
+    def _bind(self, query: str, ws, version: str) -> tuple[str, dict[str, DataFrame]]:
+        """``(text to run, {view name: table DataFrame})`` for a workspace
+        query: one parse, one walk of the plan (module docstring)."""
+        text, plan = _parse_query(self.spark, query)
+        snap = ws.snapshot(version)
+        paths: dict[str, str] = {}  # view name -> data path it reads
+        splices: list[tuple[int, int, str]] = []
 
-        Matches are accepted only when the table identifier sits OUTSIDE
-        string literals/comments, and only when the catalog actually
-        resolves (table, version) — otherwise the text is left untouched,
-        so ``'bob@example.com'`` in a literal or a non-table foo@bar word
-        never breaks a valid query (ADVICE r1)."""
-        masked = _mask_literals(query)
-        repls: list[tuple[int, int, str]] = []
-        for rx in (_VERSION_AS_OF, _AT_VERSION):
-            for m in rx.finditer(query):
-                # identifier (and, for @version, the ref) must be unmasked
-                if masked[m.start(1) : m.end(1)] != m.group(1):
-                    continue
-                if rx is _AT_VERSION and masked[m.start(2) : m.end(2)] != m.group(2):
-                    continue
-                tbl, ver = m.group(1), m.group(2)
-                try:
-                    path = ws.table_path(tbl, ver)
-                except EngineError:
-                    continue  # not a versioned table reference — leave as-is
-                view = f"{tbl}__{re.sub(r'[^A-Za-z0-9_]', '_', ver)}"
-                self._read(path).createOrReplaceTempView(view)
-                repls.append((m.start(), m.end(), view))
-        out, last = [], 0
-        for start, end, view in sorted(repls):
-            if start < last:
-                continue  # overlap (VERSION AS OF already consumed the span)
-            out.append(query[last:start])
-            out.append(view)
-            last = end
-        out.append(query[last:])
-        return "".join(out)
+        def bind(view: str, table: str, snap_at: str) -> None:
+            path = find_table(snap_at, table)
+            if path is None:
+                raise TableNotFound(table)
+            if paths.setdefault(view, path) != path:
+                raise UnsupportedRelation(f"{view} names two different tables")
+
+        def walk(node, ctes: set[str]) -> None:
+            kind = node.nodeName()
+            if kind == "UnresolvedRelation":
+                name = _single_name(node)
+                if name.lower() not in ctes:
+                    bind(name, name, snap)
+            elif kind == "RelationTimeTravel":
+                rel = node.relation()
+                if node.version().isEmpty() or rel.nodeName() != "UnresolvedRelation":
+                    raise UnsupportedRelation("only VERSION AS OF '<ref>' time travel")
+                tbl, snap_at = _single_name(rel), ws.snapshot(node.version().get())
+                # named after the resolved commit (its snapshot dir's name):
+                # refs to one commit share it, `@` keeps it off plain names
+                view = f"{tbl}@{os.path.basename(snap_at)}"
+                bind(view, tbl, snap_at)
+                start, stop = rel.origin().startIndex(), node.origin().stopIndex()
+                splices.append((start.get(), stop.get() + 1, _quote(view)))
+            elif kind == "PlanWithUnresolvedIdentifier":
+                raise UnsupportedRelation("IDENTIFIER(...) is not a workspace table")
+            elif kind == "UnresolvedWith":
+                # each CTE name is in scope after its definition (and in
+                # its own body under WITH RECURSIVE); it shadows a table
+                scope, recursive = set(ctes), node.allowRecursion()
+                defs = node.cteRelations()
+                for i in range(defs.size()):
+                    name = defs.apply(i)._1().lower()
+                    walk(defs.apply(i)._2(), scope | {name} if recursive else scope)
+                    scope.add(name)
+                walk(node.child(), scope)
+            else:
+                for kids in (node.children(), node.innerChildren()):
+                    for i in range(kids.size()):
+                        walk(kids.apply(i), ctes)
+
+        walk(plan, set())
+        for start, stop, view in sorted(splices, reverse=True):
+            text = text[:start] + view + text[stop:]
+        return text, {view: self._read(path) for view, path in paths.items()}
 
     # -- write entry -------------------------------------------------------
 

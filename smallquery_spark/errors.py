@@ -53,6 +53,10 @@ class TableNotFound(EngineError):
         super().__init__(f"table not found: {table!r}")
 
 
+class UnsupportedRelation(EngineError):
+    """Workspace SQL reads a relation other than a workspace table."""
+
+
 class StaleQuantizerError(EngineError):
     """An IVF/IVF-PQ index was probed (or its metadata loaded) with
     quantizer state that does not match the index's own generation

@@ -52,8 +52,3 @@ def l2_normalize(v: Column | str) -> Column:
     return F.when(n == 0, to_double(v)).otherwise(
         F.transform(to_double(v), lambda x: x / n)
     )
-
-
-def avg_pool(a: Column | str, b: Column | str) -> Column:
-    """Element-wise mean of two embeddings."""
-    return F.zip_with(to_double(a), to_double(b), lambda x, y: (x + y) / 2.0)

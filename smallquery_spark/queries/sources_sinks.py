@@ -452,10 +452,10 @@ def b05_version_diff(spark, sf_dir):
     "b05_version_as_of_sql",
     # Same two-commit diff as b05_version_diff, but expressed through
     # SQL time-travel syntax (`FROM nation VERSION AS OF '<ref>'`,
-    # SURVEY §4.3's named follow-up): the engine pre-parse rewrite
-    # (engine.py:_rewrite_versioned_refs) resolves each ref through the
-    # git catalog (workspace.py:91-122) to a snapshot temp view before
-    # Catalyst sees the text — no Catalyst rule needed.
+    # SURVEY §4.3's named follow-up): Engine.sql binds each
+    # RelationTimeTravel of the parsed plan through the git catalog to a
+    # snapshot temp view before Spark analyzes the query — no Catalyst
+    # rule needed.
     oracle="""
     SELECT CAST(99 AS INT) AS n_nationkey, 'MUTATED' AS n_name,
            CAST(0 AS INT) AS n_regionkey

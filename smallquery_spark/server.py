@@ -43,7 +43,7 @@ from smallquery_spark.catalog.workspace import (
     read_snapshot_file,
     snapshot_path,
 )
-from smallquery_spark.errors import EngineError
+from smallquery_spark.errors import EngineError, UnsupportedRelation
 from smallquery_spark.sinks.render import (
     render_chart_svg,
     render_error,
@@ -157,8 +157,8 @@ class _Handler(BaseHTTPRequestHandler):
             )
         try:
             df = self.engine.sql(sql, workspace=name, version=version)
-        except AnalysisException as e:
-            # the SQL does not parse or analyze (ParseException is a subclass)
+        except (AnalysisException, UnsupportedRelation) as e:
+            # not one query (ParseException), no analysis, or not a table
             return self._reply(render_error(str(e)), status=400)
         cols = df.columns
         if fmt == "svg" and len(cols) < 2:

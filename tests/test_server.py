@@ -6,6 +6,7 @@ import json
 import os
 import subprocess
 import urllib.request
+from urllib.parse import quote
 
 import pytest
 
@@ -197,6 +198,45 @@ def test_client_mistakes_are_400(server):
         f"{server}/workspaces/demo/query?sql=SELECT+k+FROM+nums&format=xml"
     )
     assert status == 400 and "xml" in body and "html, json, csv, svg, pdf" in body
+
+
+def test_query_reads_only_workspace_tables(server, spark, tmp_path):
+    """A relation other than a workspace table's plain name is a 400
+    before Spark runs: a file outside the mount, another catalog's name,
+    ``IDENTIFIER(...)``, ``TIMESTAMP AS OF``. An unknown table is a 404."""
+    outside = str(tmp_path / "outside.parquet")
+    spark.range(3).write.parquet(outside)
+    base = f"{server}/workspaces/demo/query?format=json&sql="
+    for sql in (
+        f"SELECT count(*) AS n FROM parquet.`{outside}`",
+        "SELECT * FROM default.nums",
+        "SELECT * FROM global_temp.nums",
+        "SELECT * FROM IDENTIFIER('nums')",
+        "SELECT * FROM nums TIMESTAMP AS OF '2020-01-01'",
+    ):
+        status, body = _get(base + quote(sql))
+        assert status == 400 and "<h1>Error</h1>" in body, sql
+    status, body = _get(base + quote("SELECT * FROM ghost"))
+    assert status == 404 and "table not found" in body
+
+
+def test_only_queries_are_admitted(server, spark):
+    """``SET`` and CTAS over /query are 400 and change nothing in the
+    engine's session."""
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    base = f"{server}/workspaces/demo/query?format=json&sql="
+    try:
+        for sql in (
+            "SET spark.sql.ansi.enabled=true",
+            "CREATE TABLE ctas_t AS SELECT * FROM nums",
+        ):
+            status, body = _get(base + quote(sql))
+            assert status == 400 and "<h1>Error</h1>" in body, sql
+        assert spark.conf.get("spark.sql.ansi.enabled") == before
+        assert not spark.catalog.tableExists("ctas_t")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+        spark.sql("DROP TABLE IF EXISTS ctas_t")
 
 
 def test_each_reply_runs_its_query_once(server, spark, monkeypatch):

@@ -14,7 +14,7 @@ import os
 import subprocess
 
 import pytest
-from hypothesis import given, strategies as st
+from hypothesis import given, settings, strategies as st
 
 from smallquery_spark.catalog import VersionedCatalog, sanitize_path
 from smallquery_spark.errors import PathNotFound, VersionNotFound, WorkspaceNotFound
@@ -192,10 +192,8 @@ def test_at_version_in_string_literal_untouched(mount, spark):
 def test_identifier_scan_skips_literals(mount, spark):
     """A string literal naming a table must not trigger view
     registration; quoted identifiers DO count as table references."""
-    from smallquery_spark.engine import Engine, _mask_literals
+    from smallquery_spark.engine import Engine
 
-    masked = _mask_literals("SELECT 'nation' AS s /* nation */ FROM `nation`")
-    assert "'      '" in masked and "nation" in masked
     eng = Engine(spark, workspace_mount=mount)
     rows = eng.sql(
         "SELECT count(*) AS n, 'nation' AS tag FROM `nation`",
@@ -405,3 +403,206 @@ def test_gitws_reads_every_table_form(forms_mount, spark, table):
     assert sorted(stream) == sorted(_FORM_ROWS)
     native = Engine(spark, workspace_mount=forms_mount).table(table, workspace="ws")
     assert {(r["k"], r["s"]) for r in native.collect()} == _FORM_ROWS
+
+
+# ---------------------------------------------------------------------------
+# Engine.sql binding: one Catalyst parse decides what a query reads
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def two_mount(tmp_path_factory):
+    """Workspace ``a`` holds ``secret`` and ``t``; workspace ``b`` holds
+    only ``t``."""
+    mount = tmp_path_factory.mktemp("two")
+    for name, tables in (("a", ("secret", "t")), ("b", ("t",))):
+        repo = mount / name
+        repo.mkdir()
+        _git(repo, "init", "-b", "main")
+        for tbl in tables:
+            (repo / f"{tbl}.csv").write_text("k,v\n1,10\n2,20\n")
+        _git(repo, "add", "-A")
+        _git(repo, "commit", "-m", "v1")
+    return str(mount)
+
+
+def test_unknown_table_never_reads_another_workspace(two_mount, spark):
+    """A name that is not a table in the queried workspace raises
+    TableNotFound, even after another workspace's query registered a
+    view under that name in the shared session, and even when a CTE of
+    the same name reads it from its own body."""
+    from smallquery_spark.engine import Engine
+    from smallquery_spark.errors import TableNotFound
+
+    eng = Engine(spark, workspace_mount=two_mount)
+    sql = "SELECT sum(v) AS s FROM secret"
+    assert eng.sql(sql, workspace="a").collect()[0]["s"] == 30
+    with pytest.raises(TableNotFound, match="secret"):
+        eng.sql(sql, workspace="b")
+    with pytest.raises(TableNotFound, match="secret"):
+        eng.sql(
+            "WITH secret AS (SELECT * FROM secret) SELECT sum(v) AS s FROM secret",
+            workspace="b",
+        )
+    assert eng.sql("SELECT sum(v) AS s FROM t", workspace="b").collect()[0]["s"] == 30
+
+
+_PROP_TABLES = ("alpha", "beta", "gamma")
+
+
+@pytest.fixture(scope="module")
+def prop_mount(tmp_path_factory):
+    """One workspace with three tables of the same shape, tagged ``v1``."""
+    mount = tmp_path_factory.mktemp("props")
+    repo = mount / "ws"
+    repo.mkdir()
+    _git(repo, "init", "-b", "main")
+    for tbl in _PROP_TABLES:
+        (repo / f"{tbl}.csv").write_text("k,v\n1,10\n2,20\n")
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-m", "v1")
+    _git(repo, "tag", "v1")
+    return str(mount)
+
+
+@st.composite
+def _query_and_reads(draw):
+    """(SQL, the tables it reads). Table names also appear where nothing
+    is read: in literals (after a raw string) and comments (next to
+    ``@``), as aliases, and as CTE names that shadow the table."""
+    table = st.sampled_from(_PROP_TABLES)
+    reads = set()
+
+    def ref(in_scope):
+        name = draw(table)
+        spelling = draw(st.sampled_from(("plain", "quoted", "at", "as_of")))
+        if spelling in ("at", "as_of") or name not in in_scope:
+            reads.add(name)
+        return {
+            "plain": name,
+            "quoted": f"`{name}`",
+            "at": f"{name}@v1",
+            "as_of": f"{name} VERSION AS OF 'v1'",
+        }[spelling]
+
+    def noise():
+        t1, t2 = draw(table), draw(table)
+        return draw(st.sampled_from((
+            f"-- {t1}@v1 FROM {t2}\n",
+            f"/* FROM {t1}@v1 JOIN {t2} */ ",
+            "",
+        )))
+
+    ctes = draw(st.lists(table, unique=True, max_size=2))
+    defs = []
+    for i, name in enumerate(ctes):
+        body = "SELECT 1 AS k, 2 AS v"
+        if draw(st.booleans()):
+            body = f"SELECT k, v FROM {ref(ctes[:i])}"
+        defs.append(f"{name} AS ({body})")
+    with_ = f"WITH {', '.join(defs)} " if defs else ""
+    alias = draw(table)
+    # a raw string ending in a backslash: it ends at that quote in Spark's
+    # lexer, so the next literal's `@` stays inside a literal
+    raw = draw(st.sampled_from(("", "r'C:\\' AS p, ")))
+    lit = f"{raw}'{draw(table)}@v1 -- {draw(table)} /* {draw(table)} */'"
+    pred = draw(st.sampled_from((
+        f" WHERE {alias}.k IN (SELECT k FROM {{}})",
+        " WHERE EXISTS (SELECT 1 FROM {} WHERE k > 0)",
+        "",
+    )))
+    pred = pred.format(ref(ctes)) if pred else ""
+    sql = (
+        f"{noise()}{with_}SELECT {lit} AS s, count(*) AS n {noise()}"
+        f"FROM {ref(ctes)} AS {alias}{pred}"
+    )
+    return sql, reads
+
+
+@settings(max_examples=40, deadline=None)
+@given(case=_query_and_reads())
+def test_sql_reads_exactly_the_referenced_tables(prop_mount, spark, case):
+    """Engine.sql calls read_any for each table the query reads and for
+    nothing else."""
+    from unittest import mock
+
+    from smallquery_spark import engine as engine_mod
+
+    sql, reads = case
+    eng = engine_mod.Engine(spark, workspace_mount=prop_mount)
+    real, read = engine_mod.read_any, []
+
+    def recording(spark_, path, **kw):
+        read.append(os.path.splitext(os.path.basename(path))[0])
+        return real(spark_, path, **kw)
+
+    with mock.patch.object(engine_mod, "read_any", recording):
+        eng.sql(sql, workspace="ws")
+    assert set(read) == reads, sql
+
+
+def test_long_identifier_before_many_at_signs_binds_fast(prop_mount, spark):
+    """Finding the table part of each ``tbl@ver`` costs time linear in the
+    query: a long identifier followed by thousands of ``@`` refs fails to
+    parse within seconds, it does not stall the engine."""
+    import time
+
+    from pyspark.errors import ParseException
+
+    from smallquery_spark.engine import Engine
+
+    eng = Engine(spark, workspace_mount=prop_mount)
+    sql = "SELECT 1 AS " + "a" * 20000 + " x@v" * 2000
+    t0 = time.perf_counter()
+    with pytest.raises(ParseException):
+        eng.sql(sql, workspace="ws")
+    assert time.perf_counter() - t0 < 10
+
+
+@pytest.fixture(scope="module")
+def collide_mount(tmp_path_factory):
+    """Table ``t`` at three commits: sum(v) 10 at tag ``v1.0``, 20 at tag
+    ``v1_0``, 30 at HEAD, where tables ``t__v1_0`` (sum 40) and
+    ``t@<commit of v1.0>`` (sum 50) sit next to it. Returns (mount, that
+    commit)."""
+    mount = tmp_path_factory.mktemp("collide")
+    repo = mount / "ws"
+    repo.mkdir()
+    _git(repo, "init", "-b", "main")
+    for v, tag in ((10, "v1.0"), (20, "v1_0"), (30, None)):
+        (repo / "t.csv").write_text(f"k,v\n1,{v}\n")
+        if tag is None:
+            (repo / "t__v1_0.csv").write_text("k,v\n1,40\n")
+            (repo / f"t@{first}.csv").write_text("k,v\n1,50\n")
+        _git(repo, "add", "-A")
+        _git(repo, "commit", "-m", str(v))
+        if tag:
+            _git(repo, "tag", tag)
+        if tag == "v1.0":
+            first = subprocess.run(
+                ["git", "-C", repo, "rev-parse", "HEAD"], capture_output=True, text=True
+            ).stdout.strip()
+    return str(mount), first
+
+
+def test_versioned_refs_never_share_a_view_with_other_tables(collide_mount, spark):
+    """Each versioned ref reads its own commit's table: ``t@v1.0`` and
+    ``t@v1_0`` differ, and neither reads the plain table ``t__v1_0``. A
+    plain name equal to a versioned ref's view name is refused."""
+    from smallquery_spark.engine import Engine
+    from smallquery_spark.errors import UnsupportedRelation
+
+    mount, first = collide_mount
+    eng = Engine(spark, workspace_mount=mount)
+    row = eng.sql(
+        "SELECT (SELECT sum(v) FROM t__v1_0) AS plain,"
+        " (SELECT sum(v) FROM t@v1.0) AS dot,"
+        " (SELECT sum(v) FROM t VERSION AS OF 'v1_0') AS under,"
+        " (SELECT sum(v) FROM t) AS head",
+        workspace="ws",
+    ).collect()[0]
+    assert row.asDict() == {"plain": 40, "dot": 10, "under": 20, "head": 30}
+    at_name = f"SELECT sum(v) AS s FROM `t@{first}`"
+    assert eng.sql(at_name, workspace="ws").collect()[0]["s"] == 50
+    with pytest.raises(UnsupportedRelation, match="two different tables"):
+        eng.sql(f"SELECT * FROM `t@{first}` JOIN t@v1.0 USING (k)", workspace="ws")
