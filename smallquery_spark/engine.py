@@ -22,9 +22,12 @@ of the snapshot's table (else ``TableNotFound``); ``tbl VERSION AS OF
 'ver'`` to a view ``tbl@<commit>`` spliced in over the parser's offsets.
 Any other relation (``parquet.`/path```, ``db.t``, ``IDENTIFIER(...)``,
 ``TIMESTAMP AS OF``), or one view name for two tables, raises
-``UnsupportedRelation``. ``tbl@ver`` becomes ``tbl VERSION AS OF 'ver'``
-before the parse where Spark's lexer finds its ``@`` outside literals
-and comments.
+``UnsupportedRelation``. A call that runs code on the server's host
+(``reflect``, ``java_method``, ``try_reflect``, a function named by
+``IDENTIFIER(...)``, ``TRANSFORM ... USING``) raises ``DeniedCall``;
+expressions are walked only when the text contains one of those words.
+``tbl@ver`` becomes ``tbl VERSION AS OF 'ver'`` before the parse where
+Spark's lexer finds its ``@`` outside literals and comments.
 
 Parquet twins: a snapshot table stored as a CSV, JSON-lines or JSON file
 is parsed once per (commit, table file, reader options, inference confs)
@@ -52,11 +55,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from smallquery_spark.catalog import VersionedCatalog
 from smallquery_spark.catalog.workspace import LATEST, find_table
-from smallquery_spark.errors import TableNotFound, UnsupportedRelation
+from smallquery_spark.errors import DeniedCall, TableNotFound, UnsupportedRelation
 from smallquery_spark.sources import read_any
 
 # A `tbl@ver` ref; starting at a word boundary keeps one pass linear.
 _AT_REF = re.compile(r"\b([A-Za-z_]\w*)@([\w./-]*\w)", re.A)
+
+# Functions that call Java methods on the server's JVM, and the cheap
+# text test that gates the walk of expressions for them.
+_DENIED = ("reflect", "java_method", "try_reflect")
+_MAY_DENY = re.compile(r"reflect|java_method|identifier", re.I)
 
 
 def _parse_query(spark: SparkSession, text: str):
@@ -82,6 +90,21 @@ def _parse_query(spark: SparkSession, text: str):
 def _quote(name: str) -> str:
     """``name`` as a backquoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _vet(expr) -> None:
+    """Raise ``DeniedCall`` if ``expr`` calls a ``_DENIED`` function or
+    one named by ``IDENTIFIER(...)``."""
+    kind = expr.nodeName()
+    if kind == "UnresolvedFunction":
+        name = expr.nameParts().last().lower()
+        if name in _DENIED:
+            raise DeniedCall(f"{name}(...) is not allowed in workspace SQL")
+    elif kind == "ExpressionWithUnresolvedIdentifier":
+        raise DeniedCall("IDENTIFIER(...) is not allowed in workspace SQL")
+    kids = expr.children()
+    for i in range(kids.size()):
+        _vet(kids.apply(i))
 
 
 def _single_name(relation) -> str:
@@ -147,9 +170,9 @@ class Engine:
         is bound (module docstring) from the snapshot at ``version``
         (default ``latest`` = HEAD, reference http_server.rs:106-110), or
         at ``ver`` for ``tbl@ver`` / ``tbl VERSION AS OF 'ver'``. Raises
-        ``ParseException``, ``TableNotFound`` (no such table or CTE) or
-        ``UnsupportedRelation``. Without a workspace, names must already
-        be registered views.
+        ``ParseException``, ``TableNotFound`` (no such table or CTE),
+        ``UnsupportedRelation`` or ``DeniedCall``. Without a workspace,
+        names must already be registered views.
         """
         views = {}
         if workspace is not None:
@@ -164,6 +187,7 @@ class Engine:
         """``(text to run, {view name: table DataFrame})`` for a workspace
         query: one parse, one walk of the plan (module docstring)."""
         text, plan = _parse_query(self.spark, query)
+        vet = _MAY_DENY.search(text) is not None
         snap = ws.snapshot(version)
         paths: dict[str, str] = {}  # view name -> data path it reads
         splices: list[tuple[int, int, str]] = []
@@ -177,6 +201,12 @@ class Engine:
 
         def walk(node, ctes: set[str]) -> None:
             kind = node.nodeName()
+            if vet:
+                exprs = node.expressions()
+                for i in range(exprs.size()):
+                    _vet(exprs.apply(i))
+            if kind == "ScriptTransformation":
+                raise DeniedCall("TRANSFORM ... USING is not allowed in workspace SQL")
             if kind == "UnresolvedRelation":
                 name = _single_name(node)
                 if name.lower() not in ctes:

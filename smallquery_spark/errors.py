@@ -57,6 +57,12 @@ class UnsupportedRelation(EngineError):
     """Workspace SQL reads a relation other than a workspace table."""
 
 
+class DeniedCall(EngineError):
+    """Workspace SQL would run code on the server's host: a Java method
+    (``reflect``, ``java_method``, ``try_reflect``, or a function named
+    by ``IDENTIFIER(...)``) or a script (``TRANSFORM ... USING``)."""
+
+
 class StaleQuantizerError(EngineError):
     """An IVF/IVF-PQ index was probed (or its metadata loaded) with
     quantizer state that does not match the index's own generation

@@ -81,8 +81,7 @@ def materialize_bucketed(
     metastore the same digest-named table would be shared; the
     content-addressing is what makes that safe.
 
-    Returns the managed table name (query it via ``spark.table`` /
-    ``bucketed_join``).
+    Returns the managed table name (query it via ``spark.table``).
     """
     from smallquery_spark.queries.tmpdirs import register_cleanup
 
@@ -473,21 +472,3 @@ def _recover_bucketed_delete(fs: HadoopFS, loc: str, aside: str) -> None:
     for n in fs.list_names(loc):
         if n.startswith("_deleted-"):
             fs.delete(join_uri(loc, n))
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key.
-
-    With matching bucket specs the planner emits SortMergeJoin with NO
-    Exchange on either side (asserted in tests/test_plans.py). Callers
-    must keep `spark.sql.sources.bucketing.enabled=true` (default).
-    """
-    lt = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lt.join(rt, on=key, how=how)

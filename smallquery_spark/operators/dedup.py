@@ -371,25 +371,6 @@ def _banded_sig_df(
     )
 
 
-def _banded_keys_df(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """(id, band, band-key) rows — the exploded signature view, kept for
-    phase profiling (tools/lsh_scale.py times signatures vs the bucket
-    join separately)."""
-    return _banded_sig_df(
-        df, text_col, id_col, n, bands, rows_per_band
-    ).select(
-        F.col(id_col),
-        F.posexplode("__keys").alias("__band", "__bkey"),
-    )
-
-
 def _hash_jaccard_udf():
     """Arrow-vectorized Jaccard over two sorted-distinct int64 hash
     arrays. np.intersect1d(assume_unique) — valid because the arrays

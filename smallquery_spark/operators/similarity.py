@@ -182,11 +182,6 @@ def ivf_build_centroids(
     scores with. The driver-side work is bounded by construction:
     ``sample_size`` × dim floats collected once, Lloyd on numpy.
 
-    ``method="first_n"`` keeps the round-4 pick (first n_cells vectors
-    by id) for the measured recall/balance comparison in
-    tools/ivf_recall.py — on clustered real-world distributions it
-    degrades cell balance, which is why it is no longer the default.
-
     ``method="kmeans_parallel"`` is k-means|| (Bahmani et al., VLDB'12
     — the seeding MLlib also uses): ``rounds`` distributed passes each
     oversample ~``oversample`` (default 2·k) candidates with
@@ -205,11 +200,6 @@ def ivf_build_centroids(
     (exactly-n_cells is the contract; a silently thinner quantizer is
     not).
     """
-    if method == "first_n":
-        rows = (
-            corpus.orderBy(corpus_id).limit(n_cells).select(vec_col).collect()
-        )
-        return [[float(x) for x in r[0]] for r in rows]
     if method == "kmeans_parallel":
         return _kmeans_parallel_centroids(
             corpus,

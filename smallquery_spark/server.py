@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -43,7 +44,7 @@ from smallquery_spark.catalog.workspace import (
     read_snapshot_file,
     snapshot_path,
 )
-from smallquery_spark.errors import EngineError, UnsupportedRelation
+from smallquery_spark.errors import DeniedCall, EngineError, UnsupportedRelation
 from smallquery_spark.sinks.render import (
     render_chart_svg,
     render_error,
@@ -107,8 +108,11 @@ class _Handler(BaseHTTPRequestHandler):
         except EngineError as e:
             # typed errors → error template (reference http_server.rs:240-247)
             return self._reply(render_error(str(e)), status=404)
-        except Exception as e:  # noqa: BLE001
-            return self._reply(render_error(f"internal error: {e}"), status=500)
+        except Exception:  # noqa: BLE001
+            # the details stay on the server: a reply echoing them would
+            # leak paths and internals to the client
+            traceback.print_exc()
+            return self._reply(render_error("internal error"), status=500)
 
     # -- static assets (reference A8, web.rs:7-20) ------------------------
 
@@ -157,8 +161,9 @@ class _Handler(BaseHTTPRequestHandler):
             )
         try:
             df = self.engine.sql(sql, workspace=name, version=version)
-        except (AnalysisException, UnsupportedRelation) as e:
-            # not one query (ParseException), no analysis, or not a table
+        except (AnalysisException, UnsupportedRelation, DeniedCall) as e:
+            # not one query (ParseException), no analysis, not a table,
+            # or a call that would run code on this host
             return self._reply(render_error(str(e)), status=400)
         cols = df.columns
         if fmt == "svg" and len(cols) < 2:

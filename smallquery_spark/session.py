@@ -105,7 +105,7 @@ def get_session(
         # bench.py / tools.* unchanged) run under a real executor
         # boundary: e.g. local-cluster[4,8,8192] spawns 4 worker JVMs
         # with serialized netty shuffle — the closest this sandbox gets
-        # to a cluster (tools/cluster_bench.py).
+        # to a cluster (tools/cluster_bench.py at 768dc6a).
         .master(master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

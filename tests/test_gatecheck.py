@@ -4,8 +4,17 @@ README cited it; the rule is now code, not discipline)."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import subprocess
+
+import pytest
+
+_TOOLS = sorted(
+    n[: -len(".py")]
+    for n in os.listdir(os.path.join(os.path.dirname(__file__), "..", "tools"))
+    if n.endswith(".py") and n != "__init__.py"
+)
 
 
 def _git(repo, *args):
@@ -84,3 +93,9 @@ def test_gatecheck_fresh_stale_empty_dirty(tmp_path):
         f.write("x = 3\n")
     probs = check(repo, quiet=True)
     assert any("uncommitted engine changes" in p for p in probs)
+
+
+@pytest.mark.parametrize("name", _TOOLS)
+def test_tool_imports(name):
+    """Every module in tools/ imports, so none depends on a deleted one."""
+    importlib.import_module(f"tools.{name}")

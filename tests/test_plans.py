@@ -243,8 +243,8 @@ def test_bucketed_rollup_workload_no_exchange(spark):
     Exchange-free END TO END on same-bucketed tables: hash(o_orderkey)
     bucketing satisfies the grouping's clustered distribution too, so
     the pay-once layout eliminates BOTH shuffles, not just the join's.
-    (Measured at gen-sf10 by tools/atrest_join.py: 4 -> 0 Exchanges,
-    ATREST_JOIN.json.)"""
+    (Measured at gen-sf10 by tools/atrest_join.py at 768dc6a: 4 -> 0
+    Exchanges, ATREST_JOIN.json.)"""
     from pyspark.sql import functions as F
 
     from smallquery_spark.queries.scale import _bucketed_tables

@@ -151,14 +151,18 @@ def test_template_sections(server):
 
 def test_sql_literal_with_at_sign(server):
     """ADVICE r1: an @-token inside a string literal must not be parsed
-    as table@version (engine.py literal masking)."""
-    status, body = _get(
-        f"{server}/workspaces/demo/query?"
-        "sql=SELECT+count(*)+AS+n+FROM+nums+WHERE+'bob@example.com'+<>+''"
-        "&format=json"
-    )
-    assert status == 200
-    assert json.loads(body) == [{"n": 4}]
+    as table@version (engine.py literal masking). Likewise a denied
+    function's name as a literal or a column name is not a call."""
+    for sql in (
+        "SELECT count(*) AS n FROM nums WHERE 'bob@example.com' <> ''",
+        "SELECT count(*) AS n FROM nums WHERE 'reflect' <> 'java_method'",
+        "SELECT count(reflect) AS n FROM (SELECT k AS reflect FROM nums)",
+    ):
+        status, body = _get(
+            f"{server}/workspaces/demo/query?format=json&sql={quote(sql)}"
+        )
+        assert status == 200, sql
+        assert json.loads(body) == [{"n": 4}], sql
 
 
 def test_concurrent_queries_different_versions(server):
@@ -181,9 +185,9 @@ def test_concurrent_queries_different_versions(server):
 
 
 def test_client_mistakes_are_400(server):
-    """A bad ``limit``, an unknown ``format`` or SQL that does not parse
-    or analyze is the client's mistake: 400 with the error page, not a
-    500."""
+    """A bad ``limit``, an unknown ``format``, SQL that does not parse
+    or analyze, or SQL that would run code on the server's host is the
+    client's mistake: 400 with the error page, not a 500."""
     base = f"{server}/workspaces/demo/query?format=json&sql="
     for limit in ("ten", "-1", "1.5", str(2**31)):
         status, body = _get(f"{base}SELECT+k+FROM+nums&limit={limit}")
@@ -198,6 +202,29 @@ def test_client_mistakes_are_400(server):
         f"{server}/workspaces/demo/query?sql=SELECT+k+FROM+nums&format=xml"
     )
     assert status == 400 and "xml" in body and "html, json, csv, svg, pdf" in body
+    for sql, name in (
+        ("SELECT reflect('java.lang.System', 'getProperty', 'java.version')", "reflect"),
+        ("SELECT k FROM nums WHERE k IN (SELECT JAVA_METHOD('a', 'b'))", "java_method"),
+        ("SELECT transform(array(k), x -> system.builtin.try_reflect('a', 'b')) FROM nums",
+         "try_reflect"),
+        ("SELECT * FROM explode(array(reflect('a', 'b')))", "reflect"),
+        ("SELECT IDENTIFIER('refl' || 'ect')('a', 'b')", "IDENTIFIER"),
+        ("SELECT TRANSFORM(k) USING 'cat' FROM nums", "TRANSFORM"),
+    ):
+        status, body = _get(base + quote(sql))
+        assert status == 400 and name in body, sql
+
+
+def test_internal_error_reply_hides_details(server, monkeypatch):
+    """An unexpected failure is a 500 whose body does not echo it."""
+    from smallquery_spark.engine import Engine
+
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("/secret/path")
+
+    monkeypatch.setattr(Engine, "sql", boom)
+    status, body = _get(f"{server}/workspaces/demo/query?sql=SELECT+1")
+    assert status == 500 and "/secret/path" not in body
 
 
 def test_query_reads_only_workspace_tables(server, spark, tmp_path):
