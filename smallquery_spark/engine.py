@@ -17,17 +17,29 @@ reader ``Engine._read``.
 Binding workspace SQL: one ``sqlParser().parseQuery`` (Catalyst's
 ``query`` rule; anything else raises ``ParseException``) and one walk of
 the plan through ``children`` and ``innerChildren`` (CTE bodies,
-subqueries). A single-part name no CTE in scope shadows binds to a view
-of the snapshot's table (else ``TableNotFound``); ``tbl VERSION AS OF
-'ver'`` to a view ``tbl@<commit>`` spliced in over the parser's offsets.
-Any other relation (``parquet.`/path```, ``db.t``, ``IDENTIFIER(...)``,
-``TIMESTAMP AS OF``), or one view name for two tables, raises
-``UnsupportedRelation``. A call that runs code on the server's host
-(``reflect``, ``java_method``, ``try_reflect``, a function named by
-``IDENTIFIER(...)``, ``TRANSFORM ... USING``) raises ``DeniedCall``;
-expressions are walked only when the text contains one of those words.
-``tbl@ver`` becomes ``tbl VERSION AS OF 'ver'`` before the parse where
-Spark's lexer finds its ``@`` outside literals and comments.
+subqueries). A single-part name no CTE in scope reads the snapshot's
+table (else ``TableNotFound``); ``tbl VERSION AS OF 'ver'`` the table in
+the snapshot at ``ver``. ``tbl@ver`` becomes ``tbl VERSION AS OF 'ver'``
+before the parse where Spark's lexer finds its ``@`` outside literals
+and comments. Any other relation (``parquet.`/path```, ``db.t``,
+``IDENTIFIER(...)``, ``TIMESTAMP AS OF``, ``STREAM t``, an options
+clause ``t WITH (...)``), or two tables under one ref name (``tbl`` or
+``tbl@<commit>``), raises ``UnsupportedRelation``. A call that runs code
+on the server's host (``reflect``, ``java_method``, ``try_reflect``, a
+function named by ``IDENTIFIER(...)``, ``TRANSFORM ... USING``) raises
+``DeniedCall``; expressions are walked only when the text contains one of
+those words.
+
+Views: each table is one immutable temp view per ``Engine``, named
+``tbl@<hash of read_key>`` (data path, stamp, format, reader options,
+inference confs), registered by the first query that reads it and reused
+by every later one, so a repeated query reads and registers nothing. The
+view's name is spliced in over the parser's offsets, and a relation
+without an alias of its own gets `` AS `tbl` `` at the end of its table
+clause (after ``TABLESAMPLE``; not after ``TABLE t``), so ``tbl.col``
+resolves under every spelling. A view name never means two tables, so
+queries are analyzed and run outside the lock. A view's name in user
+text is looked up as a table, so it raises ``TableNotFound``.
 
 Parquet twins: a snapshot table stored as a CSV, JSON-lines or JSON file
 is parsed once per (commit, table file, reader options, inference confs)
@@ -56,7 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from smallquery_spark.catalog import VersionedCatalog
 from smallquery_spark.catalog.workspace import LATEST, find_table
 from smallquery_spark.errors import DeniedCall, TableNotFound, UnsupportedRelation
-from smallquery_spark.sources import read_any
+from smallquery_spark.sources import read_any, read_key
 
 # A `tbl@ver` ref; starting at a word boundary keeps one pass linear.
 _AT_REF = re.compile(r"\b([A-Za-z_]\w*)@([\w./-]*\w)", re.A)
@@ -65,26 +77,65 @@ _AT_REF = re.compile(r"\b([A-Za-z_]\w*)@([\w./-]*\w)", re.A)
 # text test that gates the walk of expressions for them.
 _DENIED = ("reflect", "java_method", "try_reflect")
 _MAY_DENY = re.compile(r"reflect|java_method|identifier", re.I)
+_TABLE_WORD = re.compile(r"\btable\b", re.I)
+
+# Plan nodes that give the relation under them its own alias, and the
+# ones a table clause's TABLESAMPLE becomes.
+_ALIASES = ("SubqueryAlias", "UnresolvedSubqueryColumnAliases")
+_SAMPLES = ("Sample", "LocalLimit")
+
+
+def _tokens(spark: SparkSession, text: str):
+    """``text`` lexed by Spark's own lexer, on the upper-casing char stream
+    Spark's parser lexes: a filled ``CommonTokenStream``."""
+    parser = spark._jvm.org.apache.spark.sql.catalyst.parser
+    antlr = spark._jvm.org.antlr.v4.runtime
+    chars = parser.UpperCaseCharStream(antlr.CharStreams.fromString(text))
+    tokens = antlr.CommonTokenStream(parser.SqlBaseLexer(chars))
+    tokens.fill()
+    return tokens
+
+
+def _of_type(spark: SparkSession, tokens, name: str) -> list:
+    """The tokens of lexer type ``name`` in ``tokens``."""
+    kind = getattr(spark._jvm.org.apache.spark.sql.catalyst.parser.SqlBaseLexer, name)
+    found = tokens.getTokens(0, tokens.size() - 1, kind)
+    return [found.get(i) for i in range(found.size() if found else 0)]
 
 
 def _parse_query(spark: SparkSession, text: str):
     """``(text, plan)``: ``text`` with each ``tbl@ver`` spliced in as
     `` `tbl` VERSION AS OF 'ver' ``, parsed by Catalyst's ``query`` rule.
-    A ref's ``@`` is an ``UNRECOGNIZED`` token of Spark's own lexer, on
-    the char stream Spark's parser lexes: outside literals and comments."""
+    A ref's ``@`` is an ``UNRECOGNIZED`` token of Spark's lexer: outside
+    literals and comments."""
     if _AT_REF.search(text):
-        parser = spark._jvm.org.apache.spark.sql.catalyst.parser
-        antlr = spark._jvm.org.antlr.v4.runtime
-        chars = parser.UpperCaseCharStream(antlr.CharStreams.fromString(text))
-        tokens = antlr.CommonTokenStream(parser.SqlBaseLexer(chars))
-        tokens.fill()
-        ats = tokens.getTokens(0, tokens.size() - 1, parser.SqlBaseLexer.UNRECOGNIZED)
-        at = {ats.get(i).getStartIndex() for i in range(ats.size() if ats else 0)}
+        ats = _of_type(spark, _tokens(spark, text), "UNRECOGNIZED")
+        at = {tok.getStartIndex() for tok in ats}
         text = _AT_REF.sub(
             lambda m: f"`{m[1]}` VERSION AS OF '{m[2]}'" if m.end(1) in at else m[0],
             text,
         )
     return text, spark._jsparkSession.sessionState().sqlParser().parseQuery(text)
+
+
+def _after_table(spark: SparkSession, text: str) -> set[int]:
+    """Offsets of the names that follow a ``TABLE`` keyword token in
+    ``text``: the ``t`` of a ``TABLE t`` query, which takes no alias."""
+    if not _TABLE_WORD.search(text):
+        return set()
+    tokens, out = _tokens(spark, text), set()
+    for tok in _of_type(spark, tokens, "TABLE"):
+        i = tok.getTokenIndex() + 1
+        while tokens.get(i).getChannel() != 0:  # whitespace, comments
+            i += 1
+        out.add(tokens.get(i).getStartIndex())
+    return out
+
+
+def _closes_paren(spark: SparkSession, gap: str) -> bool:
+    """Whether ``gap``, the text between two tokens, holds a ``)`` token
+    (not one in a comment)."""
+    return ")" in gap and bool(_of_type(spark, _tokens(spark, gap), "RIGHT_PAREN"))
 
 
 def _quote(name: str) -> str:
@@ -117,15 +168,18 @@ def _single_name(relation) -> str:
 
 class Engine:
     """A SparkSession bound to an optional workspace mount. Workspace
-    tables are read through parquet twins (module docstring)."""
+    tables are read through parquet twins and bound to SQL as views
+    registered once (module docstring)."""
 
     def __init__(self, spark: SparkSession, workspace_mount: str | None = None):
         self.spark = spark
         self.catalog = VersionedCatalog(workspace_mount) if workspace_mount else None
-        # Temp views are session-global: one query's view registration
-        # and analysis (spark.sql analyzes eagerly) run under this lock;
-        # execution of the returned DataFrame runs outside it.
+        # Temp views are session-global, and each is named by what it
+        # reads (_view), so a name never changes meaning. This lock guards
+        # only a view's first registration; queries are analyzed and run
+        # outside it.
         self._sql_lock = threading.Lock()
+        self._views: set[str] = set()  # names this engine registered
 
     # -- resolution --------------------------------------------------------
 
@@ -174,32 +228,61 @@ class Engine:
         ``UnsupportedRelation`` or ``DeniedCall``. Without a workspace,
         names must already be registered views.
         """
-        views = {}
         if workspace is not None:
             ws = self._require_catalog().workspace(workspace)
-            query, views = self._bind(query, ws, version)
-        with self._sql_lock:
-            for name, df in views.items():
-                df.createOrReplaceTempView(_quote(name))
-            return self.spark.sql(query)
+            query = self._bind(query, ws, version)
+        return self.spark.sql(query)
 
-    def _bind(self, query: str, ws, version: str) -> tuple[str, dict[str, DataFrame]]:
-        """``(text to run, {view name: table DataFrame})`` for a workspace
-        query: one parse, one walk of the plan (module docstring)."""
+    def _view(self, table: str, path: str) -> str:
+        """Name of the temp view that reads ``table`` at ``path``,
+        registered on first use: ``table@<hash of read_key(path)>``, so a
+        changed file, option or inference conf gets a fresh view."""
+        name = f"{table}@{read_key(self.spark, path)[2][:16]}"
+        if name not in self._views:
+            with self._sql_lock:
+                if name not in self._views:
+                    self._read(path).createOrReplaceTempView(_quote(name))
+                    self._views.add(name)
+        return name
+
+    def _bind(self, query: str, ws, version: str) -> str:
+        """The text to run for a workspace query: one parse, one walk of
+        the plan, each table's view spliced in (module docstring)."""
         text, plan = _parse_query(self.spark, query)
         vet = _MAY_DENY.search(text) is not None
+        no_alias = _after_table(self.spark, text)
         snap = ws.snapshot(version)
-        paths: dict[str, str] = {}  # view name -> data path it reads
-        splices: list[tuple[int, int, str]] = []
+        paths: dict[str, str] = {}  # ref (tbl, or tbl@<commit>) -> data path
+        binds: list[tuple[int, int, str, str]] = []  # start, stop, table, path
+        aliases: list[tuple[int, str]] = []  # offset, table
 
-        def bind(view: str, table: str, snap_at: str) -> None:
+        def bind(node, parent, rel, ref: str, snap_at: str) -> None:
+            table = _single_name(rel)
+            if rel.isStreaming():
+                raise UnsupportedRelation(f"STREAM {table} is not a workspace table")
+            if not rel.options().isEmpty():
+                raise UnsupportedRelation(f"{table} WITH (...): tables take no options")
             path = find_table(snap_at, table)
             if path is None:
                 raise TableNotFound(table)
-            if paths.setdefault(view, path) != path:
-                raise UnsupportedRelation(f"{view} names two different tables")
+            if paths.setdefault(ref, path) != path:
+                raise UnsupportedRelation(f"{ref} names two different tables")
+            start, stop = rel.origin().startIndex().get(), node.origin().stopIndex().get() + 1
+            binds.append((start, stop, table, path))
+            # without an alias of its own, the view takes the table's name
+            # as its qualifier, at the end of the table clause
+            kind = parent.nodeName() if parent is not None else None
+            if start in no_alias or (
+                kind in _ALIASES and parent.origin().startIndex().contains(start)
+            ):
+                return
+            if kind in _SAMPLES:  # after it, unless it samples `(t)`
+                sample = parent.origin()
+                if not _closes_paren(self.spark, text[stop : sample.startIndex().get()]):
+                    stop = sample.stopIndex().get() + 1
+            aliases.append((stop, table))
 
-        def walk(node, ctes: set[str]) -> None:
+        def walk(node, parent, ctes: set[str]) -> None:
             kind = node.nodeName()
             if vet:
                 exprs = node.expressions()
@@ -210,18 +293,15 @@ class Engine:
             if kind == "UnresolvedRelation":
                 name = _single_name(node)
                 if name.lower() not in ctes:
-                    bind(name, name, snap)
+                    bind(node, parent, node, name, snap)
             elif kind == "RelationTimeTravel":
                 rel = node.relation()
                 if node.version().isEmpty() or rel.nodeName() != "UnresolvedRelation":
                     raise UnsupportedRelation("only VERSION AS OF '<ref>' time travel")
-                tbl, snap_at = _single_name(rel), ws.snapshot(node.version().get())
-                # named after the resolved commit (its snapshot dir's name):
-                # refs to one commit share it, `@` keeps it off plain names
-                view = f"{tbl}@{os.path.basename(snap_at)}"
-                bind(view, tbl, snap_at)
-                start, stop = rel.origin().startIndex(), node.origin().stopIndex()
-                splices.append((start.get(), stop.get() + 1, _quote(view)))
+                snap_at = ws.snapshot(node.version().get())
+                # refs to one commit share a ref name (its snapshot dir's)
+                ref = f"{_single_name(rel)}@{os.path.basename(snap_at)}"
+                bind(node, parent, rel, ref, snap_at)
             elif kind == "PlanWithUnresolvedIdentifier":
                 raise UnsupportedRelation("IDENTIFIER(...) is not a workspace table")
             elif kind == "UnresolvedWith":
@@ -231,18 +311,21 @@ class Engine:
                 defs = node.cteRelations()
                 for i in range(defs.size()):
                     name = defs.apply(i)._1().lower()
-                    walk(defs.apply(i)._2(), scope | {name} if recursive else scope)
+                    walk(defs.apply(i)._2(), node, scope | {name} if recursive else scope)
                     scope.add(name)
-                walk(node.child(), scope)
+                walk(node.child(), node, scope)
             else:
                 for kids in (node.children(), node.innerChildren()):
                     for i in range(kids.size()):
-                        walk(kids.apply(i), ctes)
+                        walk(kids.apply(i), node, ctes)
 
-        walk(plan, set())
-        for start, stop, view in sorted(splices, reverse=True):
-            text = text[:start] + view + text[stop:]
-        return text, {view: self._read(path) for view, path in paths.items()}
+        walk(plan, None, set())
+        splices = [(start, stop, _quote(self._view(table, path)))
+                   for start, stop, table, path in binds]
+        splices += [(at, at, f" AS {_quote(table)}") for at, table in aliases]
+        for start, stop, piece in sorted(splices, reverse=True):
+            text = text[:start] + piece + text[stop:]
+        return text
 
     # -- write entry -------------------------------------------------------
 

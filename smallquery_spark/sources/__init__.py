@@ -1,3 +1,3 @@
-from smallquery_spark.sources.readers import TABLES, read_any
+from smallquery_spark.sources.readers import TABLES, read_any, read_key
 
-__all__ = ["TABLES", "read_any"]
+__all__ = ["TABLES", "read_any", "read_key"]

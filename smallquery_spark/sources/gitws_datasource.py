@@ -212,12 +212,14 @@ class GitWorkspaceStreamReader(SimpleDataSourceStreamReader):
         return {"n": 0}
 
     def _rows_for(self, commits: list[str]) -> list[tuple]:
+        from smallquery_spark.errors import PathNotFound
+
         ws = self._ws()
         rows: list[tuple] = []
         for commit in commits:
             try:
                 path = ws.table_path(self.table, commit)
-            except Exception:
+            except PathNotFound:
                 continue  # table absent at this commit
             for rec in _dataset(path).to_table().to_pylist():
                 row = tuple(rec.values())

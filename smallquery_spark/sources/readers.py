@@ -52,6 +52,45 @@ _INFERENCE_CONFS = (
 _SCHEMA_CACHE: dict[str, tuple[tuple, T.StructType]] = {}
 
 
+def read_key(
+    spark: SparkSession, path: str, fmt: str | None = None, **options
+) -> tuple[str, tuple, str]:
+    """``(real path, key, sha1 hex of both)`` for a schema-less
+    ``read_any(spark, path, fmt, **options)``: everything but the bytes
+    that the read depends on. The key is the path's stamp (mtime_ns,
+    size), the format, the final reader options and the session confs
+    inference reads, so for an immutable path (a table in a workspace
+    snapshot) one key always reads the same rows with the same schema."""
+    fmt, options = _format_options(path, fmt, None, options)
+    real = os.path.realpath(path)
+    st = os.stat(real)
+    key = (
+        (st.st_mtime_ns, st.st_size),
+        fmt,
+        tuple(sorted((k, str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    return real, key, hashlib.sha1(repr((real, key)).encode()).hexdigest()
+
+
+def _format_options(
+    path: str, fmt: str | None, schema, options: dict
+) -> tuple[str, dict]:
+    """The format (by extension when ``fmt`` is None) and the reader
+    options after the CSV defaults (header, and inferSchema when no
+    schema is given)."""
+    if fmt is None:
+        ext = os.path.splitext(path)[1].lower().lstrip(".")
+        fmt = {"parquet": "parquet", "csv": "csv", "json": "json",
+               "jsonl": "json", "txt": "text", "text": "text"}.get(ext, "parquet")
+    options = dict(options)
+    if fmt == "csv":
+        options.setdefault("header", True)
+        if schema is None:
+            options.setdefault("inferSchema", True)
+    return fmt, options
+
+
 def read_any(
     spark: SparkSession,
     path: str,
@@ -67,46 +106,31 @@ def read_any(
     an explicit-schema override for reproducible versioned transforms
     (SURVEY.md §1.2).
 
-    The inferred schema of a regular file is cached per file stamp
-    (mtime_ns, size), format, reader options and the session confs
-    inference reads, so re-reading an unchanged file (e.g. a table in an
+    The inferred schema of a regular file is cached per ``read_key``
+    (file stamp, format, reader options and the session confs inference
+    reads), so re-reading an unchanged file (e.g. a table in an
     immutable workspace snapshot) launches no header, inference or
     footer-merge job. Results are never cached. Directories are always
     inferred afresh.
 
     ``twin_dir`` is for immutable files only (a table in a workspace
-    snapshot): a CSV, JSON-lines or JSON file is parsed once per cache
-    key above into a parquet copy, its *twin*, under ``twin_dir``, and
+    snapshot): a CSV, JSON-lines or JSON file is parsed once per
+    ``read_key`` into a parquet copy, its *twin*, under ``twin_dir``, and
     every read is served from the twin with the source's cached schema,
     so a repeated read decodes no text and launches no footer job.
     """
-    if fmt is None:
-        ext = os.path.splitext(path)[1].lower().lstrip(".")
-        fmt = {"parquet": "parquet", "csv": "csv", "json": "json",
-               "jsonl": "json", "txt": "text", "text": "text"}.get(ext, "parquet")
+    fmt, options = _format_options(path, fmt, schema, options)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    if fmt == "csv":
-        options.setdefault("header", True)
-        if schema is None:
-            options.setdefault("inferSchema", True)
     reader = reader.options(**options).format(fmt)
     if schema is not None or not os.path.isfile(path):
         return reader.load(path)
-    real = os.path.realpath(path)
-    st = os.stat(real)
-    key = (
-        (st.st_mtime_ns, st.st_size),
-        fmt,
-        tuple(sorted((k, str(v)) for k, v in options.items())),
-        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
-    )
+    real, key, digest = read_key(spark, path, fmt, **options)
     hit = _SCHEMA_CACHE.get(real)
     cached = hit[1] if hit is not None and hit[0] == key else None
     twin = None
     if twin_dir is not None and fmt in ("csv", "json"):
-        digest = hashlib.sha1(repr((real, key)).encode()).hexdigest()
         twin = os.path.join(twin_dir, f"{digest}.parquet")
         if cached is not None and os.path.isdir(twin):
             return spark.read.schema(cached).parquet(twin)

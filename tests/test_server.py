@@ -170,15 +170,18 @@ def test_concurrent_queries_different_versions(server):
     versions of the same table name must not cross-contaminate."""
     import concurrent.futures
 
-    def hit(version, expect):
-        url = (
-            f"{server}/workspaces/demo/query?"
-            f"sql=SELECT+sum(v)+AS+s+FROM+nums&format=json&version={version}"
-        )
+    def hit(rel, version, expect):
+        sql = quote(f"SELECT sum(v) AS s FROM {rel}")
+        url = f"{server}/workspaces/demo/query?sql={sql}&format=json&version={version}"
         status, body = _get(url)
         return status == 200 and json.loads(body) == [{"s": expect}]
 
-    jobs = [("v1", 60), ("latest", 100)] * 8
+    jobs = [
+        ("nums", "v1", 60),
+        ("nums", "latest", 100),
+        ("nums@v1", "latest", 60),
+        ("nums VERSION AS OF 'v1'", "latest", 60),
+    ] * 8
     with concurrent.futures.ThreadPoolExecutor(max_workers=8) as ex:
         results = list(ex.map(lambda a: hit(*a), jobs))
     assert all(results)

@@ -156,10 +156,39 @@ def test_versioned_query_e2e(mount, spark):
     assert df.columns == ["n_nationkey", "n_name"]
 
 
+V1_NAMES = ["ALGERIA", "ARGENTINA"]
+HEAD_NAMES = [*V1_NAMES, "BRAZIL"]
+
+# (query, n_name of its rows): every table-clause form; a relation
+# without an alias is qualified by its table's name under every spelling
+_CLAUSE_FORMS = (
+    ("SELECT nation.n_name FROM nation", HEAD_NAMES),
+    ("SELECT nation.n_name FROM nation@v1", V1_NAMES),
+    ("SELECT nation.n_name FROM nation VERSION AS OF 'v1'", V1_NAMES),
+    ("SELECT x.n_name FROM nation x", HEAD_NAMES),
+    ("SELECT x.n_name FROM nation@v1 AS x", V1_NAMES),
+    ("SELECT x.n_name FROM (nation) x", HEAD_NAMES),
+    ("SELECT nation.n_name FROM nation TABLESAMPLE (100 PERCENT)", HEAD_NAMES),
+    ("SELECT x.n_name FROM nation TABLESAMPLE (100 PERCENT) x", HEAD_NAMES),
+    ("SELECT nation.n_name FROM nation@v1 TABLESAMPLE (100 PERCENT)", V1_NAMES),
+    ("SELECT y.n_name FROM (nation@v1) TABLESAMPLE (100 PERCENT) y", V1_NAMES),
+    ("SELECT n_name FROM (nation /* ) */) TABLESAMPLE (2 ROWS)", V1_NAMES),
+    ("SELECT n_name FROM (TABLE nation)", HEAD_NAMES),
+    ("TABLE /* no alias */ nation", HEAD_NAMES),
+    ("FROM nation SELECT n_name", HEAD_NAMES),
+    ("FROM nation@v1 SELECT nation.n_name", V1_NAMES),
+)
+
+
 def test_version_as_of_sql(mount, spark):
     """Delta/Iceberg-style `VERSION AS OF` sugar resolves through the
-    same git catalog as table@version."""
+    same git catalog as table@version, in every table-clause form. An
+    options clause is refused, and an unaliased plain and versioned ref
+    to one table share its name as qualifier, as ``t JOIN t`` does."""
+    from pyspark.errors import AnalysisException
+
     from smallquery_spark.engine import Engine
+    from smallquery_spark.errors import UnsupportedRelation
 
     eng = Engine(spark, workspace_mount=mount)
     n1 = eng.sql(
@@ -171,6 +200,25 @@ def test_version_as_of_sql(mount, spark):
         workspace="sales",
     ).collect()[0]["n"]
     assert (n1, n2) == (2, 3)
+    for sql, want in _CLAUSE_FORMS:
+        rows = eng.sql(sql, workspace="sales").collect()
+        assert sorted(r["n_name"] for r in rows) == want, sql
+    for sql in (
+        "SELECT n_name FROM nation WITH ('a'='b')",
+        "SELECT x.n_name FROM nation WITH ('a'='b') x",
+    ):
+        with pytest.raises(UnsupportedRelation, match="options"):
+            eng.sql(sql, workspace="sales")
+    with pytest.raises(AnalysisException, match="AMBIGUOUS_REFERENCE"):
+        eng.sql(
+            "SELECT nation.n_name FROM nation JOIN nation@v1 USING (n_nationkey)",
+            workspace="sales",
+        )
+    rows = eng.sql(
+        "SELECT a.n_name FROM nation a JOIN nation@v1 b USING (n_nationkey)",
+        workspace="sales",
+    ).collect()
+    assert sorted(r["n_name"] for r in rows) == V1_NAMES
 
 
 def test_at_version_in_string_literal_untouched(mount, spark):
@@ -277,6 +325,25 @@ def test_gitws_stream_arity_without_tagcommit(mount, spark):
     replay = list(tagged.readBetweenOffsets({"n": 0}, {"n": 1}))
     assert len(replay) == 2
     assert len(replay) < len(trows)
+
+
+def test_gitws_stream_surfaces_snapshot_errors(mount, monkeypatch):
+    """Only a table absent at a commit is skipped: a git or IO failure
+    while reading a commit's snapshot raises, it does not drop its rows."""
+    from smallquery_spark.catalog.workspace import Workspace
+    from smallquery_spark.sources.gitws_datasource import GitWorkspaceStreamReader
+
+    reader = GitWorkspaceStreamReader(
+        {"mount": mount, "workspace": "sales", "table": "nation"}, None
+    )
+    commits = reader._history()
+
+    def broken(self, version="latest"):
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(Workspace, "snapshot", broken)
+    with pytest.raises(OSError, match="disk gone"):
+        reader._rows_for(commits)
 
 
 @pytest.fixture(scope="module")
@@ -469,16 +536,20 @@ def prop_mount(tmp_path_factory):
 def _query_and_reads(draw):
     """(SQL, the tables it reads). Table names also appear where nothing
     is read: in literals (after a raw string) and comments (next to
-    ``@``), as aliases, and as CTE names that shadow the table."""
+    ``@``), as aliases, and as CTE names that shadow the table. The main
+    relation takes every table-clause form (own alias, parentheses,
+    TABLESAMPLE, none) and its columns are qualified by its alias, or by
+    the table's name when it has none."""
     table = st.sampled_from(_PROP_TABLES)
     reads = set()
+    spellings = ("plain", "quoted", "at", "as_of")
 
-    def ref(in_scope):
+    def ref(in_scope, allowed=spellings):
         name = draw(table)
-        spelling = draw(st.sampled_from(("plain", "quoted", "at", "as_of")))
+        spelling = draw(st.sampled_from(allowed))
         if spelling in ("at", "as_of") or name not in in_scope:
             reads.add(name)
-        return {
+        return name, {
             "plain": name,
             "quoted": f"`{name}`",
             "at": f"{name}@v1",
@@ -498,24 +569,39 @@ def _query_and_reads(draw):
     for i, name in enumerate(ctes):
         body = "SELECT 1 AS k, 2 AS v"
         if draw(st.booleans()):
-            body = f"SELECT k, v FROM {ref(ctes[:i])}"
+            body = f"SELECT k, v FROM {ref(ctes[:i])[1]}"
         defs.append(f"{name} AS ({body})")
     with_ = f"WITH {', '.join(defs)} " if defs else ""
     alias = draw(table)
+    name, main = ref(ctes)
+    main, qual = draw(st.sampled_from((
+        (f"{main} AS {alias}", alias),
+        (f"{main} {alias}", alias),
+        (f"({main}) {alias}", alias),
+        (f"{main} TABLESAMPLE (100 PERCENT) {alias}", alias),
+        (f"({main}) TABLESAMPLE (100 PERCENT) {alias}", alias),
+        (f"{main} TABLESAMPLE (100 PERCENT)", name),
+        (main, name),
+    )))
     # a raw string ending in a backslash: it ends at that quote in Spark's
     # lexer, so the next literal's `@` stays inside a literal
     raw = draw(st.sampled_from(("", "r'C:\\' AS p, ")))
     lit = f"{raw}'{draw(table)}@v1 -- {draw(table)} /* {draw(table)} */'"
     pred = draw(st.sampled_from((
-        f" WHERE {alias}.k IN (SELECT k FROM {{}})",
-        " WHERE EXISTS (SELECT 1 FROM {} WHERE k > 0)",
+        " WHERE {q}.k IN (SELECT k FROM {r})",
+        " WHERE EXISTS (SELECT 1 FROM {r} WHERE k > 0)",
+        " WHERE EXISTS (TABLE {t})",
         "",
     )))
-    pred = pred.format(ref(ctes)) if pred else ""
-    sql = (
-        f"{noise()}{with_}SELECT {lit} AS s, count(*) AS n {noise()}"
-        f"FROM {ref(ctes)} AS {alias}{pred}"
-    )
+    if pred:
+        tbl = ref(ctes, ("plain", "quoted"))[1] if "{t}" in pred else ""
+        rel = ref(ctes)[1] if "{r}" in pred else ""
+        pred = pred.format(q=qual, r=rel, t=tbl)
+    select = f"SELECT {lit} AS s, count(*) AS n, max({qual}.k) AS m {noise()}"
+    sql = draw(st.sampled_from((
+        f"{noise()}{with_}{select}FROM {main}{pred}",
+        f"{noise()}{with_}FROM {main} {select}{pred}",
+    )))
     return sql, reads
 
 
@@ -523,7 +609,7 @@ def _query_and_reads(draw):
 @given(case=_query_and_reads())
 def test_sql_reads_exactly_the_referenced_tables(prop_mount, spark, case):
     """Engine.sql calls read_any for each table the query reads and for
-    nothing else."""
+    nothing else, and the query analyzes."""
     from unittest import mock
 
     from smallquery_spark import engine as engine_mod
@@ -537,8 +623,9 @@ def test_sql_reads_exactly_the_referenced_tables(prop_mount, spark, case):
         return real(spark_, path, **kw)
 
     with mock.patch.object(engine_mod, "read_any", recording):
-        eng.sql(sql, workspace="ws")
+        df = eng.sql(sql, workspace="ws")
     assert set(read) == reads, sql
+    assert df.columns[-3:] == ["s", "n", "m"], sql
 
 
 def test_long_identifier_before_many_at_signs_binds_fast(prop_mount, spark):
