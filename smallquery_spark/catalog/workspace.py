@@ -7,14 +7,22 @@ Reference parity (all citations into /root/reference):
   commit-id prefix, default ``"latest"`` meaning HEAD
   (src/http_server.rs:106-110, 154-165).
 - Resolution order is short ref FIRST, commit prefix SECOND
-  (src/http_server.rs:154-165) — preserved here exactly.
+  (src/http_server.rs:154-165) — preserved here exactly: branch, then
+  tag, then any commit expression (a prefix or a full id). One
+  ``git cat-file --batch-check`` process tries all of them, fed on
+  stdin, so no version text reaches git's argv. Every version peels to
+  a commit (``main:file`` or ``main^{tree}`` names none), and a version
+  holding a control character is rejected before git runs; either way
+  it raises ``VersionNotFound``.
 - A version is materialized by checking the resolved commit's tree out
   into a working directory (src/http_server.rs:125-134, 169-200). The
   reference creates a fresh random temp dir per request and never cleans
   it up (TODO at src/http_server.rs:133); we instead keep a
   content-addressed snapshot cache keyed by the resolved commit id, so a
   given (workspace, commit) is checked out at most once per process and
-  concurrent readers share it.
+  concurrent readers share it. A snapshot's directory is named by its
+  commit id (:func:`snapshot_commit`), so a read that took a snapshot
+  knows its commit without resolving the version again.
 - Paths inside a workspace are sanitized by dropping ``.``/``..``
   components and leading separators; empty means root
   (src/core.rs:30-46). Ported in :func:`sanitize_path`.
@@ -36,12 +44,18 @@ from __future__ import annotations
 
 import os
 import pathlib
+import re
+import shutil
 import subprocess
 import threading
 
 from smallquery_spark.errors import PathNotFound, VersionNotFound, WorkspaceNotFound
 
 LATEST = "latest"
+
+# No ref or commit expression holds a control character, and a newline
+# would split resolve_version's batch input into extra lines.
+_CONTROL = re.compile(r"[\x00-\x1f\x7f]")
 
 
 def sanitize_path(path: str) -> str:
@@ -67,14 +81,32 @@ def sanitize_path(path: str) -> str:
     return "/".join(parts)
 
 
-def _git(repo: str, *args: str) -> str:
+def _git(repo: str, *args: str, input: str | None = None) -> str:
     out = subprocess.run(
         ["git", "-C", repo, *args],
+        input=input,
         capture_output=True,
         text=True,
         check=True,
     )
     return out.stdout.strip()
+
+
+def publish(dest: str, write) -> None:
+    """Create directory ``dest`` by ``write(tmp)`` into a private temporary
+    path (per process and thread) and one atomic rename, so readers see
+    ``dest`` absent or complete. ``dest`` is content-addressed: a writer
+    that loses the race discards its copy, which holds the same files."""
+    tmp = f"{dest}.tmp.{os.getpid()}.{threading.get_ident()}"
+    try:
+        write(tmp)
+        try:
+            os.rename(tmp, dest)
+        except OSError:
+            if not os.path.isdir(dest):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # -- reads inside a materialized snapshot directory ------------------------
@@ -84,6 +116,11 @@ def _git(repo: str, *args: str) -> str:
 # Table lookup order: the first of these that exists at the snapshot root,
 # as a file or as a Spark-written directory, is the table.
 TABLE_EXTENSIONS = (".parquet", ".csv", ".jsonl", ".json")
+
+
+def snapshot_commit(snap: str) -> str:
+    """Commit id of snapshot dir ``snap``: the directory's name."""
+    return os.path.basename(snap)
 
 
 def snapshot_path(snap: str, path: str) -> str:
@@ -103,6 +140,14 @@ def find_table(snap: str, table: str) -> str | None:
         if os.path.exists(full):
             return full
     return None
+
+
+def snapshot_table(snap: str, table: str) -> str:
+    """:func:`find_table`, raising ``PathNotFound`` for a missing table."""
+    path = find_table(snap, table)
+    if path is None:
+        raise PathNotFound(table)
+    return path
 
 
 def read_snapshot_file(snap: str, path: str) -> str:
@@ -142,33 +187,33 @@ class Workspace:
     # -- version resolution (reference A1, http_server.rs:154-165) --------
 
     def resolve_version(self, version: str = LATEST) -> str:
-        """Resolve a version string to a full commit id.
+        """Resolve a version string to a full commit id, in one
+        ``git cat-file --batch-check`` process.
 
-        Order matters and mirrors the reference: (1) ``latest`` → HEAD;
-        (2) short ref name (branch/tag); (3) commit-id prefix.
+        ``latest`` is HEAD; any other version is tried as a branch, then
+        a tag, then a commit expression (prefix or full id): the
+        reference's order. Each is peeled to a commit (``^{commit}``) and
+        the first that names one wins, so a blob, tree or ``main:file``
+        raises ``VersionNotFound``, as does a version holding a control
+        character (before git runs).
         """
+        if _CONTROL.search(version):
+            raise VersionNotFound(version)
         if version == LATEST:
-            try:
-                return _git(self.repo_dir, "rev-parse", "HEAD")
-            except subprocess.CalledProcessError as e:
-                raise VersionNotFound(version) from e
-        # (2) ref short name first
-        try:
-            return _git(
-                self.repo_dir, "rev-parse", "--verify", f"refs/heads/{version}"
-            )
-        except subprocess.CalledProcessError:
-            pass
-        try:
-            return _git(self.repo_dir, "rev-parse", "--verify", f"refs/tags/{version}^{{commit}}")
-        except subprocess.CalledProcessError:
-            pass
-        # (3) commit prefix
-        try:
-            resolved = _git(self.repo_dir, "rev-parse", "--verify", f"{version}^{{commit}}")
-            return resolved
-        except subprocess.CalledProcessError as e:
-            raise VersionNotFound(version) from e
+            names = ["HEAD"]
+        else:
+            names = [f"refs/heads/{version}", f"refs/tags/{version}", version]
+        out = _git(
+            self.repo_dir, "cat-file", "--batch-check",
+            input="".join(f"{name}^{{commit}}\n" for name in names),
+        )
+        for line in out.splitlines():
+            # a found object is "<sha> commit <size>"; a miss echoes the
+            # input, which ends in "^{commit}", then "missing"
+            fields = line.split(" ")
+            if len(fields) == 3 and fields[1] == "commit":
+                return fields[0]
+        raise VersionNotFound(version)
 
     # -- snapshot materialization (reference A2, http_server.rs:169-200) ---
 
@@ -177,47 +222,29 @@ class Workspace:
 
         Content-addressed by commit id (fixes the reference's
         leak-a-temp-dir-per-request TODO, http_server.rs:133). Returns the
-        snapshot directory path.
+        snapshot directory path; its name is the commit
+        (:func:`snapshot_commit`).
         """
         commit = self.resolve_version(version)
         dest = os.path.join(self._cache_dir, self.name, commit)
-        if os.path.isdir(dest) and os.listdir(dest):
-            return dest
-        with self._lock:
-            if os.path.isdir(dest) and os.listdir(dest):
-                return dest
-            # Unique tmp per process+thread: concurrent PROCESSES sharing
-            # a cache dir must never interleave extractions into one tmp
-            # path (and the loser of the publish race must not crash on
-            # rename-onto-nonempty-dir). Readers only ever see `dest`
-            # either absent or complete — os.rename is atomic.
-            tmp = f"{dest}.tmp.{os.getpid()}.{threading.get_ident()}"
-            os.makedirs(tmp, exist_ok=True)
-            try:
-                # `git archive | tar -x` materializes the tree without
-                # touching the repo's worktree/index — safe under
-                # concurrency (a writer committing concurrently only
-                # moves refs; the commit object itself is immutable).
-                archive = subprocess.run(
-                    ["git", "-C", self.repo_dir, "archive", commit],
-                    capture_output=True,
-                    check=True,
-                )
-                subprocess.run(
-                    ["tar", "-x", "-C", tmp], input=archive.stdout, check=True
-                )
-                try:
-                    os.rename(tmp, dest)
-                except OSError:
-                    # another process published this commit first — its
-                    # snapshot is identical (content-addressed by commit)
-                    if not (os.path.isdir(dest) and os.listdir(dest)):
-                        raise
-            finally:
-                if os.path.isdir(tmp):
-                    import shutil
 
-                    shutil.rmtree(tmp, ignore_errors=True)
+        def extract(tmp: str) -> None:
+            # `git archive | tar -x` materializes the tree without
+            # touching the repo's worktree/index — safe under
+            # concurrency (a writer committing concurrently only
+            # moves refs; the commit object itself is immutable).
+            os.makedirs(tmp, exist_ok=True)
+            archive = subprocess.run(
+                ["git", "-C", self.repo_dir, "archive", commit],
+                capture_output=True,
+                check=True,
+            )
+            subprocess.run(["tar", "-x", "-C", tmp], input=archive.stdout, check=True)
+
+        if not os.path.isdir(dest):
+            with self._lock:
+                if not os.path.isdir(dest):
+                    publish(dest, extract)
         return dest
 
     # -- reads (reference A3/A4, http_server.rs:249-265) -------------------
@@ -233,10 +260,7 @@ class Workspace:
     def table_path(self, table: str, version: str = LATEST) -> str:
         """Resolve a table name to a concrete data path in the snapshot
         (lookup rule: :func:`find_table`)."""
-        path = find_table(self.snapshot(version), table)
-        if path is None:
-            raise PathNotFound(table)
-        return path
+        return snapshot_table(self.snapshot(version), table)
 
     # -- bucketed materialization (engine feature, VERDICT r5 item 5) ------
 
@@ -266,11 +290,17 @@ class Workspace:
         )
         from smallquery_spark.sources import read_any
 
-        commit = self.resolve_version(version)
-        path = self.table_path(table, version)
-        df = read_any(spark, path)
-        identity = f"{self.name}@{commit}:{sanitize_path(table)}"
+        snap = self.snapshot(version)
+        df = read_any(spark, snapshot_table(snap, table))
+        identity = f"{self.name}@{snapshot_commit(snap)}:{sanitize_path(table)}"
         return _materialize(spark, df, identity, key, n_buckets)
+
+
+def _is_repo(path: str) -> bool:
+    """Whether ``path`` is a git repository: a worktree or a bare repo."""
+    return os.path.isdir(os.path.join(path, ".git")) or os.path.isfile(
+        os.path.join(path, "HEAD")
+    )
 
 
 class VersionedCatalog:
@@ -294,9 +324,7 @@ class VersionedCatalog:
             if name in self._workspaces:
                 return self._workspaces[name]
         repo_dir = os.path.join(self.mount, sanitize_path(name))
-        if not os.path.isdir(os.path.join(repo_dir, ".git")) and not os.path.isfile(
-            os.path.join(repo_dir, "HEAD")
-        ):
+        if not _is_repo(repo_dir):
             raise WorkspaceNotFound(name)
         ws = Workspace(name, repo_dir, self.cache_dir)
         with self._lock:
@@ -306,14 +334,10 @@ class VersionedCatalog:
     def list_workspaces(self) -> list[str]:
         if not os.path.isdir(self.mount):
             return []
-        out = []
-        for entry in sorted(os.listdir(self.mount)):
-            full = os.path.join(self.mount, entry)
-            if os.path.isdir(os.path.join(full, ".git")) or os.path.isfile(
-                os.path.join(full, "HEAD")
-            ):
-                out.append(entry)
-        return out
+        return [
+            entry for entry in sorted(os.listdir(self.mount))
+            if _is_repo(os.path.join(self.mount, entry))
+        ]
 
 
 def write_table_version(

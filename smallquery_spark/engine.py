@@ -4,8 +4,8 @@ Entry points mirroring the reference's lifecycle (SURVEY.md §3.4):
 
 1. ``engine.sql(query, workspace=..., version=...)`` — bind the query's
    tables to one workspace snapshot, hand the query to Catalyst.
-2. ``engine.table(name)`` — DataFrame-builder entry; thin resolution then
-   plain PySpark DataFrame.
+2. ``engine.table(name, workspace=...)`` — DataFrame-builder entry; thin
+   resolution then plain PySpark DataFrame.
 3. ``engine.write_table(df, name, ...)`` — commit a small result as a new
    version of a workspace table.
 
@@ -59,14 +59,13 @@ directory, so all built-in optimizations apply unchanged.
 
 from __future__ import annotations
 
-import os
 import re
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
 from smallquery_spark.catalog import VersionedCatalog
-from smallquery_spark.catalog.workspace import LATEST, find_table
+from smallquery_spark.catalog.workspace import LATEST, find_table, snapshot_commit
 from smallquery_spark.errors import DeniedCall, TableNotFound, UnsupportedRelation
 from smallquery_spark.sources import read_any, read_key
 
@@ -167,13 +166,13 @@ def _single_name(relation) -> str:
 
 
 class Engine:
-    """A SparkSession bound to an optional workspace mount. Workspace
-    tables are read through parquet twins and bound to SQL as views
-    registered once (module docstring)."""
+    """A SparkSession bound to a workspace mount. Workspace tables are read
+    through parquet twins and bound to SQL as views registered once
+    (module docstring)."""
 
-    def __init__(self, spark: SparkSession, workspace_mount: str | None = None):
+    def __init__(self, spark: SparkSession, workspace_mount: str):
         self.spark = spark
-        self.catalog = VersionedCatalog(workspace_mount) if workspace_mount else None
+        self.catalog = VersionedCatalog(workspace_mount)
         # Temp views are session-global, and each is named by what it
         # reads (_view), so a name never changes meaning. This lock guards
         # only a view's first registration; queries are analyzed and run
@@ -183,27 +182,11 @@ class Engine:
 
     # -- resolution --------------------------------------------------------
 
-    def _require_catalog(self) -> VersionedCatalog:
-        if self.catalog is None:
-            raise ValueError("engine created without a workspace mount")
-        return self.catalog
-
-    def table(
-        self,
-        name: str,
-        workspace: str | None = None,
-        version: str = LATEST,
-    ) -> DataFrame:
-        """Load a (possibly versioned) table as a DataFrame.
-
-        With a workspace: resolve ``version`` (git ref → commit, reference
-        http_server.rs:154-165), materialize the snapshot, read the
-        table's file. Without: read ``name`` as a plain path.
-        """
-        if workspace is not None:
-            ws = self._require_catalog().workspace(workspace)
-            return self._read(ws.table_path(name, version))
-        return read_any(self.spark, name)
+    def table(self, name: str, workspace: str, version: str = LATEST) -> DataFrame:
+        """Load a (possibly versioned) table as a DataFrame: resolve
+        ``version`` (git ref → commit, reference http_server.rs:154-165),
+        materialize the snapshot, read the table's file."""
+        return self._read(self.catalog.workspace(workspace).table_path(name, version))
 
     def _read(self, path: str) -> DataFrame:
         """The one reader of a snapshot table, behind every spelling: a
@@ -212,26 +195,19 @@ class Engine:
 
     # -- SQL entry ---------------------------------------------------------
 
-    def sql(
-        self,
-        query: str,
-        workspace: str | None = None,
-        version: str = LATEST,
-    ) -> DataFrame:
+    def sql(self, query: str, workspace: str, version: str = LATEST) -> DataFrame:
         """Run SQL against versioned workspace tables.
 
-        With a workspace, ``query`` must be one query; each table it reads
-        is bound (module docstring) from the snapshot at ``version``
-        (default ``latest`` = HEAD, reference http_server.rs:106-110), or
-        at ``ver`` for ``tbl@ver`` / ``tbl VERSION AS OF 'ver'``. Raises
-        ``ParseException``, ``TableNotFound`` (no such table or CTE),
-        ``UnsupportedRelation`` or ``DeniedCall``. Without a workspace,
-        names must already be registered views.
+        ``query`` must be one query; each table it reads is bound (module
+        docstring) from the snapshot at ``version`` (default ``latest`` =
+        HEAD, reference http_server.rs:106-110), or at ``ver`` for
+        ``tbl@ver`` / ``tbl VERSION AS OF 'ver'``. Raises
+        ``ParseException``, ``VersionNotFound`` (a version naming no
+        commit), ``TableNotFound`` (no such table or CTE),
+        ``UnsupportedRelation`` or ``DeniedCall``.
         """
-        if workspace is not None:
-            ws = self._require_catalog().workspace(workspace)
-            query = self._bind(query, ws, version)
-        return self.spark.sql(query)
+        ws = self.catalog.workspace(workspace)
+        return self.spark.sql(self._bind(query, ws, version))
 
     def _view(self, table: str, path: str) -> str:
         """Name of the temp view that reads ``table`` at ``path``,
@@ -251,7 +227,9 @@ class Engine:
         text, plan = _parse_query(self.spark, query)
         vet = _MAY_DENY.search(text) is not None
         no_alias = _after_table(self.spark, text)
-        snap = ws.snapshot(version)
+        # version -> its snapshot: a query resolves each version it names
+        # once, so two refs to one version read one commit
+        snaps = {version: ws.snapshot(version)}
         paths: dict[str, str] = {}  # ref (tbl, or tbl@<commit>) -> data path
         binds: list[tuple[int, int, str, str]] = []  # start, stop, table, path
         aliases: list[tuple[int, str]] = []  # offset, table
@@ -293,15 +271,17 @@ class Engine:
             if kind == "UnresolvedRelation":
                 name = _single_name(node)
                 if name.lower() not in ctes:
-                    bind(node, parent, node, name, snap)
+                    bind(node, parent, node, name, snaps[version])
             elif kind == "RelationTimeTravel":
                 rel = node.relation()
                 if node.version().isEmpty() or rel.nodeName() != "UnresolvedRelation":
                     raise UnsupportedRelation("only VERSION AS OF '<ref>' time travel")
-                snap_at = ws.snapshot(node.version().get())
+                at = node.version().get()
+                if at not in snaps:
+                    snaps[at] = ws.snapshot(at)
                 # refs to one commit share a ref name (its snapshot dir's)
-                ref = f"{_single_name(rel)}@{os.path.basename(snap_at)}"
-                bind(node, parent, rel, ref, snap_at)
+                ref = f"{_single_name(rel)}@{snapshot_commit(snaps[at])}"
+                bind(node, parent, rel, ref, snaps[at])
             elif kind == "PlanWithUnresolvedIdentifier":
                 raise UnsupportedRelation("IDENTIFIER(...) is not a workspace table")
             elif kind == "UnresolvedWith":
@@ -341,5 +321,5 @@ class Engine:
         returns the commit id (see catalog.workspace.write_table_version)."""
         from smallquery_spark.catalog.workspace import write_table_version
 
-        ws = self._require_catalog().workspace(workspace)
+        ws = self.catalog.workspace(workspace)
         return write_table_version(ws, df, table, message, tag=tag)

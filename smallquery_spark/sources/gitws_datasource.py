@@ -15,9 +15,11 @@ resolves the version through the same ``VersionedCatalog`` (reference
 semantics: ref-name before commit-prefix, http_server.rs:154-165),
 materializes the snapshot, and serves the table's rows.
 
-Execution shape: version resolution happens DRIVER-side at planning
-(schema() / partitions()); executors receive only (snapshot file path,
-row-group slice) partitions and read with pyarrow — so reads scale out
+Execution shape: version resolution happens DRIVER-side at planning,
+once per data source instance (the first of schema() and reader()), so
+the declared schema, the rows and their ``commit`` tag all come from
+one commit; executors receive only (snapshot file path, row-group
+slice) partitions and read with pyarrow — so reads scale out
 per row-group like a native parquet scan. Every table form
 ``find_table`` returns is read: a parquet, CSV or JSON-lines file, or a
 Spark-written directory of them. Each CSV or JSON file reads as one
@@ -26,6 +28,7 @@ partition (header files don't split safely without an index).
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Iterator
 
@@ -88,35 +91,18 @@ class _Slice(InputPartition):
         self.commit = commit
 
 
-def _resolve(options) -> str:
-    """(mount, workspace, table, version) → table path, at planning time."""
-    from smallquery_spark.catalog import VersionedCatalog
-
-    mount = options.get("mount")
-    workspace = options.get("workspace")
-    table = options.get("table")
-    version = options.get("version") or "latest"
-    if not (mount and workspace and table):
-        raise ValueError("gitws requires options: mount, workspace, table")
-    ws = VersionedCatalog(mount).workspace(workspace)
-    return ws.table_path(table, version)
-
-
 class GitWorkspaceReader(DataSourceReader):
-    def __init__(self, options, schema):
-        self.path = _resolve(options)
-        self._schema = schema
+    """Reads the table at ``path`` in snapshot dir ``snap``; with
+    ``tagcommit``, each row is tagged with the snapshot's commit."""
+
+    def __init__(self, snap: str, path: str, tagcommit: bool):
+        from smallquery_spark.catalog.workspace import snapshot_commit
+
+        self.path = path
         # every file reads with the table's schema (the part files of one
         # CSV directory could otherwise infer different types)
-        self._arrow_schema = _dataset(self.path).schema
-        self._commit = None
-        if _tagcommit(options):
-            from smallquery_spark.catalog import VersionedCatalog
-
-            ws = VersionedCatalog(options.get("mount")).workspace(
-                options.get("workspace")
-            )
-            self._commit = ws.resolve_version(options.get("version") or "latest")
+        self._arrow_schema = _dataset(path).schema
+        self._commit = snapshot_commit(snap) if tagcommit else None
 
     def partitions(self):
         import pyarrow.dataset as ds
@@ -148,6 +134,24 @@ class GitWorkspaceReader(DataSourceReader):
 
 
 class GitWorkspaceDataSource(DataSource):
+    @functools.cached_property
+    def _table(self) -> tuple[str, str]:
+        """(snapshot dir, table path) of the options' table, resolved once
+        by the first of schema() and reader(): Spark pickles this instance
+        after schema() and plans the read with it, so the schema, the rows
+        and their commit tag all come from one commit."""
+        from smallquery_spark.catalog import VersionedCatalog
+        from smallquery_spark.catalog.workspace import snapshot_table
+
+        mount = self.options.get("mount")
+        workspace = self.options.get("workspace")
+        table = self.options.get("table")
+        version = self.options.get("version") or "latest"
+        if not (mount and workspace and table):
+            raise ValueError("gitws requires options: mount, workspace, table")
+        snap = VersionedCatalog(mount).workspace(workspace).snapshot(version)
+        return snap, snapshot_table(snap, table)
+
     @classmethod
     def name(cls) -> str:
         return "gitws"
@@ -155,7 +159,7 @@ class GitWorkspaceDataSource(DataSource):
     def schema(self):
         from pyspark.sql.types import StringType, StructField, StructType
 
-        base = from_arrow_schema(_dataset(_resolve(self.options)).schema)
+        base = from_arrow_schema(_dataset(self._table[1]).schema)
         if _tagcommit(self.options):
             return StructType(
                 list(base.fields) + [StructField("commit", StringType())]
@@ -163,7 +167,7 @@ class GitWorkspaceDataSource(DataSource):
         return base
 
     def reader(self, schema):
-        return GitWorkspaceReader(self.options, schema)
+        return GitWorkspaceReader(*self._table, _tagcommit(self.options))
 
     def simpleStreamReader(self, schema):
         return GitWorkspaceStreamReader(self.options, schema)

@@ -11,11 +11,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from smallquery_spark.catalog.workspace import publish
 
 # The driver fixture tables (FIXTURES.md).
 TABLES = (
@@ -142,22 +142,6 @@ def read_any(
     if twin is None or not df.schema.fields:  # parquet cannot hold no columns
         return df
     if not os.path.isdir(twin):
-        _publish(df, twin)
+        publish(twin, df.write.parquet)
     return spark.read.schema(df.schema).parquet(twin)
 
-
-def _publish(df: DataFrame, dest: str) -> None:
-    """Write ``df`` as parquet directory ``dest`` via a private temporary
-    directory and an atomic rename, so readers see ``dest`` absent or
-    complete; a writer that loses the race discards its copy (the twin is
-    content-addressed, so both copies hold the same rows)."""
-    tmp = f"{dest}.tmp.{os.getpid()}.{threading.get_ident()}"
-    try:
-        df.write.parquet(tmp)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            if not os.path.isdir(dest):
-                raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -270,7 +270,7 @@ def test_bucketed_rollup_workload_no_exchange(spark):
     assert "Exchange" not in plan
 
 
-def test_catalog_bucketed_join_no_exchange(spark):
+def test_catalog_bucketed_join_no_exchange(spark, monkeypatch):
     """The CATALOG bucketing API (Workspace.materialize_bucketed) yields
     the same zero-Exchange join as the hand-rolled tables, and the
     content-addressed name is stable across calls (layout paid once per
@@ -289,7 +289,17 @@ def test_catalog_bucketed_join_no_exchange(spark):
     mount = os.path.join(_WORK, tag, "bktws_mount")
     eng = Engine(spark, workspace_mount=mount)
     ws = eng.catalog.workspace("facts")
+    resolves = []
+    resolve = ws.resolve_version
+
+    def counting(version="latest"):
+        resolves.append(version)
+        return resolve(version)
+
+    monkeypatch.setattr(ws, "resolve_version", counting)
     ot = ws.materialize_bucketed(spark, "orders", "o_orderkey", 8)
+    # the table is read from, and named by, one resolution of the version
+    assert resolves == ["latest"]
     # content-addressed: the second call must return the SAME table
     assert ot == ws.materialize_bucketed(spark, "orders", "o_orderkey", 8)
     lt = ws.materialize_bucketed(spark, "lineitem", "l_orderkey", 8)

@@ -86,6 +86,12 @@ def test_errors(server):
     assert status == 404 and "not found" in body
     status, body = _get(f"{server}/workspaces/demo?version=zzz")
     assert status == 404 and "version not found" in body
+    # a blob, a control character and a tree name no commit
+    for version in ("main:nums.csv", "%00", "main%5E%7Btree%7D"):
+        for route in ("", "/query?sql=SELECT+k+FROM+nums&"):
+            url = f"{server}/workspaces/demo{route or '?'}version={version}"
+            status, body = _get(url)
+            assert status == 404 and "version not found" in body, url
 
 
 def test_sql_query_endpoint(server):

@@ -113,6 +113,176 @@ def test_version_resolution_and_latest(mount):
         ws.resolve_version("does-not-exist")
 
 
+def _head(repo) -> str:
+    return subprocess.run(
+        ["git", "-C", repo, "rev-parse", "HEAD"],
+        check=True, capture_output=True, text=True,
+    ).stdout.strip()
+
+
+def _commit(repo, text: str) -> str:
+    """Write ``nation.csv`` holding ``text``, commit it; the commit id."""
+    (repo / "nation.csv").write_text(text)
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-m", text.splitlines()[-1])
+    return _head(repo)
+
+
+@pytest.fixture
+def fresh(tmp_path):
+    """A fresh workspace ``ws``: commit ``a`` (lightweight tag ``dup``,
+    annotated tag ``ann``), then commit ``b`` on ``main`` and on a branch
+    ``dup``. Returns (mount, repo, a, b)."""
+    repo = tmp_path / "ws"
+    repo.mkdir()
+    _git(repo, "init", "-b", "main")
+    a = _commit(repo, "n_nationkey,n_name\n0,ALGERIA\n")
+    _git(repo, "tag", "dup")
+    _git(repo, "tag", "-a", "ann", "-m", "annotated")
+    b = _commit(repo, "n_nationkey,n_name\n0,ALGERIA\n1,ARGENTINA\n")
+    _git(repo, "branch", "dup")
+    return str(tmp_path), repo, a, b
+
+
+def test_version_forms_resolve_to_commits(fresh):
+    """A branch wins over a tag of its name, an annotated tag peels to its
+    commit, and a commit prefix and a full id each resolve."""
+    mount, _repo, a, b = fresh
+    ws = VersionedCatalog(mount).workspace("ws")
+    assert ws.resolve_version("dup") == b
+    assert ws.resolve_version("ann") == a
+    assert ws.resolve_version(a[:7]) == a
+    assert ws.resolve_version(a) == a
+    assert ws.resolve_version() == ws.resolve_version("main") == b
+
+
+@pytest.mark.parametrize(
+    "version", ["main:nation.csv", "main^{tree}", "v1\nmain", "\x00", "main\x7f"]
+)
+def test_version_naming_no_commit_is_not_found(fresh, version):
+    """A blob, a tree or a version holding a control character (a newline
+    would add lines to the batch input) names no commit."""
+    ws = VersionedCatalog(fresh[0]).workspace("ws")
+    with pytest.raises(VersionNotFound):
+        ws.resolve_version(version)
+    with pytest.raises(VersionNotFound):
+        ws.snapshot(version)
+
+
+def test_latest_of_repo_without_commits_is_not_found(tmp_path):
+    (tmp_path / "empty").mkdir()
+    _git(tmp_path / "empty", "init", "-b", "main")
+    with pytest.raises(VersionNotFound):
+        VersionedCatalog(str(tmp_path)).workspace("empty").resolve_version()
+
+
+class _CountingSubprocess:
+    """``subprocess`` as the catalog module sees it, recording each run."""
+
+    def __init__(self):
+        self.runs: list[list[str]] = []
+
+    def __getattr__(self, name):
+        return getattr(subprocess, name)
+
+    def run(self, args, *a, **k):
+        self.runs.append(args)
+        return subprocess.run(args, *a, **k)
+
+
+def test_resolve_version_starts_one_process(fresh, monkeypatch):
+    from smallquery_spark.catalog import workspace as ws_mod
+
+    mount, _repo, a, b = fresh
+    ws = VersionedCatalog(mount).workspace("ws")
+    counting = _CountingSubprocess()
+    monkeypatch.setattr(ws_mod, "subprocess", counting)
+    for version, want in (
+        ("latest", b), ("main", b), ("ann", a), (a[:7], a), (a, a)
+    ):
+        counting.runs.clear()
+        assert ws.resolve_version(version) == want
+        assert len(counting.runs) == 1, (version, counting.runs)
+
+
+def test_gitws_read_resolves_once(mount, monkeypatch):
+    """A tagcommit gitws read resolves its version once: its schema, its
+    rows and their commit tag all come from that snapshot."""
+    from smallquery_spark.catalog.workspace import Workspace
+    from smallquery_spark.sources.gitws_datasource import GitWorkspaceDataSource
+
+    calls = []
+    resolve = Workspace.resolve_version
+
+    def counting(self, version="latest"):
+        calls.append(version)
+        return resolve(self, version)
+
+    monkeypatch.setattr(Workspace, "resolve_version", counting)
+    source = GitWorkspaceDataSource(
+        {"mount": mount, "workspace": "sales", "table": "nation",
+         "version": "v1", "tagcommit": "true"}
+    )
+    reader = source.reader(source.schema())
+    assert calls == ["v1"]
+    assert reader._commit == resolve(VersionedCatalog(mount).workspace("sales"), "v1")
+
+
+def test_gitws_read_is_of_one_commit(fresh, monkeypatch):
+    """A commit landing right after a gitws read's snapshot changes
+    neither the read's columns nor the commit its rows are tagged with."""
+    from smallquery_spark.catalog.workspace import Workspace
+    from smallquery_spark.sources.gitws_datasource import GitWorkspaceDataSource
+
+    mount, repo, _a, b = fresh
+    snapshot = Workspace.snapshot
+    landed = []
+
+    def snapshot_then_commit(self, version="latest"):
+        snap = snapshot(self, version)
+        if not landed:
+            landed.append(_commit(repo, "n_nationkey,n_name,extra\n9,ZAMBIA,1\n"))
+        return snap
+
+    monkeypatch.setattr(Workspace, "snapshot", snapshot_then_commit)
+    source = GitWorkspaceDataSource(
+        {"mount": mount, "workspace": "ws", "table": "nation", "tagcommit": "true"}
+    )
+    schema = source.schema()
+    reader = source.reader(schema)
+    rows = [
+        row
+        for part in reader.partitions()
+        for batch in reader.read(part)
+        for row in batch.to_pylist()
+    ]
+    assert landed and landed[0] != b
+    assert schema.fieldNames() == ["n_nationkey", "n_name", "commit"]
+    assert all(list(r) == schema.fieldNames() for r in rows)
+    assert sorted((r["n_name"], r["commit"]) for r in rows) == [
+        ("ALGERIA", b), ("ARGENTINA", b)
+    ]
+
+
+def test_gitws_dataframe_reads_the_commit_it_was_loaded_at(fresh, spark):
+    """Spark hands the data source that computed a gitws DataFrame's schema
+    to its read: a commit landing between ``load()`` and ``collect()``
+    changes neither its columns nor its rows."""
+    from smallquery_spark.sources.gitws_datasource import GitWorkspaceDataSource
+
+    mount, repo, _a, b = fresh
+    spark.dataSource.register(GitWorkspaceDataSource)
+    df = (
+        spark.read.format("gitws").option("mount", mount).option("workspace", "ws")
+        .option("table", "nation").option("tagcommit", "true").load()
+    )
+    _commit(repo, "n_nationkey,n_name,extra\n9,ZAMBIA,1\n")
+    assert df.columns == ["n_nationkey", "n_name", "commit"]
+    assert sorted((r.n_name, r.commit) for r in df.collect()) == [
+        ("ALGERIA", b), ("ARGENTINA", b)
+    ]
+
+
 def test_snapshots_distinct_and_cached(mount):
     ws = VersionedCatalog(mount).workspace("sales")
     s1 = ws.snapshot("v1")
@@ -219,6 +389,31 @@ def test_version_as_of_sql(mount, spark):
         workspace="sales",
     ).collect()
     assert sorted(r["n_name"] for r in rows) == V1_NAMES
+
+
+def test_query_resolves_each_version_once(mount, spark, monkeypatch):
+    """A query resolves each version it names once, however many of its
+    refs name it, so they all read one commit."""
+    from smallquery_spark.catalog.workspace import Workspace
+    from smallquery_spark.engine import Engine
+
+    calls = []
+    resolve = Workspace.resolve_version
+
+    def counting(self, version="latest"):
+        calls.append(version)
+        return resolve(self, version)
+
+    eng = Engine(spark, workspace_mount=mount)
+    monkeypatch.setattr(Workspace, "resolve_version", counting)
+    df = eng.sql(
+        "SELECT a.n_name FROM nation@v1 a"
+        " JOIN nation VERSION AS OF 'v1' b USING (n_nationkey)"
+        " JOIN nation@latest c USING (n_nationkey)",
+        workspace="sales",
+    )
+    assert sorted(calls) == ["latest", "v1"]
+    assert sorted(r.n_name for r in df.collect()) == V1_NAMES
 
 
 def test_at_version_in_string_literal_untouched(mount, spark):
