@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smallquery_spark.session import scoped_confs
+
 
 def connected_components(
     nodes: DataFrame,
@@ -55,19 +57,11 @@ def connected_components(
     recompute the (possibly expensive) edge builder nor inherit the
     loop's suspended AQE / resized shuffle confs.
     """
-    spark = nodes.sparkSession
-    old_parts = None
+    confs = {"spark.sql.adaptive.enabled": "false"}
     if shuffle_partitions is not None:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    with scoped_confs(nodes.sparkSession, confs):
         return _cc_loop(nodes, edges, id_col, src, dst, max_iter)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _cc_loop(

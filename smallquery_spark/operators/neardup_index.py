@@ -35,7 +35,7 @@ at-rest side NEVER shuffles again after it is written:
 Epoch appends go through ``bucketBy(...).mode("append").saveAsTable``
 (one file per bucket per epoch — ``write_bucketed``'s pre-repartition).
 Exactly-once sits with the CALLER's epoch-commit protocol (the
-``_SUCCESS``-marked epoch dirs in queries/streaming_queries.py); a
+``_SUCCESS``-marked epoch dirs of streaming/runner.py); a
 crash between a table append and the marker can replay an append, which
 is harmless here: duplicate index rows only duplicate candidate pairs,
 and the pair pipeline dedups on (n_id, o_id) before checking.
@@ -268,7 +268,7 @@ class NearDupIndex:
         epoch-sized shuffle TO the id-bucketed hashes table (store side
         zero-Exchange). Disable only when ids are guaranteed unique
         across a run AND the caller has its own replay protection (the
-        epoch `_SUCCESS` markers in queries/streaming_queries.py)."""
+        epoch `_SUCCESS` markers of streaming/runner.py)."""
         idc = self.id_col
         if guard_existing and self.exists:
             # resolve through the BATCH's session (same staleness trap

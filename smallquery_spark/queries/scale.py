@@ -428,7 +428,7 @@ def c7_rollup_streaming_refresh(spark, sf_dir):
     of only the touched days."""
     import shutil
 
-    from smallquery_spark.streaming import events_stream
+    from smallquery_spark.streaming import drain, events_stream
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     base = os.path.join(_WORK, tag, "events_hourly_stream")
@@ -454,18 +454,12 @@ def c7_rollup_streaming_refresh(spark, sf_dir):
             .parquet(base)
         )
 
-    q = (
+    drain(
         hourly.writeStream.outputMode("complete")
         .foreachBatch(refresh)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        "c7_rollup_streaming_refresh",
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:
-            q.stop()
 
     roll = spark.read.parquet(base)
     return (

@@ -573,13 +573,11 @@ def b50_gitws_history_stream(spark, sf_dir):
     from smallquery_spark.catalog.workspace import _git
     from smallquery_spark.engine import Engine
     from smallquery_spark.sources.gitws_datasource import GitWorkspaceDataSource
+    from smallquery_spark.streaming import drain
 
     b05_versioned_scan(spark, sf_dir)  # ensure the git fixture exists
     mount = _workdir(sf_dir, "workspaces")
-    try:
-        spark.dataSource.register(GitWorkspaceDataSource)
-    except Exception:
-        pass  # already registered on this session
+    spark.dataSource.register(GitWorkspaceDataSource)
     sdf = (
         spark.readStream.format("gitws")
         .option("mount", mount)
@@ -589,18 +587,10 @@ def b50_gitws_history_stream(spark, sf_dir):
         .load()
     )
     qname = "gitws_hist_" + os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        sdf.writeStream.format("memory").queryName(qname).outputMode("append"),
+        qname,
     )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:
-            q.stop()
     got = spark.table(qname)
     per_commit = {
         r["commit"]: r["n"]

@@ -17,14 +17,19 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from smallquery_spark.queries.registry import query, t
+from smallquery_spark.session import scoped_confs
 from smallquery_spark.streaming import (
+    drain,
+    epoch_committed,
     events_stream,
     run_to_df,
     state_partitions_for,
 )
+from smallquery_spark.streaming.runner import _committed_epochs, _epoch_commit
 
 _DEC = "decimal(18,2)"
 
@@ -384,50 +389,12 @@ def b58_stream_stateful(spark, sf_dir):
     tags=("B59",),
 )
 def b59_foreach_batch(spark, sf_dir):
-    import tempfile
-
-    from smallquery_spark.queries.tmpdirs import prune_stale, register_cleanup
-
-    prune_stale("smallquery_stream_sink_")
-    root_dir = register_cleanup(
-        os.path.join(
-            tempfile.gettempdir(), f"smallquery_stream_sink_{os.getpid()}"
-        )
-    )
-    out_dir = os.path.join(root_dir, os.path.basename(sf_dir.rstrip("/")))
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(out_dir + "_ckpt", ignore_errors=True)
-
     sdf = (
         events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "signup")
         .select("event_id", "user_id", "value")
     )
-
-    def sink(batch_df, epoch_id):
-        # epoch_id-keyed idempotent append (see _epoch_commit): a replayed
-        # epoch after restart must not double-append its rows.
-        epoch_dir = os.path.join(out_dir, f"epoch_{epoch_id:010d}")
-        if os.path.exists(os.path.join(epoch_dir, "_SUCCESS")):
-            return
-        batch_df.write.mode("overwrite").parquet(epoch_dir)
-
-    q = (
-        sdf.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", os.path.join(out_dir + "_ckpt")
-        )
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
+    return run_to_df(sdf, "b59_foreach_batch", sink="files")
 
 
 @query(
@@ -699,35 +666,20 @@ def b68_state_store_reader(spark, sf_dir):
     ckpt = register_cleanup(tempfile.mkdtemp(prefix="smallquery_state_reader_"))
     sdf = events_stream(spark, sf_dir)
     agg = sdf.groupBy("user_id").agg(F.count("*").alias("n_events"))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # size the state partitioning like every other stateful query
     # (r15): each partition is a state-store instance to write AND a
     # state file to read back — the measured small-source tier applies
     # to both sides of this query
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_partitions_for(sf_dir))
-    )
-    try:
-        q = (
+    with scoped_confs(
+        spark, {"spark.sql.shuffle.partitions": str(state_partitions_for(sf_dir))}
+    ):
+        drain(
             agg.writeStream.format("memory")
             .queryName("b68_sink")
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            "b68_sink",
         )
-        try:
-            finished = q.awaitTermination(120)
-            if not finished:
-                raise TimeoutError(
-                    "b68: stream did not drain within 120s; refusing to "
-                    "read a partially-written checkpoint"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     st = spark.read.format("statestore").load(ckpt)
     return st.select(
         F.col("key.user_id").alias("user_id"),
@@ -771,42 +723,6 @@ def _stage_doc_slices(spark, df, k: int, prefix: str, id_col: str = "doc_id"):
     for i, p in enumerate(parts):
         os.utime(p, (base + 10 * i, base + 10 * i))
     return root, out
-
-
-def _committed_epochs(index_dir: str) -> list[str]:
-    """Epoch subdirectories of an at-rest index whose ``_SUCCESS`` marker
-    landed. foreachBatch is at-least-once per epoch: after a restart the
-    last uncommitted epoch replays, so readers must see only COMMITTED
-    epochs (a partial epoch's files would otherwise anti-join the
-    replaying batch against its own half-written output)."""
-    import glob as _glob
-
-    return sorted(
-        d
-        for d in _glob.glob(os.path.join(index_dir, "epoch_*"))
-        if os.path.exists(os.path.join(d, "_SUCCESS"))
-    )
-
-
-def _epoch_commit(df, index_dir: str, epoch_id: int) -> None:
-    """Idempotent epoch append: each epoch writes its own subdirectory
-    (mode=overwrite, so a crashed partial write is replaced wholesale on
-    replay); an epoch whose ``_SUCCESS`` already exists is skipped. This
-    is the epoch_id-keyed discipline Spark's foreachBatch contract
-    requires for exactly-once sinks."""
-    df.write.mode("overwrite").parquet(
-        os.path.join(index_dir, f"epoch_{epoch_id:010d}")
-    )
-
-
-def _drain(writer, name: str, timeout: int = 300):
-    q = writer.trigger(availableNow=True).start()
-    try:
-        if not q.awaitTermination(timeout):
-            raise TimeoutError(f"{name}: stream did not drain in {timeout}s")
-    finally:
-        if q.isActive:
-            q.stop()
 
 
 @query(
@@ -861,8 +777,7 @@ def c11_streaming_dedup(spark, sf_dir):
 
     def _ingest(batch_df, epoch_id):
         sess = batch_df.sparkSession
-        epoch_dir = os.path.join(index_dir, f"epoch_{epoch_id:010d}")
-        if os.path.exists(os.path.join(epoch_dir, "_SUCCESS")):
+        if epoch_committed(index_dir, epoch_id):
             return  # replayed epoch after restart: already committed
         fresh = (
             batch_df.withColumn("__h", F.md5(F.substring("text", 1, 40)))
@@ -875,17 +790,13 @@ def c11_streaming_dedup(spark, sf_dir):
             fresh = fresh.join(idx, "__h", "left_anti")
         _epoch_commit(fresh.select("doc_id", "__h"), index_dir, epoch_id)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        _drain(
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
+        drain(
             sdf.writeStream.foreachBatch(_ingest)
             .outputMode("append")
             .option("checkpointLocation", os.path.join(root, "ckpt")),
             "c11_streaming_dedup",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.read.parquet(*_committed_epochs(index_dir)).select("doc_id")
 
 
@@ -962,8 +873,7 @@ def c2_streaming_neardup(spark, sf_dir):
     bands, rows_per_band = banded_config(0.5)
 
     def _ingest(batch_df, epoch_id):
-        epoch_dir = os.path.join(index_dir, f"epoch_{epoch_id:010d}")
-        if os.path.exists(os.path.join(epoch_dir, "_SUCCESS")):
+        if epoch_committed(index_dir, epoch_id):
             return  # replayed epoch after restart: already committed
         # checkpoint the signatures once (ingest_epoch fans them out to
         # ~5 consumers); unpersist both at epoch end so per-epoch blocks
@@ -982,45 +892,43 @@ def c2_streaming_neardup(spark, sf_dir):
         sig.unpersist()
         surv.unpersist()
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        _drain(
-            sdf.writeStream.foreachBatch(_ingest)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt")),
-            "c2_streaming_neardup",
-        )
-        # output-side exact dedup on id: the at-least-once half of the
-        # ingest contract. append()'s guard keeps the INDEX clean under
-        # upstream re-sends, but a re-sent already-accepted id passes
-        # ingest_epoch again (self-exclusion) and would re-emit — one
-        # dropDuplicates on the accepted output makes re-sends produce
-        # byte-identical survivor sets vs exactly-once delivery
-        # (pinned end-to-end in test_neardup_index_at_least_once).
-        streamed = (
-            spark.read.parquet(*_committed_epochs(index_dir))
-            .select("doc_id")
-            .dropDuplicates(["doc_id"])
-        )
-
-        # sequential reference: the same step applied slice-by-slice
-        # through the BATCH engine (no stream source, no foreachBatch)
-        import glob
-
-        ref_idx = None
-        for part in sorted(glob.glob(os.path.join(slices, "part-*.parquet"))):
-            sig = _banded_sig_df(
-                spark.read.parquet(part),
-                bands=bands,
-                rows_per_band=rows_per_band,
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
+            drain(
+                sdf.writeStream.foreachBatch(_ingest)
+                .outputMode("append")
+                .option("checkpointLocation", os.path.join(root, "ckpt")),
+                "c2_streaming_neardup",
             )
-            surv = neardup_ingest_step(sig, ref_idx, threshold=0.5)
-            surv = surv.localCheckpoint(eager=True)
-            ref_idx = surv if ref_idx is None else ref_idx.unionByName(surv)
-        reference = ref_idx.select("doc_id")
+            # output-side exact dedup on id: the at-least-once half of the
+            # ingest contract. append()'s guard keeps the INDEX clean under
+            # upstream re-sends, but a re-sent already-accepted id passes
+            # ingest_epoch again (self-exclusion) and would re-emit — one
+            # dropDuplicates on the accepted output makes re-sends produce
+            # byte-identical survivor sets vs exactly-once delivery
+            # (pinned end-to-end in test_neardup_index_at_least_once).
+            streamed = (
+                spark.read.parquet(*_committed_epochs(index_dir))
+                .select("doc_id")
+                .dropDuplicates(["doc_id"])
+            )
+
+            # sequential reference: the same step applied slice-by-slice
+            # through the BATCH engine (no stream source, no foreachBatch)
+            import glob
+
+            ref_idx = None
+            for part in sorted(glob.glob(os.path.join(slices, "part-*.parquet"))):
+                sig = _banded_sig_df(
+                    spark.read.parquet(part),
+                    bands=bands,
+                    rows_per_band=rows_per_band,
+                )
+                surv = neardup_ingest_step(sig, ref_idx, threshold=0.5)
+                surv = surv.localCheckpoint(eager=True)
+                ref_idx = surv if ref_idx is None else ref_idx.unionByName(surv)
+            reference = ref_idx.select("doc_id")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         ndx.drop()
 
     n_streamed = streamed.count()
@@ -1154,8 +1062,7 @@ def c3_streaming_ann(spark, sf_dir):
 
     def _ingest(batch_df, epoch_id):
         sess = batch_df.sparkSession
-        epoch_dir = os.path.join(signals_dir, f"epoch_{epoch_id:010d}")
-        if os.path.exists(os.path.join(epoch_dir, "_SUCCESS")):
+        if epoch_committed(signals_dir, epoch_id):
             return  # replayed epoch after restart: already committed
         batch = batch_df.select(
             F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec")
@@ -1180,109 +1087,107 @@ def c3_streaming_ann(spark, sf_dir):
         _epoch_commit(rec, signals_dir, epoch_id)
         batch.unpersist()
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        _drain(
-            sdf.writeStream.foreachBatch(_ingest)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt")),
-            "c3_streaming_ann",
-        )
-        recs = sorted(
-            spark.read.parquet(*_committed_epochs(signals_dir)).collect(),
-            key=lambda r: r["epoch"],
-        )
-        cal, later = recs[0], recs[1:]
-        signals_quiet = (
-            len(recs) == 3
-            and all(not r["imb_trigger"] for r in recs)
-            and all(not pq_qerr_trigger(r["gap"], cal["gap"]) for r in later)
-            and all(
-                cal["fit"] > 0 and r["fit"] / cal["fit"] >= 0.9
-                for r in later
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
+            drain(
+                sdf.writeStream.foreachBatch(_ingest)
+                .outputMode("append")
+                .option("checkpointLocation", os.path.join(root, "ckpt")),
+                "c3_streaming_ann",
             )
-        )
-
-        # fires control — scale-independent geometry, the
-        # c3_ann_ivf_append pattern: the fixture embeddings are near-
-        # isotropic, so for HELD-OUT data every unit-norm transform
-        # (negation included) is distribution-preserving and no control
-        # can move fit/gap vs the calibration epoch (measured: negated
-        # held-out gap 0.1534 vs quiet 0.1531). The batch signals'
-        # fire side is therefore pinned against the INDEXED corpus's
-        # own baselines, where the geometry is decisive: the negated
-        # base flips every centroid cosine (fit craters vs the
-        # memorized build fit) and presents residuals the codebooks
-        # never saw (gap ~0.15 vs the memorized ~2e-10 — ratio ~1e9).
-        # The held-out-scale fire separation is the gen100 artifact's
-        # claim (PQ_QERR_gen100.json: σ-growth 41x at 600k), not this
-        # fixture's.
-        arriving = arriving_raw.select(
-            F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec")
-        )
-        negated_base = base.withColumn(
-            "vec", F.transform("vec", lambda x: -x)
-        )
-        cl, bl = load_index_meta(spark, tname)
-        drift_fires = pq_qerr_trigger(
-            pq_fit_gap(negated_base, cl, bl), build_gap
-        ) and (
-            build_fit > 0
-            and assignment_fit(negated_base, cl) / build_fit < 0.9
-        )
-
-        # value gate: streamed index == batch rebuild over the union,
-        # probe-for-probe (ADC path; candidate sets AND scores equal)
-        tname_rb = materialize_ivfpq(
-            spark,
-            ivf_assign(base.unionByName(arriving), cents),
-            cents,
-            books,
-            f"c3sann_rb_{pid}",
-        )
-        queries = emb.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
-        )
-        streamed = ivfpq_search(
-            spark, queries, tname, cents, books, k=10, n_probe=n_probe
-        ).localCheckpoint(eager=True)
-        rebuilt = ivfpq_search(
-            spark, queries, tname_rb, cents, books, k=10, n_probe=n_probe
-        )
-        same = (
-            streamed.exceptAll(rebuilt).count() == 0
-            and rebuilt.exceptAll(streamed).count() == 0
-        )
-
-        # a retrain landing mid-stream: the next epoch's state is stale
-        # and its append must fail loudly, never corrupt
-        stale_books = pq_train(base, cents, seed=99)
-        try:
-            append_ivfpq_epoch(
-                spark, tname, arriving.limit(3), cents, stale_books,
-                epoch_id=99,
+            recs = sorted(
+                spark.read.parquet(*_committed_epochs(signals_dir)).collect(),
+                key=lambda r: r["epoch"],
             )
-            stale_raises = False
-        except StaleQuantizerError:
-            stale_raises = True
-
-        return spark.createDataFrame(
-            [
-                (
-                    same,
-                    streamed.count() > 0,
-                    signals_quiet,
-                    drift_fires,
-                    stale_raises,
+            cal, later = recs[0], recs[1:]
+            signals_quiet = (
+                len(recs) == 3
+                and all(not r["imb_trigger"] for r in recs)
+                and all(not pq_qerr_trigger(r["gap"], cal["gap"]) for r in later)
+                and all(
+                    cal["fit"] > 0 and r["fit"] / cal["fit"] >= 0.9
+                    for r in later
                 )
-            ],
-            "streamed_equals_rebuild boolean, nonempty boolean,"
-            " signals_quiet boolean, drift_fires boolean,"
-            " stale_raises boolean",
-        )
+            )
+
+            # fires control — scale-independent geometry, the
+            # c3_ann_ivf_append pattern: the fixture embeddings are near-
+            # isotropic, so for HELD-OUT data every unit-norm transform
+            # (negation included) is distribution-preserving and no control
+            # can move fit/gap vs the calibration epoch (measured: negated
+            # held-out gap 0.1534 vs quiet 0.1531). The batch signals'
+            # fire side is therefore pinned against the INDEXED corpus's
+            # own baselines, where the geometry is decisive: the negated
+            # base flips every centroid cosine (fit craters vs the
+            # memorized build fit) and presents residuals the codebooks
+            # never saw (gap ~0.15 vs the memorized ~2e-10 — ratio ~1e9).
+            # The held-out-scale fire separation is the gen100 artifact's
+            # claim (PQ_QERR_gen100.json: σ-growth 41x at 600k), not this
+            # fixture's.
+            arriving = arriving_raw.select(
+                F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec")
+            )
+            negated_base = base.withColumn(
+                "vec", F.transform("vec", lambda x: -x)
+            )
+            cl, bl = load_index_meta(spark, tname)
+            drift_fires = pq_qerr_trigger(
+                pq_fit_gap(negated_base, cl, bl), build_gap
+            ) and (
+                build_fit > 0
+                and assignment_fit(negated_base, cl) / build_fit < 0.9
+            )
+
+            # value gate: streamed index == batch rebuild over the union,
+            # probe-for-probe (ADC path; candidate sets AND scores equal)
+            tname_rb = materialize_ivfpq(
+                spark,
+                ivf_assign(base.unionByName(arriving), cents),
+                cents,
+                books,
+                f"c3sann_rb_{pid}",
+            )
+            queries = emb.filter(F.col("vec_id") < 20).select(
+                F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
+            )
+            streamed = ivfpq_search(
+                spark, queries, tname, cents, books, k=10, n_probe=n_probe
+            ).localCheckpoint(eager=True)
+            rebuilt = ivfpq_search(
+                spark, queries, tname_rb, cents, books, k=10, n_probe=n_probe
+            )
+            same = (
+                streamed.exceptAll(rebuilt).count() == 0
+                and rebuilt.exceptAll(streamed).count() == 0
+            )
+
+            # a retrain landing mid-stream: the next epoch's state is stale
+            # and its append must fail loudly, never corrupt
+            stale_books = pq_train(base, cents, seed=99)
+            try:
+                append_ivfpq_epoch(
+                    spark, tname, arriving.limit(3), cents, stale_books,
+                    epoch_id=99,
+                )
+                stale_raises = False
+            except StaleQuantizerError:
+                stale_raises = True
+
+            return spark.createDataFrame(
+                [
+                    (
+                        same,
+                        streamed.count() > 0,
+                        signals_quiet,
+                        drift_fires,
+                        stale_raises,
+                    )
+                ],
+                "streamed_equals_rebuild boolean, nonempty boolean,"
+                " signals_quiet boolean, drift_fires boolean,"
+                " stale_raises boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         drop_index(spark, tname)
         if tname_rb is not None:
             drop_index(spark, tname_rb)
@@ -1463,8 +1368,7 @@ def c3_stream_retrain_cycle(spark, sf_dir):
 
     def _ingest(batch_df, epoch_id):
         sess = batch_df.sparkSession
-        epoch_dir = os.path.join(signals_dir, f"epoch_{epoch_id:010d}")
-        if os.path.exists(os.path.join(epoch_dir, "_SUCCESS")):
+        if epoch_committed(signals_dir, epoch_id):
             return  # committed epoch replayed after restart
         batch = batch_df.localCheckpoint(eager=True)
         cl, bl = load_index_meta(sess, tname)
@@ -1507,119 +1411,117 @@ def c3_stream_retrain_cycle(spark, sf_dir):
         _epoch_commit(rec, signals_dir, epoch_id)
         batch.unpersist()
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        stale_raised = False
-        try:
-            _drain(
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
+            stale_raised = False
+            try:
+                drain(
+                    sdf.writeStream.foreachBatch(_ingest)
+                    .outputMode("append")
+                    .option("checkpointLocation", os.path.join(root, "ckpt")),
+                    "c3_stream_retrain_cycle_run1",
+                )
+            except StreamingQueryException as e:  # the stale epoch kills run 1
+                # its MESSAGE carries the foreachBatch's Python traceback
+                # (repr does not)
+                stale_raised = "StaleQuantizerError" in str(e)
+                if not stale_raised:
+                    raise
+            # restart: Spark replays the in-flight epoch (fresh quantizer
+            # reload), then drains the resume epoch
+            drain(
                 sdf.writeStream.foreachBatch(_ingest)
                 .outputMode("append")
                 .option("checkpointLocation", os.path.join(root, "ckpt")),
-                "c3_stream_retrain_cycle_run1",
+                "c3_stream_retrain_cycle_run2",
             )
-        except Exception as e:  # noqa: BLE001 — the stale epoch kills run 1
-            # the foreachBatch failure surfaces as StreamingQueryException
-            # whose MESSAGE carries the Python traceback (repr does not)
-            stale_raised = "StaleQuantizerError" in str(e)
-            if not stale_raised:
-                raise
-        # restart: Spark replays the in-flight epoch (fresh quantizer
-        # reload), then drains the resume epoch
-        _drain(
-            sdf.writeStream.foreachBatch(_ingest)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt")),
-            "c3_stream_retrain_cycle_run2",
-        )
-        recs = {
-            r["epoch"]: r
-            for r in spark.read.parquet(
-                *_committed_epochs(signals_dir)
-            ).collect()
-        }
-        hot_fired = bool(recs[2]["fired"])
-        quiet_before = not recs[0]["fired"] and not recs[1]["fired"]
-        quiet_after = not recs[3]["fired"] and not recs[4]["fired"]
-        new_gen = index_gen(spark, tname)
-        resumed = (
-            len(recs) == 5
-            and recs[3]["gen"] == new_gen
-            and recs[4]["gen"] == new_gen
-            and new_gen != build_gen
-        )
+            recs = {
+                r["epoch"]: r
+                for r in spark.read.parquet(
+                    *_committed_epochs(signals_dir)
+                ).collect()
+            }
+            hot_fired = bool(recs[2]["fired"])
+            quiet_before = not recs[0]["fired"] and not recs[1]["fired"]
+            quiet_after = not recs[3]["fired"] and not recs[4]["fired"]
+            new_gen = index_gen(spark, tname)
+            resumed = (
+                len(recs) == 5
+                and recs[3]["gen"] == new_gen
+                and recs[4]["gen"] == new_gen
+                and new_gen != build_gen
+            )
 
-        # the reference quantizer: retrained INDEPENDENTLY on the same
-        # corpus the mid-stream retrain saw (base + epochs 0..2 —
-        # epoch 3 had not appended when the request was served);
-        # deterministic training makes token equality the gate
-        seen = base.unionByName(quarters[0]).unionByName(
-            quarters[1]
-        ).unionByName(hot)
-        cents2 = ivf_build_centroids(seen, n_cells=n_cells)
-        books2 = pq_train(seen, cents2)
-        retrained = (
-            os.path.exists(fire_done)
-            and quantizer_token(cents2, books2) == new_gen
-        )
+            # the reference quantizer: retrained INDEPENDENTLY on the same
+            # corpus the mid-stream retrain saw (base + epochs 0..2 —
+            # epoch 3 had not appended when the request was served);
+            # deterministic training makes token equality the gate
+            seen = base.unionByName(quarters[0]).unionByName(
+                quarters[1]
+            ).unionByName(hot)
+            cents2 = ivf_build_centroids(seen, n_cells=n_cells)
+            books2 = pq_train(seen, cents2)
+            retrained = (
+                os.path.exists(fire_done)
+                and quantizer_token(cents2, books2) == new_gen
+            )
 
-        # value gate: streamed index == batch rebuild over base + ALL
-        # epochs under the retrained quantizer — rows exactly equal
-        # (exactly-once through fire/retrain/crash/replay) and probes
-        # identical
-        full = base
-        for q in [quarters[0], quarters[1], hot, quarters[2], quarters[3]]:
-            full = full.unionByName(q)
-        tname_rb = materialize_ivfpq(
-            spark, ivf_assign(full, cents2), cents2, books2,
-            f"c3srt_rb_{pid}",
-        )
-        # the stream's appends/retrain refreshed the per-query CLONED
-        # session's relation cache, not this one's — refresh before
-        # comparing through spark.table
-        spark.catalog.refreshTable(tname)
-        rows_a = spark.table(tname).select(
-            "c_id", "cell", F.col("code").cast("string").alias("code")
-        )
-        rows_b = spark.table(tname_rb).select(
-            "c_id", "cell", F.col("code").cast("string").alias("code")
-        )
-        rows_equal = (
-            rows_a.exceptAll(rows_b).count() == 0
-            and rows_b.exceptAll(rows_a).count() == 0
-        )
-        queries_df = emb.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
-        )
-        streamed = ivfpq_search(
-            spark, queries_df, tname, cents2, books2, k=10, n_probe=n_probe
-        ).localCheckpoint(eager=True)
-        rebuilt = ivfpq_search(
-            spark, queries_df, tname_rb, cents2, books2, k=10,
-            n_probe=n_probe,
-        )
-        probes_equal = (
-            streamed.exceptAll(rebuilt).count() == 0
-            and rebuilt.exceptAll(streamed).count() == 0
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    hot_fired,
-                    quiet_before,
-                    stale_raised,
-                    retrained,
-                    resumed,
-                    quiet_after,
-                    rows_equal and probes_equal,
-                )
-            ],
-            "hot_fired boolean, quiet_before boolean, stale_raised boolean,"
-            " retrained boolean, resumed boolean, quiet_after boolean,"
-            " streamed_equals_rebuild boolean",
-        )
+            # value gate: streamed index == batch rebuild over base + ALL
+            # epochs under the retrained quantizer — rows exactly equal
+            # (exactly-once through fire/retrain/crash/replay) and probes
+            # identical
+            full = base
+            for q in [quarters[0], quarters[1], hot, quarters[2], quarters[3]]:
+                full = full.unionByName(q)
+            tname_rb = materialize_ivfpq(
+                spark, ivf_assign(full, cents2), cents2, books2,
+                f"c3srt_rb_{pid}",
+            )
+            # the stream's appends/retrain refreshed the per-query CLONED
+            # session's relation cache, not this one's — refresh before
+            # comparing through spark.table
+            spark.catalog.refreshTable(tname)
+            rows_a = spark.table(tname).select(
+                "c_id", "cell", F.col("code").cast("string").alias("code")
+            )
+            rows_b = spark.table(tname_rb).select(
+                "c_id", "cell", F.col("code").cast("string").alias("code")
+            )
+            rows_equal = (
+                rows_a.exceptAll(rows_b).count() == 0
+                and rows_b.exceptAll(rows_a).count() == 0
+            )
+            queries_df = emb.filter(F.col("vec_id") < 20).select(
+                F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
+            )
+            streamed = ivfpq_search(
+                spark, queries_df, tname, cents2, books2, k=10, n_probe=n_probe
+            ).localCheckpoint(eager=True)
+            rebuilt = ivfpq_search(
+                spark, queries_df, tname_rb, cents2, books2, k=10,
+                n_probe=n_probe,
+            )
+            probes_equal = (
+                streamed.exceptAll(rebuilt).count() == 0
+                and rebuilt.exceptAll(streamed).count() == 0
+            )
+            return spark.createDataFrame(
+                [
+                    (
+                        hot_fired,
+                        quiet_before,
+                        stale_raised,
+                        retrained,
+                        resumed,
+                        quiet_after,
+                        rows_equal and probes_equal,
+                    )
+                ],
+                "hot_fired boolean, quiet_before boolean, stale_raised boolean,"
+                " retrained boolean, resumed boolean, quiet_after boolean,"
+                " streamed_equals_rebuild boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         drop_index(spark, tname)
         if tname_rb is not None:
             drop_index(spark, tname_rb)

@@ -1689,7 +1689,6 @@ def c_takedown_family(spark, sf_dir):
     (crash-injection pins per store in tests/test_takedown.py)."""
     import tempfile
 
-    from smallquery_spark.fsio import fs_for, join_uri
     from smallquery_spark.operators.dedup import _banded_sig_df
     from smallquery_spark.operators.neardup_index import NearDupIndex
     from smallquery_spark.operators.pq import (
@@ -1708,6 +1707,7 @@ def c_takedown_family(spark, sf_dir):
     )
     from smallquery_spark.operators.takedown import delete_epoch_store
     from smallquery_spark.queries.tmpdirs import prune_stale, register_cleanup
+    from smallquery_spark.streaming.runner import _epoch_commit, epoch_committed
 
     pid = os.getpid()
     victims = [5, 17, 33]
@@ -1744,10 +1744,7 @@ def c_takedown_family(spark, sf_dir):
         "doc_id", F.md5(F.substring("text", 1, 40)).alias("__h")
     )
     for e, pred in ((0, "doc_id < 30"), (1, "doc_id >= 30")):
-        fps.filter(pred).write.mode("overwrite").parquet(
-            os.path.join(digest_store, f"epoch_{e:010d}")
-        )
-    fs = fs_for(spark, digest_store)
+        _epoch_commit(fps.filter(pred), digest_store, e)
 
     try:
         idx.append(sigs)
@@ -1838,12 +1835,8 @@ def c_takedown_family(spark, sf_dir):
         )
         dig_proto = (
             delete_epoch_store(spark, digest_store, victims, "doc_id") == 0
-            and fs.exists(
-                join_uri(digest_store, "epoch_0000000000", "_SUCCESS")
-            )
-            and fs.exists(
-                join_uri(digest_store, "epoch_0000000001", "_SUCCESS")
-            )
+            and epoch_committed(digest_store, 0)
+            and epoch_committed(digest_store, 1)
         )
 
         return spark.createDataFrame(

@@ -215,7 +215,6 @@ ROCKSDB_PROVIDER = (
 )
 
 
-@contextmanager
 def rocksdb_state(spark: SparkSession):
     """Opt a block of streaming queries into the production state
     backend with the MEASURED posture applied as one unit:
@@ -237,20 +236,32 @@ def rocksdb_state(spark: SparkSession):
     keep their recorded version either way; the conf applies to new
     ones only.
     """
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    fmt_key = "spark.sql.streaming.join.stateFormatVersion"
-    old_provider = spark.conf.get(provider_key, None)
-    old_fmt = spark.conf.get(fmt_key, None)
-    spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-    spark.conf.set(fmt_key, "3")
+    return scoped_confs(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+            "spark.sql.streaming.join.stateFormatVersion": "3",
+        },
+    )
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set the runtime confs ``confs`` for the block. On exit, by
+    exception too, each key gets back the value it had on entry, or is
+    unset if it had none. The package's one save/set/restore of
+    session confs."""
+    old = {key: spark.conf.get(key, None) for key in confs}
     try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
         yield spark
     finally:
-        for key, old in ((provider_key, old_provider), (fmt_key, old_fmt)):
-            if old is not None:
-                spark.conf.set(key, old)
-            else:
+        for key, value in old.items():
+            if value is None:
                 spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def stop_session() -> None:

@@ -13,11 +13,10 @@ from __future__ import annotations
 
 import os
 import re
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from smallquery_spark.session import scoped_confs
 from smallquery_spark.sources import read_any
 
 
@@ -91,13 +90,14 @@ def state_partitions_for(
     state-store setup dominates; 4 keeps ≥25k rows/partition of
     parallelism headroom while shedding the overhead knee.
     """
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow
+    import pyarrow.parquet as pq
 
+    try:
         rows = pq.ParquetFile(
             os.path.join(sf_dir, "events.parquet")
         ).metadata.num_rows
-    except Exception:
+    except (OSError, pyarrow.ArrowInvalid):
         return default
     if rows >= 4_000_000:
         return cap
@@ -141,209 +141,173 @@ def unload_state_stores(spark: SparkSession) -> None:
         pass
 
 
+# Wall-clock bound on one availableNow drain. Not a knob: a drain that
+# runs past it is a hang to surface, not a budget to tune.
+DRAIN_TIMEOUT_S = 600
+
+# Sink results up to this many parquet bytes are materialized and their
+# sink deleted; bigger ones stay a lazy scan (see run_to_df).
+ROTATE_MAX_BYTES = 256 * 1024 * 1024
+
+
+def drain(writer, name: str) -> None:
+    """Run ``writer`` with ``trigger(availableNow=True)`` until it has
+    processed everything in its source, then return.
+
+    The package's one availableNow drain. A query still running after
+    ``DRAIN_TIMEOUT_S`` raises ``TimeoutError`` naming ``name`` (never a
+    silently partial result); a query that is still active is stopped
+    either way, and a failed query's ``StreamingQueryException``
+    propagates after the stop."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"{name}: stream did not drain within {DRAIN_TIMEOUT_S}s"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
+
+
+def _epoch_dir(root: str, epoch_id: int) -> str:
+    return os.path.join(root, f"epoch_{int(epoch_id):010d}")
+
+
+def epoch_committed(root: str, epoch_id: int) -> bool:
+    """Whether epoch ``epoch_id`` of the epoch-keyed store at ``root``
+    committed (its ``_SUCCESS`` marker landed). foreachBatch sinks check
+    this first and skip a committed epoch that Spark replays after a
+    restart."""
+    return os.path.exists(os.path.join(_epoch_dir(root, epoch_id), "_SUCCESS"))
+
+
+def _committed_epochs(root: str) -> list[str]:
+    """Epoch subdirectories of an epoch-keyed store whose ``_SUCCESS``
+    marker landed. foreachBatch is at-least-once per epoch: after a
+    restart the last uncommitted epoch replays, so readers must see only
+    COMMITTED epochs (a partial epoch's files would otherwise anti-join
+    the replaying batch against its own half-written output)."""
+    import glob
+
+    return sorted(
+        os.path.dirname(marker)
+        for marker in glob.glob(os.path.join(root, "epoch_*", "_SUCCESS"))
+    )
+
+
+def _epoch_commit(df: DataFrame, root: str, epoch_id: int) -> None:
+    """Write ``df`` as epoch ``epoch_id`` of the store at ``root``: each
+    epoch owns its subdirectory, written with mode=overwrite, so a
+    crashed partial write (no ``_SUCCESS``) is replaced wholesale when
+    the epoch replays. It does not skip a committed epoch; that is the
+    caller's :func:`epoch_committed` guard. Together they are the
+    epoch_id-keyed discipline foreachBatch's exactly-once contract
+    requires."""
+    df.write.mode("overwrite").parquet(_epoch_dir(root, epoch_id))
+
+
 def run_to_df(
     sdf: DataFrame,
     name: str,
     output_mode: str = "append",
     state_partitions: int = 8,
     sink: str = "auto",
-    rotate_sink: bool = True,
-    rotate_max_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Drain a streaming DataFrame into a sink; return it as a DataFrame.
 
-    ``availableNow`` processes everything currently in the source then
-    stops — the deterministic test trigger.
-
     ``sink``:
     - ``"memory"`` — the memory sink: every emitted row is collected to
-      the DRIVER. Deterministic and convenient at fixture scale, but a
-      driver collect is the one anti-pattern this engine bans at 100 TB
-      — measured at gen-sf10, b53's ~9.9M complete-mode session rows
-      made the memory sink the dominant cost (31s wall, r₂ ≈ 10, vs
-      2.1s for the identical batch aggregation).
-    - ``"files"`` — production shape: foreachBatch writes each epoch to
-      parquet (overwrite for complete mode — the epoch's emission IS
-      the full result — append otherwise) and the sink is read back as
-      a distributed scan; no driver materialization anywhere.
-    - ``"auto"`` (default) — files when the caller sized the state for
-      a big source (``state_partitions`` ≥ 16, i.e. ≥1M source rows per
-      ``state_partitions_for``), memory at fixture scale. Both sinks
-      receive identical rows (pinned by test_streaming_sinks_agree).
+      the DRIVER. Fine at fixture scale; at gen-sf10 b53's ~9.9M
+      complete-mode rows made it the dominant cost (31 s vs 2.1 s for
+      the same batch aggregation).
+    - ``"files"`` — foreachBatch writes each epoch to parquet (overwrite
+      in complete mode, epoch-keyed otherwise) and the sink is read back
+      as a distributed scan.
+    - ``"auto"`` (default) — files when ``state_partitions`` ≥ 16 (≥1M
+      source rows per ``state_partitions_for``), memory otherwise. Both
+      sinks give identical rows (test_streaming_sinks_agree).
 
-    ``rotate_sink`` (default True) encodes the flat-rerun posture IN
-    the runner instead of leaving it to caller discipline — but
-    SIZE-GATED, because the two retention regimes were both measured
-    at gen100 (B53_RESIDUAL_gen100.json, B53_ROTATE_gen100.json):
+    A files sink of at most ``ROTATE_MAX_BYTES`` is materialized
+    (``localCheckpoint``) and deleted before returning: retained sink
+    bytes cost ~15% per warm rerun at gen100 (B53_RESIDUAL_gen100.json).
+    A bigger one stays a lazy scan over the sink, because pinning ~99M
+    rows in the block manager climbed 2.22x and then killed the JVM
+    (B53_ROTATE_gen100.json).
 
-    - result ≤ ``rotate_max_bytes`` of sink parquet: materialize once
-      (``localCheckpoint(eager=True)``) and delete the run's entire
-      sink root — parquet epochs AND streaming checkpoint — before
-      returning. Retained sink bytes displace page cache and cost
-      ~15% per warm rerun at gen100; the checkpointed blocks are
-      freed when the returned frame is garbage-collected.
-    - result LARGER than the gate: checkpoint-rotation is the wrong
-      trade — measured on b53's ~99M-row complete-mode result, the
-      block-manager copy pinned gigabytes per run (run 2 of 2 climbed
-      2.22×, 78→174 s, and a 4-run sequence died in the JVM). Big
-      results stay a lazy scan over the sink files (the tmpdir is
-      already registered for at-exit cleanup); callers doing repeated
-      corpus-sized drains delete each run's sink AFTER consuming it —
-      the measured-flat ``rm_sink`` pattern — via :func:`sink_scope`.
-
-    Pass ``rotate_sink=False`` to always keep the sink on disk (e.g.
-    to re-read the epochs out-of-band).
-
-    ``state_partitions`` sizes the stateful operators: streaming state
-    partitioning is FIXED at checkpoint creation from
-    ``spark.sql.shuffle.partitions``, so production jobs size it to key
-    cardinality and throughput up front (the default 200 — or this
-    repo's batch 32 — wastes a task per near-empty state store at
-    fixture scale, ~40% of micro-batch wall time). The conf is restored
-    for batch queries after the stream drains.
+    ``state_partitions`` is ``spark.sql.shuffle.partitions`` for the
+    drain only: streaming state partitioning is fixed at checkpoint
+    creation, and the batch default wastes a task per near-empty state
+    store at fixture scale (~40% of micro-batch wall time).
     """
     qname = re.sub(r"[^A-Za-z0-9_]", "_", name)
     spark = sdf.sparkSession
     use_files = sink == "files" or (sink == "auto" and state_partitions >= 16)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        if use_files:
-            import tempfile
-
-            from smallquery_spark.queries.tmpdirs import (
-                prune_stale,
-                register_cleanup,
-            )
-
-            prune_stale("smallquery_runsink_")
-            out_root = register_cleanup(
-                tempfile.mkdtemp(prefix="smallquery_runsink_")
-            )
-            data_dir = os.path.join(out_root, qname)
-            complete = output_mode == "complete"
-
-            def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-                # foreachBatch's exactly-once contract requires the sink to
-                # be idempotent ON epoch_id: after a restart, Spark replays
-                # the last epoch whose sink ran but whose streaming
-                # checkpoint never committed. Complete mode is naturally
-                # idempotent (each epoch IS the full result — overwrite);
-                # append mode writes each epoch to its own epoch-keyed
-                # subdirectory and skips epochs whose _SUCCESS marker
-                # already landed (a partial write without _SUCCESS is
-                # overwritten, so a mid-write crash also replays cleanly).
-                if complete:
-                    batch_df.write.mode("overwrite").parquet(data_dir)
-                    return
-                epoch_dir = os.path.join(data_dir, f"epoch_{epoch_id:010d}")
-                if os.path.exists(os.path.join(epoch_dir, "_SUCCESS")):
-                    return
-                batch_df.write.mode("overwrite").parquet(epoch_dir)
-
-            writer = (
-                sdf.writeStream.foreachBatch(_sink)
-                .outputMode(output_mode)
-                .option(
-                    "checkpointLocation", os.path.join(out_root, qname + "_ckpt")
-                )
-            )
-        else:
-            writer = (
-                sdf.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode(output_mode)
-            )
-        q = writer.trigger(availableNow=True).start()
-        try:
-            finished = q.awaitTermination(600)
-            if not finished:
-                raise TimeoutError(
-                    f"stream {qname} did not drain within 600s"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        unload_state_stores(spark)
     if use_files:
-        if not os.path.isdir(data_dir):
-            # zero emissions (e.g. everything beyond the watermark):
-            # an empty frame with the stream's schema
-            if rotate_sink:
-                import shutil
+        import tempfile
 
-                shutil.rmtree(out_root, ignore_errors=True)
-            return spark.createDataFrame([], sdf.schema)
-        # recursiveFileLookup: append-mode epochs live in epoch_* subdirs
-        # (no partition-column inference wanted); complete mode is flat
-        # and reads identically.
-        out = spark.read.option("recursiveFileLookup", "true").parquet(data_dir)
-        if rotate_sink:
-            # size gate (see docstring): the sink is a LOCAL tmpdir by
-            # construction, so a plain walk is fine here
-            sink_bytes = 0
-            for dirpath, _d, files in os.walk(data_dir):
-                for f in files:
-                    try:
-                        sink_bytes += os.path.getsize(os.path.join(dirpath, f))
-                    except OSError:
-                        pass
-            if sink_bytes <= rotate_max_bytes:
-                import shutil
+        from smallquery_spark.queries.tmpdirs import (
+            prune_stale,
+            register_cleanup,
+        )
 
-                # materialize BEFORE deleting the files the plan reads
-                out = out.localCheckpoint(eager=True)
-                shutil.rmtree(out_root, ignore_errors=True)
-                return out
-        # big-result (or rotate_sink=False) path: lazy scan over the
-        # sink; remember the root so sink_scope can delete it after
-        # the caller consumes the frame
-        out._smallquery_sink_root = out_root
-        return out
-    return spark.table(qname)
+        prune_stale("smallquery_runsink_")
+        out_root = register_cleanup(
+            tempfile.mkdtemp(prefix="smallquery_runsink_")
+        )
+        data_dir = os.path.join(out_root, qname)
+        complete = output_mode == "complete"
 
+        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
+            # complete mode: each epoch IS the full result, so overwrite
+            # is idempotent; append mode is epoch-keyed
+            if complete:
+                batch_df.write.mode("overwrite").parquet(data_dir)
+            elif not epoch_committed(data_dir, epoch_id):
+                _epoch_commit(batch_df, data_dir, epoch_id)
 
-@contextmanager
-def sink_scope(
-    sdf: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    state_partitions: int = 8,
-    sink: str = "auto",
-):
-    """Drain a stream, yield the result frame, and DELETE the run's
-    sink root when the block exits — the flat warm-rerun posture for
-    results too large to rotate through the block manager.
-
-    The measured background (gen100 b53, ~99M-row complete-mode
-    results): retaining each run's sink costs ~15% per warm rerun
-    (page-cache displacement, B53_RESIDUAL_gen100.json); rotating via
-    localCheckpoint pins gigabytes of blocks per run and measured a
-    2.22x climb then a JVM death at 4 runs (B53_ROTATE_gen100.json);
-    deleting the sink AFTER consumption — what this context manager
-    does — was the flat variant. run_to_df's size-gated rotation
-    handles small results automatically; use this for repeated
-    corpus-sized drains:
-
-        with sink_scope(agg, "big") as df:
-            checksum = df.agg(...).collect()
-        # sink root deleted here
-    """
-    df = run_to_df(
-        sdf,
-        name,
-        output_mode=output_mode,
-        state_partitions=state_partitions,
-        sink=sink,
-        rotate_sink=False,
-    )
+        writer = (
+            sdf.writeStream.foreachBatch(_sink)
+            .outputMode(output_mode)
+            .option(
+                "checkpointLocation", os.path.join(out_root, qname + "_ckpt")
+            )
+        )
+    else:
+        writer = (
+            sdf.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode(output_mode)
+        )
     try:
-        yield df
+        with scoped_confs(
+            spark, {"spark.sql.shuffle.partitions": str(state_partitions)}
+        ):
+            drain(writer, qname)
     finally:
-        root = getattr(df, "_smallquery_sink_root", None)
-        if root:
-            import shutil
+        unload_state_stores(spark)
+    if not use_files:
+        return spark.table(qname)
+    import shutil
 
-            shutil.rmtree(root, ignore_errors=True)
+    if not os.path.isdir(data_dir):
+        # zero emissions (e.g. everything beyond the watermark): an
+        # empty frame with the stream's schema
+        shutil.rmtree(out_root, ignore_errors=True)
+        return spark.createDataFrame([], sdf.schema)
+    # recursiveFileLookup: append-mode epochs live in epoch_* subdirs
+    # (no partition-column inference wanted); complete mode is flat
+    out = spark.read.option("recursiveFileLookup", "true").parquet(data_dir)
+    # the sink is a LOCAL tmpdir by construction, so a plain walk is fine
+    sink_bytes = 0
+    for dirpath, _d, files in os.walk(data_dir):
+        for f in files:
+            try:
+                sink_bytes += os.path.getsize(os.path.join(dirpath, f))
+            except OSError:
+                pass
+    if sink_bytes <= ROTATE_MAX_BYTES:
+        # materialize BEFORE deleting the files the plan reads
+        out = out.localCheckpoint(eager=True)
+        shutil.rmtree(out_root, ignore_errors=True)
+    return out

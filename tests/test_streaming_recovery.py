@@ -197,28 +197,32 @@ def test_epoch_keyed_sink_replay_idempotent(spark, tmp_path):
     """foreachBatch's contract is at-least-once per epoch: after a
     restart the last epoch whose sink ran but whose streaming commit
     didn't lands AGAIN with the same epoch_id. The epoch-keyed sink
-    discipline (_epoch_commit/_committed_epochs) must (a) skip a
-    committed replayed epoch, (b) rewrite a partial (no _SUCCESS)
-    epoch wholesale, and (c) expose only committed epochs to readers."""
+    discipline (epoch_committed/_epoch_commit/_committed_epochs) must
+    (a) report a committed epoch so the replay skips it, (b) rewrite a
+    partial (no _SUCCESS) epoch wholesale, and (c) expose only
+    committed epochs to readers."""
     import os
 
-    from smallquery_spark.queries.streaming_queries import (
+    from smallquery_spark.streaming.runner import (
         _committed_epochs,
         _epoch_commit,
+        epoch_committed,
     )
 
     index_dir = str(tmp_path / "idx")
+    assert not epoch_committed(index_dir, 0)
     df1 = spark.createDataFrame([(1,), (2,)], "doc_id long")
     _epoch_commit(df1, index_dir, 0)
     assert len(_committed_epochs(index_dir)) == 1
 
     # (b) partial epoch: files present, no _SUCCESS — invisible to
-    # readers, replaced wholesale when the epoch replays
+    # readers, not committed, replaced wholesale when the epoch replays
     epoch1 = os.path.join(index_dir, "epoch_0000000001")
     df_partial = spark.createDataFrame([(99,)], "doc_id long")
     df_partial.write.mode("overwrite").parquet(epoch1)
     os.remove(os.path.join(epoch1, "_SUCCESS"))
     assert len(_committed_epochs(index_dir)) == 1  # partial is invisible
+    assert not epoch_committed(index_dir, 1)  # so the replay rewrites it
     df2 = spark.createDataFrame([(3,), (4,), (5,)], "doc_id long")
     _epoch_commit(df2, index_dir, 1)  # replay overwrites the partial
     committed = _committed_epochs(index_dir)
@@ -228,9 +232,9 @@ def test_epoch_keyed_sink_replay_idempotent(spark, tmp_path):
     }
     assert rows == {1, 2, 3, 4, 5}  # 99 from the partial write is gone
 
-    # (a) a replayed COMMITTED epoch is skipped by the query-side guard
-    # (the c11/c2/b59 sinks check _SUCCESS before writing); the reader
-    # view is unchanged either way
+    # (a) a replayed COMMITTED epoch: the sinks' guard sees it committed
+    # and skips the write, so the reader view is unchanged
+    assert epoch_committed(index_dir, 0) and epoch_committed(index_dir, 1)
     assert {
         r["doc_id"]
         for r in spark.read.parquet(*_committed_epochs(index_dir)).collect()
@@ -238,10 +242,10 @@ def test_epoch_keyed_sink_replay_idempotent(spark, tmp_path):
 
 
 def test_run_to_df_rotates_sink(spark):
-    """rotate_sink (default) must leave NOTHING of the run on disk —
-    the B53_RESIDUAL finding (retained sink bytes cost ~15% per warm
-    corpus-sized rerun) encoded in the runner, not a docstring. The
-    returned frame must survive the deletion (materialized before)."""
+    """A files sink within the size gate must leave NOTHING of the run
+    on disk — the B53_RESIDUAL finding (retained sink bytes cost ~15%
+    per warm corpus-sized rerun) encoded in the runner, not a docstring.
+    The returned frame must survive the deletion (materialized before)."""
     import glob
     import os
     import tempfile
@@ -251,70 +255,23 @@ def test_run_to_df_rotates_sink(spark):
     from tests.conftest import SF_SMOKE
     from smallquery_spark.streaming import events_stream, run_to_df
 
-    def agg():
-        sdf = events_stream(spark, SF_SMOKE)
-        return (
-            sdf.groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-            .select("event_type", "n")
-        )
-
+    sdf = events_stream(spark, SF_SMOKE)
+    agg = (
+        sdf.groupBy("event_type")
+        .agg(F.count("*").alias("n"))
+        .select("event_type", "n")
+    )
     pre = set(glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*")))
-    out = run_to_df(agg(), "rot_on", output_mode="complete", sink="files")
+    out = run_to_df(agg, "rot_on", output_mode="complete", sink="files")
     post = set(glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*")))
     assert post - pre == set()  # the run's sink root is GONE
     rows = {(r["event_type"], r["n"]) for r in out.collect()}  # readable after delete
     assert rows and all(n > 0 for _t, n in rows)
 
-    # rotate_sink=False keeps the sink for out-of-band reads
-    out2 = run_to_df(
-        agg(), "rot_off", output_mode="complete", sink="files", rotate_sink=False
-    )
-    post2 = set(glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*")))
-    assert len(post2 - pre) == 1
-    assert {(r["event_type"], r["n"]) for r in out2.collect()} == rows
-    import shutil
 
-    for d in post2 - pre:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_sink_scope_deletes_after_consumption(spark):
-    """sink_scope: consume inside the block, sink root gone on exit —
-    the corpus-sized flat-rerun posture (rotation-by-checkpoint
-    measured a 2.22x climb then JVM death on ~99M-row results,
-    B53_ROTATE_gen100.json)."""
-    import glob
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_SMOKE
-    from smallquery_spark.streaming import events_stream, sink_scope
-
-    pre = set(glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*")))
-    sdf = events_stream(spark, SF_SMOKE)
-    agg = (
-        sdf.groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-        .select("event_type", "n")
-    )
-    with sink_scope(agg, "scoped", output_mode="complete", sink="files") as df:
-        rows = {(r["event_type"], r["n"]) for r in df.collect()}
-        # inside the scope the sink exists (lazy scan needs it)
-        assert set(
-            glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*"))
-        ) - pre
-    assert rows and all(n > 0 for _t, n in rows)
-    post = set(glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*")))
-    assert post - pre == set()  # gone on exit
-
-
-def test_run_to_df_rotation_size_gate(spark):
-    """Results past rotate_max_bytes must NOT be pulled through the
-    block manager: the frame stays a lazy scan and the sink survives
-    (with its root exposed for sink_scope)."""
+def test_run_to_df_rotation_size_gate(spark, monkeypatch):
+    """Results past ROTATE_MAX_BYTES must NOT be pulled through the
+    block manager: the frame stays a lazy scan and the sink survives."""
     import glob
     import os
     import shutil
@@ -323,8 +280,9 @@ def test_run_to_df_rotation_size_gate(spark):
     from pyspark.sql import functions as F
 
     from tests.conftest import SF_SMOKE
-    from smallquery_spark.streaming import events_stream, run_to_df
+    from smallquery_spark.streaming import events_stream, run_to_df, runner
 
+    monkeypatch.setattr(runner, "ROTATE_MAX_BYTES", 0)
     pre = set(glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*")))
     sdf = events_stream(spark, SF_SMOKE)
     agg = (
@@ -332,14 +290,96 @@ def test_run_to_df_rotation_size_gate(spark):
         .agg(F.count("*").alias("n"))
         .select("event_type", "n")
     )
-    out = run_to_df(
-        agg, "gated", output_mode="complete", sink="files", rotate_max_bytes=0
-    )
+    out = run_to_df(agg, "gated", output_mode="complete", sink="files")
     new = set(
         glob.glob(os.path.join(tempfile.gettempdir(), "smallquery_runsink_*"))
     ) - pre
     assert len(new) == 1  # kept: result exceeded the (zero) gate
-    assert getattr(out, "_smallquery_sink_root", None) in new
     assert out.count() > 0
     for d in new:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_drain_timeout_is_loud(spark, tmp_path, monkeypatch):
+    """A drain still running past the bound raises TimeoutError naming
+    the query — never a silently partial result — and leaves no query
+    active behind it."""
+    import time
+
+    from smallquery_spark.streaming import drain, runner
+
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, "x", range(10), "click")
+    monkeypatch.setattr(runner, "DRAIN_TIMEOUT_S", 1)
+
+    def slow(_batch_df, _epoch_id):
+        time.sleep(4)
+
+    writer = (
+        spark.readStream.schema(SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .format("parquet")
+        .load(src)
+        .writeStream.foreachBatch(slow)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(TimeoutError, match="slow_drain"):
+        drain(writer, "slow_drain")
+    assert spark.streams.active == []
+
+
+def test_scoped_confs_restores(spark):
+    """scoped_confs puts back a conf that was set and unsets one that
+    was not, on normal exit and on exit by exception."""
+    from smallquery_spark.session import scoped_confs
+
+    was_set = "spark.smallquery.test.was_set"
+    was_unset = "spark.smallquery.test.was_unset"
+    confs = {was_set: "inside", was_unset: "inside"}
+
+    def restored():
+        return (
+            spark.conf.get(was_set) == "before"
+            and spark.conf.get(was_unset, None) is None
+        )
+
+    spark.conf.set(was_set, "before")
+    try:
+        with scoped_confs(spark, confs):
+            assert spark.conf.get(was_set) == "inside"
+            assert spark.conf.get(was_unset) == "inside"
+        assert restored()
+        with pytest.raises(RuntimeError):
+            with scoped_confs(spark, confs):
+                raise RuntimeError("body failed")
+        assert restored()
+    finally:
+        spark.conf.unset(was_set)
+
+
+def test_only_runner_drains_available_now():
+    """runner.drain is the package's one availableNow drain: no other
+    module under smallquery_spark/ calls awaitTermination or
+    trigger(availableNow=...), so every drain stays bounded and loud."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "smallquery_spark"
+    runner = pkg / "streaming" / "runner.py"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == runner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            attr = node.func.attr
+            if attr == "awaitTermination" or (
+                attr == "trigger"
+                and any(k.arg == "availableNow" for k in node.keywords)
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
