@@ -27,7 +27,7 @@ Reference parity (all citations into /root/reference):
   components and leading separators; empty means root
   (src/core.rs:30-46). Ported in :func:`sanitize_path`.
 
-Spark integration: ``VersionedCatalog.resolve()`` happens driver-side
+Spark integration: ``Workspace.snapshot`` happens driver-side
 *before* planning — Spark then reads the materialized snapshot directory
 like any other path, so every Catalyst optimization (pushdown, pruning)
 applies unchanged. No custom DataSourceV2 is needed for correctness; the
@@ -218,17 +218,23 @@ class Workspace:
     # -- snapshot materialization (reference A2, http_server.rs:169-200) ---
 
     def snapshot(self, version: str = LATEST) -> str:
-        """Materialize the resolved commit into a cached snapshot dir.
+        """Materialize the commit ``version`` resolves to
+        (:meth:`resolve_version`) into its cached snapshot dir
+        (:meth:`extract`); return the dir."""
+        return self.extract(self.resolve_version(version))
+
+    def extract(self, commit: str) -> str:
+        """Materialize full commit id ``commit`` into a cached snapshot dir,
+        without resolving anything.
 
         Content-addressed by commit id (fixes the reference's
         leak-a-temp-dir-per-request TODO, http_server.rs:133). Returns the
         snapshot directory path; its name is the commit
         (:func:`snapshot_commit`).
         """
-        commit = self.resolve_version(version)
         dest = os.path.join(self._cache_dir, self.name, commit)
 
-        def extract(tmp: str) -> None:
+        def write(tmp: str) -> None:
             # `git archive | tar -x` materializes the tree without
             # touching the repo's worktree/index — safe under
             # concurrency (a writer committing concurrently only
@@ -244,7 +250,7 @@ class Workspace:
         if not os.path.isdir(dest):
             with self._lock:
                 if not os.path.isdir(dest):
-                    publish(dest, extract)
+                    publish(dest, write)
         return dest
 
     # -- reads (reference A3/A4, http_server.rs:249-265) -------------------

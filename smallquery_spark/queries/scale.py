@@ -568,9 +568,7 @@ def c12_compaction(spark, sf_dir):
     # run, CHECKRUN_r6_gen10). Real compaction picks its target from
     # table size (e.g. 128 MB-1 GB at warehouse scale); tying it to
     # measured bytes keeps the query meaningful at every fixture sf.
-    from smallquery_spark.operators.compaction import dir_stats as _ds
-
-    _, frag_bytes = _ds(spark, base)
+    _, frag_bytes = dir_stats(spark, base)
     before, after = compact_parquet_dir(
         spark,
         base,

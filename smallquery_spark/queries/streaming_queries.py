@@ -24,12 +24,13 @@ from smallquery_spark.queries.registry import query, t
 from smallquery_spark.session import scoped_confs
 from smallquery_spark.streaming import (
     drain,
-    epoch_committed,
     events_stream,
+    ingest_epochs,
     run_to_df,
+    stage_slices,
     state_partitions_for,
 )
-from smallquery_spark.streaming.runner import _committed_epochs, _epoch_commit
+from smallquery_spark.streaming.runner import _committed_epochs
 
 _DEC = "decimal(18,2)"
 
@@ -695,36 +696,6 @@ def b68_state_store_reader(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _stage_doc_slices(spark, df, k: int, prefix: str, id_col: str = "doc_id"):
-    """Write a frame as k id-ordered parquet slices; return
-    (work_root, slices_dir). Slice i holds a contiguous ``id_col`` range
-    and mtimes ascend with i, so the file-stream source consumes the
-    corpus chronologically one slice per micro-batch."""
-    import glob
-    import tempfile
-    import time as _time
-
-    from smallquery_spark.queries.tmpdirs import (
-        prune_stale,
-        register_cleanup,
-    )
-
-    prune_stale(prefix)
-    root = register_cleanup(tempfile.mkdtemp(prefix=prefix))
-    out = os.path.join(root, "slices")
-    (
-        df.repartitionByRange(k, id_col)
-        .sortWithinPartitions(id_col)
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    parts = sorted(glob.glob(os.path.join(out, "part-*.parquet")))
-    base = _time.time() - 10 * len(parts)
-    for i, p in enumerate(parts):
-        os.utime(p, (base + 10 * i, base + 10 * i))
-    return root, out
-
-
 @query(
     "c11_streaming_dedup",
     oracle="""
@@ -759,26 +730,20 @@ def c11_streaming_dedup(spark, sf_dir):
     treats NULL fingerprints as equal while the oracle's ``e.fp =
     s.fp`` never matches NULL — the two semantics would diverge if a
     fixture ever carried NULL text. Index appends are epoch-keyed and
-    idempotent (``_epoch_commit``)."""
+    idempotent (``ingest_epochs``)."""
     docs = (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 400)
         .filter(F.col("text").isNotNull())
     )
-    root, slices = _stage_doc_slices(spark, docs, 4, "smallquery_sdedup_")
-    index_dir = os.path.join(root, "digest_index")
-    schema = spark.read.parquet(slices).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(slices)
+    root, _ = stage_slices(
+        spark,
+        [docs.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id")],
+        "smallquery_sdedup_",
     )
+    index_dir = os.path.join(root, "digest_index")
 
-    def _ingest(batch_df, epoch_id):
-        sess = batch_df.sparkSession
-        if epoch_committed(index_dir, epoch_id):
-            return  # replayed epoch after restart: already committed
+    def _step(batch_df, _epoch_id):
         fresh = (
             batch_df.withColumn("__h", F.md5(F.substring("text", 1, 40)))
             .groupBy("__h")
@@ -786,17 +751,11 @@ def c11_streaming_dedup(spark, sf_dir):
         )
         committed = _committed_epochs(index_dir)
         if committed:
-            idx = sess.read.parquet(*committed).select("__h")
+            idx = batch_df.sparkSession.read.parquet(*committed).select("__h")
             fresh = fresh.join(idx, "__h", "left_anti")
-        _epoch_commit(fresh.select("doc_id", "__h"), index_dir, epoch_id)
+        yield fresh.select("doc_id", "__h")
 
-    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
-        drain(
-            sdf.writeStream.foreachBatch(_ingest)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt")),
-            "c11_streaming_dedup",
-        )
+    ingest_epochs(spark, root, index_dir, _step, "c11_streaming_dedup")
     return spark.read.parquet(*_committed_epochs(index_dir)).select("doc_id")
 
 
@@ -856,15 +815,12 @@ def c2_streaming_neardup(spark, sf_dir):
         all_docs.filter(F.col("doc_id") < 150)
     ).dropDuplicates(["doc_id"])
     total = docs.count()
-    root, slices = _stage_doc_slices(spark, docs, 3, "smallquery_sndup_")
-    index_dir = os.path.join(root, "sig_index")
-    schema = spark.read.parquet(slices).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(slices)
+    root, slices = stage_slices(
+        spark,
+        [docs.repartitionByRange(3, "doc_id").sortWithinPartitions("doc_id")],
+        "smallquery_sndup_",
     )
+    index_dir = os.path.join(root, "sig_index")
 
     ndx = NearDupIndex(
         spark, f"sndup_{os.path.basename(root).rsplit('_', 1)[-1]}", n_buckets=8
@@ -872,12 +828,10 @@ def c2_streaming_neardup(spark, sf_dir):
     ndx.drop()
     bands, rows_per_band = banded_config(0.5)
 
-    def _ingest(batch_df, epoch_id):
-        if epoch_committed(index_dir, epoch_id):
-            return  # replayed epoch after restart: already committed
+    def _step(batch_df, _epoch_id):
         # checkpoint the signatures once (ingest_epoch fans them out to
-        # ~5 consumers); unpersist both at epoch end so per-epoch blocks
-        # never accumulate across micro-batches
+        # ~5 consumers); unpersist both once the epoch commits so
+        # per-epoch blocks never accumulate across micro-batches
         sig = _banded_sig_df(
             batch_df, bands=bands, rows_per_band=rows_per_band
         ).localCheckpoint(eager=True)
@@ -888,18 +842,13 @@ def c2_streaming_neardup(spark, sf_dir):
         # append-after-commit would instead let the NEXT epoch run
         # against an index missing this one (silent under-dropping)
         ndx.append(surv)
-        _epoch_commit(surv, index_dir, epoch_id)
+        yield surv
         sig.unpersist()
         surv.unpersist()
 
     try:
+        ingest_epochs(spark, root, index_dir, _step, "c2_streaming_neardup")
         with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
-            drain(
-                sdf.writeStream.foreachBatch(_ingest)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(root, "ckpt")),
-                "c2_streaming_neardup",
-            )
             # output-side exact dedup on id: the at-least-once half of the
             # ingest contract. append()'s guard keeps the INDEX clean under
             # upstream re-sends, but a re-sent already-accepted id passes
@@ -915,10 +864,8 @@ def c2_streaming_neardup(spark, sf_dir):
 
             # sequential reference: the same step applied slice-by-slice
             # through the BATCH engine (no stream source, no foreachBatch)
-            import glob
-
             ref_idx = None
-            for part in sorted(glob.glob(os.path.join(slices, "part-*.parquet"))):
+            for part in slices:
                 sig = _banded_sig_df(
                     spark.read.parquet(part),
                     bands=bands,
@@ -1037,21 +984,16 @@ def c3_streaming_ann(spark, sf_dir):
         spark, ivf_assign(base, cents), cents, books, f"c3sann_{pid}"
     )
     tname_rb = None
-    root, slices = _stage_doc_slices(
-        spark, arriving_raw, 3, "smallquery_sann_", id_col="vec_id"
+    root, _ = stage_slices(
+        spark,
+        [arriving_raw.repartitionByRange(3, "vec_id").sortWithinPartitions("vec_id")],
+        "smallquery_sann_",
     )
     signals_dir = os.path.join(root, "signals")
     _, build_stats = ivf_retrain_trigger(spark, tname, n_cells=n_cells)
     build_imb = build_stats["imbalance"]
     build_fit = assignment_fit(base, cents)
     build_gap = pq_fit_gap(base, cents, books)
-    schema = spark.read.parquet(slices).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(slices)
-    )
 
     # the per-epoch imbalance trigger rides the maintained histogram
     # (r12 default): exact-delta folds from the append's return, the
@@ -1060,10 +1002,8 @@ def c3_streaming_ann(spark, sf_dir):
     # and the quantizer-stamp guard re-seeding after any retrain
     hist = IngestHistogram(spark, tname, n_cells=n_cells)
 
-    def _ingest(batch_df, epoch_id):
+    def _step(batch_df, epoch_id):
         sess = batch_df.sparkSession
-        if epoch_committed(signals_dir, epoch_id):
-            return  # replayed epoch after restart: already committed
         batch = batch_df.select(
             F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec")
         ).localCheckpoint(eager=True)
@@ -1084,17 +1024,12 @@ def c3_streaming_ann(spark, sf_dir):
             "epoch long, fit double, gap double, imbalance double,"
             " imb_trigger boolean",
         )
-        _epoch_commit(rec, signals_dir, epoch_id)
+        yield rec
         batch.unpersist()
 
     try:
+        ingest_epochs(spark, root, signals_dir, _step, "c3_streaming_ann")
         with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
-            drain(
-                sdf.writeStream.foreachBatch(_ingest)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(root, "ckpt")),
-                "c3_streaming_ann",
-            )
             recs = sorted(
                 spark.read.parquet(*_committed_epochs(signals_dir)).collect(),
                 key=lambda r: r["epoch"],
@@ -1193,39 +1128,6 @@ def c3_streaming_ann(spark, sf_dir):
             drop_index(spark, tname_rb)
 
 
-def _stage_epoch_files(spark, dfs, prefix: str):
-    """Write each frame in ``dfs`` as ONE parquet slice file with
-    ascending mtimes, so the file-stream source delivers them as
-    micro-batches in list order — the heterogeneous-epoch variant of
-    _stage_doc_slices (which range-partitions ONE frame and cannot
-    interleave a synthetic drift epoch between in-distribution ones).
-    Returns (work_root, slices_dir)."""
-    import glob
-    import shutil
-    import tempfile
-    import time as _time
-
-    from smallquery_spark.queries.tmpdirs import (
-        prune_stale,
-        register_cleanup,
-    )
-
-    prune_stale(prefix)
-    root = register_cleanup(tempfile.mkdtemp(prefix=prefix))
-    slices = os.path.join(root, "slices")
-    os.makedirs(slices)
-    base_t = _time.time() - 10 * len(dfs)
-    for i, df in enumerate(dfs):
-        tmp = os.path.join(root, f"stage_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(slices, f"slice-{i:04d}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (base_t + 10 * i, base_t + 10 * i))
-        shutil.rmtree(tmp)
-    return root, slices
-
-
 @query(
     "c3_stream_retrain_cycle",
     oracle=(
@@ -1282,11 +1184,8 @@ def c3_stream_retrain_cycle(spark, sf_dir):
     the rebuild's rows (no epoch lost, none doubled, through the
     fire/retrain/crash/replay sequence). Retrain pause vs epoch
     cadence at gen100 scale: RETRAIN_CYCLE_gen100.json."""
-    import glob
-
     import numpy as np
 
-    from smallquery_spark.errors import StaleQuantizerError
     from smallquery_spark.operators.pq import (
         append_ivfpq_epoch,
         drop_index,
@@ -1347,8 +1246,12 @@ def c3_stream_retrain_cycle(spark, sf_dir):
         "c_id long, vec array<float>",
     )
     # epoch order: cal, quiet, HOT (fires), retrain-mid-epoch, resume
-    root, slices = _stage_epoch_files(
-        spark, [quarters[0], quarters[1], hot, quarters[2], quarters[3]],
+    root, slices = stage_slices(
+        spark,
+        [
+            q.coalesce(1)
+            for q in (quarters[0], quarters[1], hot, quarters[2], quarters[3])
+        ],
         "smallquery_srtc_",
     )
     signals_dir = os.path.join(root, "signals")
@@ -1358,18 +1261,9 @@ def c3_stream_retrain_cycle(spark, sf_dir):
     _, build_stats = ivf_retrain_trigger(spark, tname, n_cells=n_cells)
     baseline = {"imb": build_stats["imbalance"]}
     hist = IngestHistogram(spark, tname, n_cells=n_cells)
-    schema = spark.read.parquet(slices).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(slices)
-    )
 
-    def _ingest(batch_df, epoch_id):
+    def _step(batch_df, epoch_id):
         sess = batch_df.sparkSession
-        if epoch_committed(signals_dir, epoch_id):
-            return  # committed epoch replayed after restart
         batch = batch_df.localCheckpoint(eager=True)
         cl, bl = load_index_meta(sess, tname)
         # the maintenance plane serves a pending retrain request HERE —
@@ -1379,7 +1273,7 @@ def c3_stream_retrain_cycle(spark, sf_dir):
         # epochs = exactly what the index holds; the retrain contract).
         if os.path.exists(fire_req) and not os.path.exists(fire_done):
             corpus_now = base.unionByName(
-                sess.read.parquet(slices).select("c_id", "vec").join(
+                sess.read.parquet(*slices).select("c_id", "vec").join(
                     sess.table(tname).select("c_id"), "c_id", "left_semi"
                 )
             )
@@ -1408,33 +1302,27 @@ def c3_stream_retrain_cycle(spark, sf_dir):
             "epoch long, imbalance double, fired boolean, gen string,"
             " source string",
         )
-        _epoch_commit(rec, signals_dir, epoch_id)
+        yield rec
         batch.unpersist()
 
     try:
-        with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
-            stale_raised = False
-            try:
-                drain(
-                    sdf.writeStream.foreachBatch(_ingest)
-                    .outputMode("append")
-                    .option("checkpointLocation", os.path.join(root, "ckpt")),
-                    "c3_stream_retrain_cycle_run1",
-                )
-            except StreamingQueryException as e:  # the stale epoch kills run 1
-                # its MESSAGE carries the foreachBatch's Python traceback
-                # (repr does not)
-                stale_raised = "StaleQuantizerError" in str(e)
-                if not stale_raised:
-                    raise
-            # restart: Spark replays the in-flight epoch (fresh quantizer
-            # reload), then drains the resume epoch
-            drain(
-                sdf.writeStream.foreachBatch(_ingest)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(root, "ckpt")),
-                "c3_stream_retrain_cycle_run2",
+        stale_raised = False
+        try:
+            ingest_epochs(
+                spark, root, signals_dir, _step, "c3_stream_retrain_cycle_run1"
             )
+        except StreamingQueryException as e:  # the stale epoch kills run 1
+            # its MESSAGE carries the foreachBatch's Python traceback
+            # (repr does not)
+            stale_raised = "StaleQuantizerError" in str(e)
+            if not stale_raised:
+                raise
+        # restart on the same checkpoint: Spark replays the in-flight
+        # epoch (fresh quantizer reload), then drains the resume epoch
+        ingest_epochs(
+            spark, root, signals_dir, _step, "c3_stream_retrain_cycle_run2"
+        )
+        with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
             recs = {
                 r["epoch"]: r
                 for r in spark.read.parquet(

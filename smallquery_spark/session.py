@@ -88,9 +88,7 @@ def _cpu_count() -> int:
 
 def get_session(
     app_name: str = "smallquery_spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or return the existing) SparkSession.
 
@@ -106,7 +104,7 @@ def get_session(
         # boundary: e.g. local-cluster[4,8,8192] spawns 4 worker JVMs
         # with serialized netty shuffle — the closest this sandbox gets
         # to a cluster (tools/cluster_bench.py at 768dc6a).
-        .master(master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]")
+        .master(os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -116,7 +114,7 @@ def get_session(
     # runs that need a non-default (e.g. spark.driver.maxResultSize for
     # the full-oracle check at gen-sf10, where value-comparing a 60M-row
     # result legitimately collects multi-GB to the driver). Applied after
-    # _DEFAULTS, before extra_conf, so explicit callers still win.
+    # _DEFAULTS, so it wins over them.
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     for pair in env_conf.split(";"):
         if "=" in pair:
@@ -129,8 +127,6 @@ def get_session(
                 file=sys.stderr,
             )
             builder = builder.config(k.strip(), v.strip())
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)

@@ -216,14 +216,14 @@ class GitWorkspaceStreamReader(SimpleDataSourceStreamReader):
         return {"n": 0}
 
     def _rows_for(self, commits: list[str]) -> list[tuple]:
-        from smallquery_spark.errors import PathNotFound
+        from smallquery_spark.catalog.workspace import find_table
 
         ws = self._ws()
         rows: list[tuple] = []
         for commit in commits:
-            try:
-                path = ws.table_path(self.table, commit)
-            except PathNotFound:
+            # full ids from git log: extract each without resolving it
+            path = find_table(ws.extract(commit), self.table)
+            if path is None:
                 continue  # table absent at this commit
             for rec in _dataset(path).to_table().to_pylist():
                 row = tuple(rec.values())

@@ -43,6 +43,10 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
+# Read by parquet inference alone, so keyed for parquet alone: the query
+# registry sets it on first use, and keying CSV/JSON on it would re-infer
+# every text table (and rewrite its twin) read before that.
+_PARQUET_INFERENCE_CONFS = ("spark.sql.legacy.parquet.nanosAsLong",)
 
 # Keyed by real path, like registry._SCAN_SPLIT_CACHE; the value carries
 # everything inference depends on (file stamp, format, reader options,
@@ -64,11 +68,14 @@ def read_key(
     fmt, options = _format_options(path, fmt, None, options)
     real = os.path.realpath(path)
     st = os.stat(real)
+    confs = _INFERENCE_CONFS
+    if fmt == "parquet":
+        confs += _PARQUET_INFERENCE_CONFS
     key = (
         (st.st_mtime_ns, st.st_size),
         fmt,
         tuple(sorted((k, str(v)) for k, v in options.items())),
-        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+        tuple(spark.conf.get(c) for c in confs),
     )
     return real, key, hashlib.sha1(repr((real, key)).encode()).hexdigest()
 

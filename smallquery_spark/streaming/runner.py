@@ -7,6 +7,11 @@ oracle-comparable (SURVEY §5.2: "streaming ops use batch-equivalence
 with availableNow triggers"). In production the same pipeline definition
 would point at a live source and a real sink; nothing in the dataflow
 definition changes.
+
+Epoch-keyed ingest: :func:`stage_slices` writes frames as the ordered
+slice files of one file-stream source, and :func:`ingest_epochs` streams
+them one slice per micro-batch, skipping an epoch already committed to
+its store and committing the frame each step yields otherwise.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ from __future__ import annotations
 import os
 import re
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from smallquery_spark.session import scoped_confs
@@ -124,7 +130,7 @@ def unload_state_stores(spark: SparkSession) -> None:
     51-57 s across 3 runs, B53_LC_ANOM.json). ``StateStore.stop()``
     unloads all providers and stops the maintenance thread; both
     re-initialize lazily on the next stateful query (verified on Spark
-    4.1.2). Private API, so best-effort.
+    4.1.2). Private API, so best-effort: only its absence is tolerated.
 
     Scope: the py4j call reaches the DRIVER JVM only, so this releases
     state held there — i.e. it fixes local[] mode, where driver and
@@ -137,7 +143,10 @@ def unload_state_stores(spark: SparkSession) -> None:
     fragile, and the maintenance tick already bounds the window."""
     try:
         spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: E501
-    except Exception:
+    except (Py4JError, TypeError):
+        # private API gone on this Spark: a missing method raises
+        # Py4JError, a missing class resolves to a package that raises
+        # TypeError when called
         pass
 
 
@@ -176,8 +185,9 @@ def _epoch_dir(root: str, epoch_id: int) -> str:
 
 def epoch_committed(root: str, epoch_id: int) -> bool:
     """Whether epoch ``epoch_id`` of the epoch-keyed store at ``root``
-    committed (its ``_SUCCESS`` marker landed). foreachBatch sinks check
-    this first and skip a committed epoch that Spark replays after a
+    committed (its ``_SUCCESS`` marker landed). The epoch-ingest loop
+    (:func:`ingest_epochs`, through :func:`_skip_then_commit`) checks
+    this first and skips a committed epoch that Spark replays after a
     restart."""
     return os.path.exists(os.path.join(_epoch_dir(root, epoch_id), "_SUCCESS"))
 
@@ -201,10 +211,94 @@ def _epoch_commit(df: DataFrame, root: str, epoch_id: int) -> None:
     epoch owns its subdirectory, written with mode=overwrite, so a
     crashed partial write (no ``_SUCCESS``) is replaced wholesale when
     the epoch replays. It does not skip a committed epoch; that is the
-    caller's :func:`epoch_committed` guard. Together they are the
-    epoch_id-keyed discipline foreachBatch's exactly-once contract
-    requires."""
+    :func:`epoch_committed` guard; the epoch-ingest loop
+    (:func:`ingest_epochs`, through :func:`_skip_then_commit`) pairs the
+    two into the epoch_id-keyed discipline foreachBatch's exactly-once
+    contract requires."""
     df.write.mode("overwrite").parquet(_epoch_dir(root, epoch_id))
+
+
+def _skip_then_commit(store: str, step):
+    """foreachBatch function over the epoch-keyed store at ``store``: an
+    epoch already committed there (Spark replays the in-flight epoch
+    after a restart) is skipped without calling ``step``; otherwise
+    ``step(batch_df, epoch_id)`` yields the frame to commit, which is
+    committed as that epoch, and then ``step`` runs to its end — the
+    place to release what it cached for the epoch."""
+
+    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
+        if epoch_committed(store, epoch_id):
+            return
+        frames = step(batch_df, epoch_id)
+        _epoch_commit(next(frames), store, epoch_id)
+        next(frames, None)
+
+    return _batch
+
+
+def stage_slices(spark: SparkSession, frames, prefix: str):
+    """Write ``frames`` as the slice files of one file-stream source;
+    return ``(root, slice_files)``.
+
+    ``root`` is a fresh work dir (``prefix``-named, removed at exit);
+    the slices live in ``<root>/slices``. Every part file of every frame
+    becomes one slice, in frame order and then part order, with
+    ascending mtimes, so a one-file-per-trigger stream
+    (:func:`ingest_epochs`) delivers them as micro-batches in that
+    order: a ``repartitionByRange(k, id)`` frame gives k id-ordered
+    epochs, a list of ``coalesce(1)`` frames one epoch per frame."""
+    import glob
+    import shutil
+    import tempfile
+    import time
+
+    from smallquery_spark.queries.tmpdirs import prune_stale, register_cleanup
+
+    prune_stale(prefix)
+    root = register_cleanup(tempfile.mkdtemp(prefix=prefix))
+    slices = os.path.join(root, "slices")
+    os.makedirs(slices)
+    files: list[str] = []
+    for i, df in enumerate(frames):
+        tmp = os.path.join(root, f"stage_{i}")
+        df.write.parquet(tmp)
+        for part in sorted(glob.glob(os.path.join(tmp, "part-*.parquet"))):
+            files.append(os.path.join(slices, f"slice-{len(files):04d}.parquet"))
+            shutil.move(part, files[-1])
+        shutil.rmtree(tmp)
+    base = time.time() - 10 * len(files)
+    for i, f in enumerate(files):
+        os.utime(f, (base + 10 * i, base + 10 * i))
+    return root, files
+
+
+def ingest_epochs(
+    spark: SparkSession, root: str, store: str, step, name: str
+) -> None:
+    """Stream the slices :func:`stage_slices` staged under ``root``, one
+    slice file per micro-batch, through ``step`` into the epoch-keyed
+    store at ``store`` (:func:`_skip_then_commit`); drain with
+    :func:`drain` under 8 shuffle partitions, checkpointed at
+    ``<root>/ckpt``. Running it again on the same ``root`` resumes from
+    that checkpoint.
+
+    ``step(batch_df, epoch_id)`` is a generator: it does the epoch's
+    work, yields the one frame to commit as that epoch, and its code
+    after the ``yield`` runs once the epoch is committed."""
+    slices = os.path.join(root, "slices")
+    sdf = (
+        spark.readStream.schema(spark.read.parquet(slices).schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(slices)
+    )
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "8"}):
+        drain(
+            sdf.writeStream.foreachBatch(_skip_then_commit(store, step))
+            .outputMode("append")
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
+            name,
+        )
 
 
 def run_to_df(
@@ -256,15 +350,14 @@ def run_to_df(
             tempfile.mkdtemp(prefix="smallquery_runsink_")
         )
         data_dir = os.path.join(out_root, qname)
-        complete = output_mode == "complete"
-
-        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-            # complete mode: each epoch IS the full result, so overwrite
-            # is idempotent; append mode is epoch-keyed
-            if complete:
+        if output_mode == "complete":
+            # each epoch IS the full result, so overwrite is idempotent
+            def _sink(batch_df: DataFrame, _epoch_id: int) -> None:
                 batch_df.write.mode("overwrite").parquet(data_dir)
-            elif not epoch_committed(data_dir, epoch_id):
-                _epoch_commit(batch_df, data_dir, epoch_id)
+        else:
+            _sink = _skip_then_commit(
+                data_dir, lambda batch_df, _epoch_id: iter((batch_df,))
+            )
 
         writer = (
             sdf.writeStream.foreachBatch(_sink)

@@ -74,6 +74,27 @@ def test_conf_or_option_change_invalidates(spark, tmp_path):
     assert {f.dataType for f in df.schema} == {T.StringType()}
 
 
+def test_nanos_as_long_change_invalidates(spark, tmp_path):
+    """nanosAsLong decides how parquet TIMESTAMP(NANOS) infers, so after
+    a read a flipped conf reads as an uncached read does."""
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}), path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert read_any(spark, path).schema["ts"].dataType == T.LongType()
+        spark.conf.set(key, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            spark.read.parquet(path).schema
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            read_any(spark, path)
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_concurrent_reads_get_their_own_schema(spark, tmp_path):
     """Threads reading different files through the shared cache each get
     their file's schema, on misses and on hits."""

@@ -383,3 +383,169 @@ def test_only_runner_drains_available_now():
             ):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert offenders == []
+
+
+def _calls_any(node, names) -> bool:
+    import ast
+
+    return any(
+        isinstance(n, ast.Call)
+        and (
+            (isinstance(n.func, ast.Name) and n.func.id in names)
+            or (isinstance(n.func, ast.Attribute) and n.func.attr in names)
+        )
+        for n in ast.walk(node)
+    )
+
+
+def test_only_runner_runs_epoch_ingest():
+    """runner.ingest_epochs is the package's one epoch-ingest loop: no
+    other module under smallquery_spark/ opens a one-file-per-trigger
+    stream (maxFilesPerTrigger) or passes foreachBatch a function that
+    calls epoch_committed or _epoch_commit."""
+    import ast
+    import collections
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "smallquery_spark"
+    runner = pkg / "streaming" / "runner.py"
+    guards = {"epoch_committed", "_epoch_commit"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == runner:
+            continue
+        tree = ast.parse(path.read_text())
+        defs = collections.defaultdict(list)
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[node.name].append(node)
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            where = f"{path.relative_to(pkg)}:{node.lineno}"
+            attr = node.func.attr
+            if attr in ("option", "options") and (
+                any(
+                    isinstance(a, ast.Constant) and a.value == "maxFilesPerTrigger"
+                    for a in node.args
+                )
+                or any(k.arg == "maxFilesPerTrigger" for k in node.keywords)
+            ):
+                offenders.append(where)
+            if attr == "foreachBatch" and node.args:
+                fn = node.args[0]
+                bodies = defs[fn.id] if isinstance(fn, ast.Name) else [fn]
+                if any(_calls_any(b, guards) for b in bodies):
+                    offenders.append(where)
+    assert offenders == []
+
+
+def test_stage_slices_orders_frames_then_parts(spark):
+    """Every part file of every frame is one slice, in frame order and
+    then part order, with ascending mtimes."""
+    from smallquery_spark.streaming import stage_slices
+
+    frames = [
+        spark.range(0, 4).repartitionByRange(2, "id").sortWithinPartitions("id"),
+        spark.range(10, 11).coalesce(1),
+    ]
+    root, files = stage_slices(spark, frames, "smallquery_test_stage_")
+    assert [os.path.dirname(f) for f in files] == [os.path.join(root, "slices")] * 3
+    assert sorted(os.listdir(os.path.join(root, "slices"))) == [
+        os.path.basename(f) for f in files
+    ]
+    ids = [sorted(r.id for r in spark.read.parquet(f).collect()) for f in files]
+    assert all(ids) and sum(ids, []) == [0, 1, 2, 3, 10]
+    mtimes = [os.stat(f).st_mtime for f in files]
+    assert mtimes == sorted(set(mtimes))
+
+
+def test_ingest_epochs_restart_commits_each_epoch_once(spark, monkeypatch):
+    """A step that dies on epoch 1 kills the run after epoch 0 committed.
+    A second run on the same root never calls the step for epoch 0 and
+    commits epoch 1 once; a third run on a fresh checkpoint replays both
+    epochs against the same store and calls the step for neither."""
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+
+    from smallquery_spark.streaming import ingest_epochs, runner, stage_slices
+    from smallquery_spark.streaming.runner import _committed_epochs
+
+    frames = [spark.createDataFrame([(i,)], "id long") for i in (10, 11)]
+    root, _ = stage_slices(
+        spark, [f.coalesce(1) for f in frames], "smallquery_test_ingest_"
+    )
+    store = os.path.join(root, "store")
+    commits, calls, released = [], [], []
+    commit = runner._epoch_commit
+
+    def counting_commit(df, store_root, epoch_id):
+        commits.append(epoch_id)
+        commit(df, store_root, epoch_id)
+
+    monkeypatch.setattr(runner, "_epoch_commit", counting_commit)
+    dies = [True]
+
+    def step(batch_df, epoch_id):
+        calls.append(epoch_id)
+        if epoch_id == 1 and dies[0]:
+            raise RuntimeError("epoch 1 dies")
+        yield batch_df
+        released.append((epoch_id, list(commits)))
+
+    with pytest.raises(StreamingQueryException, match="epoch 1 dies"):
+        ingest_epochs(spark, root, store, step, "ingest_run1")
+    assert (calls, commits) == ([0, 1], [0])
+
+    dies[0] = False
+    calls.clear()
+    ingest_epochs(spark, root, store, step, "ingest_run2")
+    assert (calls, commits) == ([1], [0, 1])
+    # the code after each yield ran once its epoch had committed
+    assert released == [(0, [0]), (1, [0, 1])]
+    epochs = _committed_epochs(store)
+    assert [os.path.basename(e) for e in epochs] == [
+        "epoch_0000000000", "epoch_0000000001"
+    ]
+    assert [[r.id for r in spark.read.parquet(e).collect()] for e in epochs] == [
+        [10], [11]
+    ]
+
+    shutil.rmtree(os.path.join(root, "ckpt"))
+    calls.clear()
+    ingest_epochs(spark, root, store, step, "ingest_run3")
+    assert (calls, commits) == ([], [0, 1])
+
+
+class _JVM:
+    """A py4j view whose every attribute is itself and whose call raises."""
+
+    def __init__(self, exc):
+        self._exc = exc
+
+    def __getattr__(self, _name):
+        return self
+
+    def __call__(self):
+        raise self._exc
+
+
+class _Session:
+    def __init__(self, exc):
+        self._jvm = _JVM(exc)
+
+
+def test_unload_state_stores_is_loud_past_py4j():
+    """unload_state_stores tolerates only the private API being absent
+    (py4j's error): any other failure propagates."""
+    from py4j.protocol import Py4JError
+
+    from smallquery_spark.streaming import unload_state_stores
+
+    unload_state_stores(_Session(Py4JError("no such method")))
+    with pytest.raises(RuntimeError, match="driver gone"):
+        unload_state_stores(_Session(RuntimeError("driver gone")))

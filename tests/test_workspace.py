@@ -533,12 +533,31 @@ def test_gitws_stream_surfaces_snapshot_errors(mount, monkeypatch):
     )
     commits = reader._history()
 
-    def broken(self, version="latest"):
+    def broken(self, commit):
         raise OSError("disk gone")
 
-    monkeypatch.setattr(Workspace, "snapshot", broken)
+    monkeypatch.setattr(Workspace, "extract", broken)
     with pytest.raises(OSError, match="disk gone"):
         reader._rows_for(commits)
+
+
+def test_gitws_history_replay_resolves_nothing(fresh, monkeypatch):
+    """The stream's first batch extracts each commit from ``git log`` by
+    its full id: no ``cat-file`` resolve per commit."""
+    from smallquery_spark.catalog import workspace as ws_mod
+    from smallquery_spark.sources.gitws_datasource import GitWorkspaceStreamReader
+
+    mount, repo, _a, _b = fresh
+    _commit(repo, "n_nationkey,n_name\n0,ALGERIA\n1,ARGENTINA\n2,BRAZIL\n")
+    reader = GitWorkspaceStreamReader(
+        {"mount": mount, "workspace": "ws", "table": "nation"}, None
+    )
+    counting = _CountingSubprocess()
+    monkeypatch.setattr(ws_mod, "subprocess", counting)
+    rows, end = reader.read({"n": 0})
+    assert end == {"n": 3}
+    assert len(list(rows)) == 1 + 2 + 3
+    assert [r for r in counting.runs if "cat-file" in r] == []
 
 
 @pytest.fixture(scope="module")
