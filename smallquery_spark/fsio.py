@@ -238,10 +238,13 @@ class HadoopFS:
     def touch(self, uri: str, mtime_s: float | None = None) -> bool:
         """Set a path's modification time (now by default) — the lease
         RENEWAL primitive. Returns False instead of raising when the
-        scheme does not support setTimes (object stores): renewal is
-        best-effort liveness signalling; the commit-point FENCE is what
-        keeps an eviction safe, renewal only makes it unlikely."""
+        JVM refuses setTimes (an object store without it, or a path
+        gone underneath): renewal is best-effort liveness signalling;
+        the commit-point FENCE is what keeps an eviction safe, renewal
+        only makes it unlikely."""
         import time as _time
+
+        from py4j.protocol import Py4JJavaError
 
         try:
             self._fs.setTimes(
@@ -250,7 +253,7 @@ class HadoopFS:
                 -1,
             )
             return True
-        except Exception:
+        except Py4JJavaError:
             return False
 
     def mtime(self, uri: str) -> float | None:
@@ -297,10 +300,10 @@ def fs_for(spark: SparkSession, uri: str) -> HadoopFS:
 # - same-host owner whose pid is dead -> stale (os.kill(pid, 0) via the
 #   tmpdirs liveness rule: EPERM counts as ALIVE — an existing pid under
 #   another user is exactly the live-writer case);
-# - any owner whose lease mtime is older than ``stale_after`` seconds
-#   -> stale. ``stale_after`` defaults from the documented env knob
-#   ``SMALLQUERY_LEASE_STALE_AFTER_S`` (unset = no TTL — same-host
-#   pid-liveness only). Cross-host liveness is unknowable from here,
+# - any owner whose lease mtime is older than the TTL -> stale. The
+#   TTL is the deployment setting ``SMALLQUERY_LEASE_STALE_AFTER_S``
+#   (seconds; unset = no TTL — same-host pid-liveness only), and it is
+#   the only way to set one. Cross-host liveness is unknowable from here,
 #   so a multi-host deployment that wants a crashed remote driver's
 #   lease to expire MUST set the knob — without it such a lease wedges
 #   every retrain/compact/epoch-append on that index until manually
@@ -380,7 +383,7 @@ def _lease_stale(
     try:
         owner = json.loads(text)
         pid, host = int(owner["pid"]), str(owner["host"])
-    except Exception:
+    except ValueError:  # torn create: the JSON write never landed
         return age > _TORN_LEASE_GRACE_S
     if stale_after is not None and age > stale_after:
         return True
@@ -389,18 +392,12 @@ def _lease_stale(
     return False
 
 
-def acquire_dir_lease(
-    fs: HadoopFS,
-    dir_uri: str,
-    op: str,
-    stale_after: float | None = None,
-) -> str:
+def acquire_dir_lease(fs: HadoopFS, dir_uri: str, op: str) -> str:
     """Acquire the maintenance lease on ``dir_uri`` for operation
     ``op``; returns the lease token (pass it to release_dir_lease).
-    Raises IndexBusyError when another LIVE writer holds it.
-    ``stale_after=None`` (the default) resolves the TTL from the
-    ``SMALLQUERY_LEASE_STALE_AFTER_S`` env knob — see the module
-    comment for why enabling it is safe (renewal + commit fencing)."""
+    Raises IndexBusyError when another LIVE writer holds it. The TTL
+    is ``SMALLQUERY_LEASE_STALE_AFTER_S`` — see the module comment for
+    why enabling it is safe (renewal + commit fencing)."""
     import json
     import os
     import socket
@@ -409,8 +406,6 @@ def acquire_dir_lease(
 
     from smallquery_spark.errors import IndexBusyError
 
-    if stale_after is None:
-        stale_after = default_stale_after()
     lease = lease_path(dir_uri)
     token = uuid.uuid4().hex
     body = json.dumps(
@@ -425,7 +420,7 @@ def acquire_dir_lease(
     for _ in range(5):
         if fs.create_text_exclusive(lease, body):
             return token
-        if not _lease_stale(fs, lease, stale_after):
+        if not _lease_stale(fs, lease, default_stale_after()):
             text = fs.read_text(lease) or "<torn>"
             raise IndexBusyError(
                 f"{op}: maintenance lease on {dir_uri} is held by a live"
@@ -453,7 +448,7 @@ def release_dir_lease(fs: HadoopFS, dir_uri: str, token: str) -> None:
     try:
         if json.loads(text).get("token") != token:
             return
-    except Exception:
+    except ValueError:  # torn: not our lease's bytes
         return
     fs.delete(lease)
 
@@ -462,21 +457,12 @@ class dir_lease:
     """Context manager form: ``with dir_lease(fs, loc, "retrain") as l:
     ... l.fence("swap") ...``"""
 
-    def __init__(
-        self,
-        fs: HadoopFS,
-        dir_uri: str,
-        op: str,
-        stale_after: float | None = None,
-    ) -> None:
+    def __init__(self, fs: HadoopFS, dir_uri: str, op: str) -> None:
         self._fs, self._dir, self._op = fs, dir_uri, op
-        self._stale_after = stale_after
         self._token: str | None = None
 
     def __enter__(self) -> "dir_lease":
-        self._token = acquire_dir_lease(
-            self._fs, self._dir, self._op, self._stale_after
-        )
+        self._token = acquire_dir_lease(self._fs, self._dir, self._op)
         return self
 
     def __exit__(self, *exc) -> None:
@@ -505,7 +491,7 @@ class dir_lease:
         if text is not None:
             try:
                 held = json.loads(text).get("token") == self._token
-            except Exception:
+            except ValueError:  # torn: not our lease's bytes
                 held = False
         if not held:
             raise LeaseLostError(

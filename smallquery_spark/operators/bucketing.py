@@ -420,10 +420,7 @@ def delete_bucketed(
         for n in fs.list_names(loc):
             if n.startswith("_deleted-"):
                 fs.delete(join_uri(loc, n))
-        try:
-            spark.catalog.refreshTable(table)
-        except Exception:
-            pass
+        spark.catalog.refreshTable(table)
         return int(n_victims)
 
 

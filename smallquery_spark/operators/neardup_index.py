@@ -246,10 +246,7 @@ class NearDupIndex:
             ),
         }
         for tname in (self.bands_table, self.hashes_table):
-            try:
-                self.spark.catalog.refreshTable(tname)
-            except Exception:
-                pass
+            self.spark.catalog.refreshTable(tname)
         return out
 
     # -- write path ----------------------------------------------------
@@ -312,10 +309,7 @@ class NearDupIndex:
         # owning session's relation cache so non-batch readers
         # (doc_count, post-run audits) see the appended files too
         for tname in (self.bands_table, self.hashes_table):
-            try:
-                self.spark.catalog.refreshTable(tname)
-            except Exception:
-                pass
+            self.spark.catalog.refreshTable(tname)
 
     # -- maintenance ---------------------------------------------------
 

@@ -438,10 +438,7 @@ def append_ivfpq(
         .partitionBy("cell")
         .saveAsTable(index_table)
     )
-    try:
-        spark.catalog.refreshTable(index_table)
-    except Exception:
-        pass
+    spark.catalog.refreshTable(index_table)
 
 
 EPOCHS_DIR = "_epochs"
@@ -478,7 +475,7 @@ def _epoch_marker_cells(fs, loc: str) -> dict[int, set[int]]:
         text = fs.read_text(join_uri(loc, EPOCHS_DIR, n))
         try:
             marker = json.loads(text or "")
-        except Exception:
+        except ValueError:
             continue  # torn write: the commit never landed
         out[int(n.split("-", 1)[1])] = {
             int(c) for c in (marker.get("cells") or {})
@@ -632,7 +629,7 @@ def append_ivfpq_epoch(
         if marker_text is not None:
             try:
                 json.loads(marker_text)
-            except Exception:
+            except ValueError:
                 # torn marker write: the commit never landed — fall
                 # through to the full replay path, which re-verifies the
                 # committed cells and overwrites the marker
@@ -743,10 +740,7 @@ def append_ivfpq_epoch(
         ):
             _sync_partitions(spark, index_table)
         elif moved:
-            try:
-                spark.catalog.refreshTable(index_table)
-            except Exception:
-                pass
+            spark.catalog.refreshTable(index_table)
         # commit point: the marker makes the epoch's idempotency durable
         # beyond its file names (compaction may merge them away) and
         # records the content fingerprints for divergence detection.
@@ -825,12 +819,14 @@ def _index_scan(spark, index_table: str) -> DataFrame:
     IN-list, pinned in tests/test_plans.py); the cost is one recursive
     listing per search batch, the same order as the probe's own
     IN-list collect."""
+    from pyspark.errors import AnalysisException
+
     from smallquery_spark.fsio import table_location
 
     loc = table_location(spark, index_table)
     try:
         return spark.read.option("basePath", loc).parquet(loc)
-    except Exception:
+    except AnalysisException:
         # an EMPTY index (no data files yet — only the hidden stamp
         # and meta) cannot infer a schema from the path; the catalog's
         # declared schema is authoritative for the empty case
@@ -964,10 +960,16 @@ def _meta_gen_of(spark, path: str) -> str | None:
     leaves a directory with no complete parquet footer, and recovery
     must treat that exactly like 'no aside copy' (fall through to the
     ``_meta_old`` rollback / re-save guidance) rather than surface an
-    unrelated schema-inference error (ADVICE r10)."""
+    unrelated schema-inference error (ADVICE r10). An absent or empty
+    directory is an ``AnalysisException`` (PATH_NOT_FOUND,
+    UNABLE_TO_INFER_SCHEMA); a torn footer fails the footer-read job,
+    which py4j raises as ``Py4JJavaError``."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
     try:
         row = spark.read.parquet(path).select("gen").limit(1).collect()
-    except Exception:
+    except (AnalysisException, Py4JJavaError):
         return None
     return row[0][0] if row else None
 
@@ -1171,10 +1173,7 @@ def _sync_partitions(spark, index_table: str) -> None:
     _index_scan); the sync keeps spark.table()/compaction consumers
     coherent."""
     spark.sql(f"MSCK REPAIR TABLE {index_table} SYNC PARTITIONS")
-    try:
-        spark.catalog.refreshTable(index_table)
-    except Exception:
-        pass
+    spark.catalog.refreshTable(index_table)
 
 
 def drop_index(spark, index_table: str) -> None:
@@ -1187,11 +1186,13 @@ def drop_index(spark, index_table: str) -> None:
     r10). This is the blessed drop for lifecycle-managed indexes;
     dropping an absent table is a no-op (the scratch sweep still
     runs, so a drop retried after a partial failure converges)."""
+    from pyspark.errors import AnalysisException
+
     from smallquery_spark.fsio import fs_for, lease_path
 
     try:
         loc, staged, old = _retrain_paths(spark, index_table)
-    except Exception:
+    except AnalysisException:
         # table already gone from the catalog: its location (and the
         # sibling scratch naming) is unrecoverable — nothing to sweep
         spark.sql(f"DROP TABLE IF EXISTS {index_table}")
@@ -1804,10 +1805,7 @@ def delete_ivfpq(
         fs.delete(staging)
         fs.delete(loc.rstrip("/") + ".compact_tmp")
         if recovered:
-            try:
-                spark.catalog.refreshTable(index_table)
-            except Exception:
-                pass
+            spark.catalog.refreshTable(index_table)
         if isinstance(ids, DataFrame):
             ids_df = ids.select(corpus_id).distinct()
             # one count against the maintenance op's cost: the size

@@ -916,10 +916,7 @@ def append_ivf(
         .partitionBy("cell")
         .saveAsTable(index_table)
     )
-    try:
-        spark.catalog.refreshTable(index_table)
-    except Exception:
-        pass
+    spark.catalog.refreshTable(index_table)
 
 
 def compact_ivf_cells(spark, index_table: str) -> int:
@@ -1147,10 +1144,7 @@ def _compact_ivf_cells_locked(spark, index_table: str, loc: str, fs, re, lease):
 
         for e in marked - referenced - {max(marked)}:
             fs.delete(_epoch_marker_uri(loc, e))
-    try:
-        spark.catalog.refreshTable(index_table)
-    except Exception:
-        pass
+    spark.catalog.refreshTable(index_table)
     return swapped
 
 
@@ -1312,10 +1306,7 @@ class IngestHistogram:
         # snapshot forever and the trigger never sees a single append
         # (measured: imbalance pinned at the build value across every
         # epoch of the r12 retrain-cycle leg until this line existed)
-        try:
-            self._spark.catalog.refreshTable(self._table)
-        except Exception:
-            pass
+        self._spark.catalog.refreshTable(self._table)
         self.counts: dict[int, int] = {
             int(r["cell"]): int(r["count"])
             for r in self._spark.table(self._table)

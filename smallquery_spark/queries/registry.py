@@ -22,6 +22,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from smallquery_spark.sources import read_any
+
 
 @dataclass(frozen=True)
 class QueryDef:
@@ -72,18 +74,18 @@ def ensure_driver_confs(spark: SparkSession) -> None:
     Every oracle comparison depends on ansi=false / UTC / nanosAsLong
     actually taking effect, so after setting each conf we read it back
     and fail loudly (warn + collect) rather than silently running with
-    divergent semantics on a session where a conf is non-settable.
+    divergent semantics on a session where a conf is non-settable
+    (``CANNOT_MODIFY_CONFIG``, an ``AnalysisException``).
     """
+    from pyspark.errors import AnalysisException
+
     mismatched = []
     for k, v in _DRIVER_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except AnalysisException:
             pass  # non-settable on some future Spark — verified below
-        try:
-            effective = spark.conf.get(k)
-        except Exception:
-            effective = None
+        effective = spark.conf.get(k, None)
         if effective != v:
             mismatched.append((k, v, effective))
     if mismatched:
@@ -150,12 +152,13 @@ def _effective_splits(path: str) -> tuple[int, int]:
     stamp = (st.st_mtime_ns, st.st_size)
     hit = _SCAN_SPLIT_CACHE.get(path)
     if hit is None or hit[0] != stamp:
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow
+        import pyarrow.parquet as pq
 
+        try:
             md = pq.ParquetFile(path).metadata
             _SCAN_SPLIT_CACHE[path] = (stamp, (md.num_row_groups, md.num_rows))
-        except Exception:
+        except (OSError, pyarrow.ArrowInvalid):
             _SCAN_SPLIT_CACHE[path] = (stamp, (0, 0))
     return _SCAN_SPLIT_CACHE[path][1]
 
@@ -175,7 +178,9 @@ _REPARTITION_TABLES = {"documents", "embeddings"}
 
 
 def t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one fixture table (parquet scan — SURVEY B2).
+    """Load one fixture table (parquet scan — SURVEY B2) through
+    ``read_any``, whose stamp-keyed schema cache makes a repeat read of
+    an unchanged fixture launch no footer job.
 
     Wide-row Python-pass tables (_REPARTITION_TABLES) stored as
     single-row-group files get a round-robin repartition to the core
@@ -189,7 +194,7 @@ def t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     scan."""
     ensure_driver_confs(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
-    df = spark.read.parquet(path)
+    df = read_any(spark, path)
     if table == "events":
         df = normalize_events_ts(df)
     if table in _REPARTITION_TABLES:

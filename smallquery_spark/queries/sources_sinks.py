@@ -524,30 +524,18 @@ def b05_gitws_datasource(spark, sf_dir):
     tags=("B5", "B7"),
 )
 def b05_write_version(spark, sf_dir):
-    import subprocess
-
+    from smallquery_spark.catalog.workspace import _git
     from smallquery_spark.engine import Engine
 
     b05_versioned_scan(spark, sf_dir)  # ensure the git fixture exists
     mount = _workdir(sf_dir, "workspaces")
     eng = Engine(spark, workspace_mount=mount)
-    repo = os.path.join(mount, "ws")
-    env = {
-        **os.environ,
-        "GIT_AUTHOR_NAME": "t", "GIT_AUTHOR_EMAIL": "t@t",
-        "GIT_COMMITTER_NAME": "t", "GIT_COMMITTER_EMAIL": "t@t",
-    }
-    tags = subprocess.run(
-        ["git", "-C", repo, "tag", "-l", "derived1"],
-        capture_output=True, text=True, env=env,
-    ).stdout.strip()
-    if not tags:
+    if not _git(os.path.join(mount, "ws"), "tag", "-l", "derived1"):
         derived = (
             eng.table("nation", workspace="ws", version="v1")
             .groupBy(F.col("n_regionkey").cast("int").alias("n_regionkey"))
             .agg(F.count("*").alias("n_nations"))
         )
-        os.environ.update({k: v for k, v in env.items() if k.startswith("GIT_")})
         eng.write_table(
             derived, "region_counts", workspace="ws",
             message="derived: nations per region @v1", tag="derived1",

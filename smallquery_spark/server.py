@@ -29,6 +29,8 @@ version do zero git work.
 
 from __future__ import annotations
 
+import csv
+import io
 import json
 import os
 import threading
@@ -174,10 +176,12 @@ class _Handler(BaseHTTPRequestHandler):
             payload = json.dumps([{c: _j(r[c]) for c in cols} for r in rows])
             return self._reply(payload, ctype="application/json")
         if fmt == "csv":
-            lines = [",".join(cols)] + [
-                ",".join(str(r[c]) for c in cols) for r in rows
-            ]
-            return self._reply("\n".join(lines), ctype="text/csv")
+            buf = io.StringIO()
+            out = csv.writer(buf, lineterminator="\n")
+            out.writerow(cols)
+            out.writerows([str(r[c]) for c in cols] for r in rows)
+            # no newline after the last row, as the reply always had
+            return self._reply(buf.getvalue()[:-1], ctype="text/csv")
         if fmt == "svg":
             # bar chart of the first two columns (x, y) — the reference's
             # declared "quickly creating charts" purpose (README.md:7)

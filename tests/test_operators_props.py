@@ -1864,3 +1864,66 @@ def test_retrain_trigger_incremental_histogram(spark):
             assert stats_scan == stats_inc
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_append_ivf_refresh_failure_propagates(spark, monkeypatch):
+    """A catalog refresh that fails after an append raises instead of
+    being swallowed: the next read of the table would fail on the same
+    catalog anyway, as a different error."""
+    import os
+
+    from smallquery_spark.operators.similarity import (
+        append_ivf,
+        ivf_assign,
+        materialize_ivf,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0]) for i in range(6)],
+        "c_id long, vec array<double>",
+    )
+    cents = [[0.0, 1.0], [2.0, 1.0]]
+    t = materialize_ivf(
+        spark, ivf_assign(vecs, cents), f"refresh_{os.getpid()}"
+    )
+
+    def refresh_fails(name):
+        raise RuntimeError(f"refresh of {name} failed")
+
+    try:
+        monkeypatch.setattr(spark.catalog, "refreshTable", refresh_fails)
+        with pytest.raises(RuntimeError, match="refresh of"):
+            append_ivf(spark, t, vecs.limit(2), cents)
+    finally:
+        monkeypatch.undo()
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_torn_lease_is_live_until_its_grace_passes(spark, tmp_path):
+    """An unparseable lease (a create whose JSON write never landed) is
+    held while younger than the torn-lease grace and stale once its
+    mtime is older, so a crashed create cannot wedge maintenance."""
+    import time
+
+    from smallquery_spark.errors import IndexBusyError
+    from smallquery_spark.fsio import (
+        _TORN_LEASE_GRACE_S,
+        _lease_stale,
+        acquire_dir_lease,
+        fs_for,
+        lease_path,
+        release_dir_lease,
+    )
+
+    loc = f"file://{tmp_path}/index"
+    fs = fs_for(spark, loc)
+    lp = lease_path(loc)
+    fs.write_text(lp, '{"pid": 12')
+    assert not _lease_stale(fs, lp, None)
+    with pytest.raises(IndexBusyError):
+        acquire_dir_lease(fs, loc, "after_torn")
+    fs.touch(lp, time.time() - _TORN_LEASE_GRACE_S - 5)
+    assert _lease_stale(fs, lp, None)
+    token = acquire_dir_lease(fs, loc, "after_torn")
+    release_dir_lease(fs, loc, token)
+    assert not fs.exists(lp)

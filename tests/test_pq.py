@@ -1453,7 +1453,7 @@ def test_lease_ttl_renewal_and_fencing(spark, corpus, trained, monkeypatch):
 
     Pins: (a) a cross-host lease older than the TTL is taken over —
     deterministic via mtime backdating, no sleeps; (b) a renewal
-    (touch) un-stales it; (c) the TTL defaults from the
+    (touch) un-stales it; (c) acquire takes the TTL from the
     SMALLQUERY_LEASE_STALE_AFTER_S env knob; (d) the eviction drill:
     a TTL takeover lands mid-retrain (after staging, before the swap)
     and the victim's commit is REFUSED — the index keeps its old
@@ -1503,11 +1503,8 @@ def test_lease_ttl_renewal_and_fencing(spark, corpus, trained, monkeypatch):
         assert _lease_stale(fs, lp, 50.0)      # TTL: stale
         assert fs.touch(lp)                    # the holder renews
         assert not _lease_stale(fs, lp, 50.0)  # renewed: live again
-        fs.touch(lp, time.time() - 100)
-        tok = acquire_dir_lease(fs, loc, "taker", stale_after=50.0)
-        release_dir_lease(fs, loc, tok)
 
-        # (c): the env knob is the default TTL
+        # (c): the env knob is the TTL
         fs.write_text(lp, foreign)
         fs.touch(lp, time.time() - 100)
         monkeypatch.setenv("SMALLQUERY_LEASE_STALE_AFTER_S", "50")

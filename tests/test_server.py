@@ -297,6 +297,34 @@ def test_each_reply_runs_its_query_once(server, spark, monkeypatch):
         assert b"40" in body, fmt
 
 
+def test_query_csv_quotes_what_needs_it(server):
+    """format=csv is CSV: a value or alias holding a comma, a quote or a
+    newline is quoted, and plain values (NULL as ``None``) are written
+    as they are, with no newline after the last row."""
+    import csv
+    import io
+
+    status, body = _get(
+        f"{server}/workspaces/demo/query?format=csv&sql="
+        + quote("SELECT k, v FROM nums ORDER BY k")
+    )
+    assert (status, body) == (200, "k,v\n1,10\n2,20\n3,30\n4,40")
+
+    sql = (
+        "SELECT k, 'a,b' AS `x,y`, 'say \"hi\"' AS q,"
+        " concat('l1', char(10), 'l2') AS nl, CAST(NULL AS STRING) AS n"
+        " FROM nums WHERE k = 1"
+    )
+    status, body = _get(
+        f"{server}/workspaces/demo/query?format=csv&sql=" + quote(sql)
+    )
+    assert status == 200, body
+    assert list(csv.reader(io.StringIO(body))) == [
+        ["k", "x,y", "q", "nl", "n"],
+        ["1", "a,b", 'say "hi"', "l1\nl2", "None"],
+    ]
+
+
 def test_browse_resolves_version_once(server, monkeypatch):
     """A file read and a listing at a tag each resolve the version once."""
     from smallquery_spark.catalog.workspace import Workspace

@@ -443,6 +443,67 @@ def test_only_runner_runs_epoch_ingest():
     assert offenders == []
 
 
+# The only catch-all handlers allowed under smallquery_spark/, keyed by
+# (module, enclosing function), each with why it cannot name its type.
+_CATCH_ALL_ALLOWED = {
+    ("server.py", "_Handler.do_GET"):
+        "top level of a request: any failure becomes the 500 reply",
+    ("session.py", "_ship_package"):
+        "addPyFile of an already shipped path raises a version-specific"
+        " error; anything else is printed, and executors fail loudly",
+    ("fsio.py", "HadoopFS.create_text_exclusive"):
+        "re-raises unless the path exists (the lost create race)",
+    ("operators/pq.py", "_retrain_ivfpq_locked"):
+        "re-raises unless the directory swap landed",
+    ("operators/neardup_index.py", "NearDupIndex.ingest_epoch"):
+        "re-raises unless it is a hash-build failure with a fallback"
+        " strategy left",
+}
+
+
+def _catch_all_handlers(pkg) -> list[tuple[str, str, int]]:
+    """(module, enclosing function, line) of every ``except:``,
+    ``except Exception`` and ``except BaseException`` (bare or in a
+    tuple) in the package."""
+    import ast
+
+    out = []
+
+    def walk(node, scope, rel):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(
+                ch, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                walk(ch, scope + [ch.name], rel)
+                continue
+            if isinstance(ch, ast.ExceptHandler):
+                types = ch.type.elts if isinstance(ch.type, ast.Tuple) else [ch.type]
+                if ch.type is None or any(
+                    isinstance(t, ast.Name)
+                    and t.id in ("Exception", "BaseException")
+                    for t in types
+                ):
+                    out.append((rel, ".".join(scope), ch.lineno))
+            walk(ch, scope, rel)
+
+    for path in sorted(pkg.rglob("*.py")):
+        walk(ast.parse(path.read_text()), [], path.relative_to(pkg).as_posix())
+    return out
+
+
+def test_catch_all_handlers_only_where_pinned():
+    """A failure is never hidden behind a catch-all: outside the pinned
+    list, every handler under smallquery_spark/ names the error type
+    its documented case raises."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "smallquery_spark"
+    found = _catch_all_handlers(pkg)
+    offenders = [h for h in found if h[:2] not in _CATCH_ALL_ALLOWED]
+    assert offenders == []
+    assert {h[:2] for h in found} == set(_CATCH_ALL_ALLOWED)
+
+
 def test_stage_slices_orders_frames_then_parts(spark):
     """Every part file of every frame is one slice, in frame order and
     then part order, with ascending mtimes."""

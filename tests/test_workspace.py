@@ -907,3 +907,22 @@ def test_versioned_refs_never_share_a_view_with_other_tables(collide_mount, spar
     assert eng.sql(at_name, workspace="ws").collect()[0]["s"] == 50
     with pytest.raises(UnsupportedRelation, match="two different tables"):
         eng.sql(f"SELECT * FROM `t@{first}` JOIN t@v1.0 USING (k)", workspace="ws")
+
+
+def test_b05_write_version_leaves_the_environment_alone(spark, tmp_path, monkeypatch):
+    """The registered write query commits under the engine's own git
+    identity (``commit_table``'s ``-c user.*``) and adds or changes no
+    environment variable of the process."""
+    from smallquery_spark.queries import sources_sinks
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setattr(sources_sinks, "_WORK", str(tmp_path))
+    before = dict(os.environ)
+    assert sources_sinks.b05_write_version(spark, SF_SMOKE).count() > 0
+    assert {k: v for k, v in os.environ.items() if before.get(k) != v} == {}
+    repo = tmp_path / os.path.basename(SF_SMOKE) / "workspaces" / "ws"
+    author = subprocess.run(
+        ["git", "-C", str(repo), "log", "-1", "--format=%an", "derived1"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert author == "smallquery"
