@@ -339,7 +339,7 @@ def fs_for(spark: SparkSession, uri: str) -> HadoopFS:
 # commit refused, index intact) pinned there too.
 #
 # The lease file is a SIBLING of the protected directory
-# (``<dir>.maint_lease``, beside ``.retrain_tmp``/``.compact_tmp``),
+# (``<dir>.maint_lease``, beside the work trees of ``work_trees``),
 # NOT inside it: retrain's commit is a rename of the directory itself,
 # and a lease inside would be renamed away mid-protocol — leaving the
 # live path unguarded between the swap and the protocol's remaining
@@ -503,3 +503,87 @@ class dir_lease:
                 " recovery converges the directory"
             )
         self._fs.touch(lease)  # renewal (best-effort on object stores)
+
+
+# ---------------------------------------------------------------------------
+# Per-child rename-aside swap: the commit protocol of every maintenance op
+# that rewrites some children of a directory (IVF cell compaction, IVF-PQ
+# deletion, epoch-store deletion). The caller stages each rewritten child
+# DURABLY under ``<root>.<op>_tmp``; swap_children then moves each live
+# child into ``<root>.<op>_old`` and the staged copy into its place. A
+# crash between a child's two renames leaves it only in the aside tree,
+# so every caller runs recover_children under the lease before it scans
+# anything. The compact and delete trees follow the same rules, so either
+# op heals the other's crash. Retrain's whole-directory swap shares only
+# the naming (its stage-complete rule lives in operators/pq.py).
+# ---------------------------------------------------------------------------
+
+WORK_OPS = ("compact", "delete", "retrain")
+
+
+def work_trees(root: str, op: str) -> tuple[str, str]:
+    """``(staging, aside)`` sibling trees of ``root`` for maintenance op
+    ``op`` (one of WORK_OPS): ``<root>.<op>_tmp`` and ``<root>.<op>_old``.
+    Siblings, not children, so Spark's scan of ``root`` never sees them."""
+    base = root.rstrip("/")
+    return f"{base}.{op}_tmp", f"{base}.{op}_old"
+
+
+def recover_children(fs: HadoopFS, root: str) -> bool:
+    """Head recovery for swap_children: restore every child of the
+    compact and delete aside trees whose live path is missing (caught
+    between its two renames), then delete both aside and both staging
+    trees. Returns whether anything was restored. Call it under the
+    root's maintenance lease, before any scan of ``root``."""
+    restored = False
+    for op in ("compact", "delete"):
+        staging, aside = work_trees(root, op)
+        for name in fs.list_names(aside):
+            if not fs.exists(join_uri(root, name)):
+                fs.rename(join_uri(aside, name), join_uri(root, name))
+                restored = True
+        fs.delete(aside)
+        fs.delete(staging)
+    return restored
+
+
+def child_unchanged(fs: HadoopFS, root: str, name: str, scanned: set) -> bool:
+    """True when child ``name``'s live ``*.parquet`` names still equal
+    ``scanned`` — the swap guard against a lease-free appender whose file
+    landed after the scan (swapping would discard it). Pass it as
+    swap_children's ``check`` so it runs right before that child's
+    renames, not once for the whole loop."""
+    live = {
+        n for n in fs.list_names(join_uri(root, name)) if n.endswith(".parquet")
+    }
+    return live == scanned
+
+
+def swap_children(
+    fs: HadoopFS, root: str, op: str, names, lease: dir_lease, check=None
+) -> list[str]:
+    """Swap each child in ``names`` (caller's order) for its staged copy
+    under ``work_trees(root, op)[0]``; returns the names swapped.
+
+    The aside tree is created once, then per child: ``check(name)``
+    (when given; False skips the child, and it may raise instead),
+    ``lease.fence``, rename live -> aside, then staged -> live when a
+    staged copy exists (a child whose every row was deleted has none:
+    the rename-aside is its deletion). Both work trees are deleted at
+    the end. A crash anywhere leaves each child live or in the aside
+    tree, which recover_children restores."""
+    staging, aside = work_trees(root, op)
+    fs.mkdirs(aside)
+    swapped = []
+    for name in names:
+        if check is not None and not check(name):
+            continue
+        lease.fence(f"{name} swap")
+        live = join_uri(root, name)
+        fs.rename(live, join_uri(aside, name))
+        if fs.exists(join_uri(staging, name)):
+            fs.rename(join_uri(staging, name), live)
+        swapped.append(name)
+    fs.delete(aside)
+    fs.delete(staging)
+    return swapped

@@ -105,16 +105,20 @@ def materialize_bucketed(
     parsed = urlparse(wh_uri)
     if parsed.scheme in ("", "file"):
         register_cleanup(os.path.join(parsed.path, tname))
-    _prune_stale_bucketed(fs, wh_uri)
+    prune_stale_warehouse(fs, wh_uri, r"bkt_[0-9a-f]{12}_\d+$")
     return tname
 
 
-def _prune_stale_bucketed(
-    fs: HadoopFS, wh_uri: str, max_age_hours: float = 24.0
-) -> None:
-    """Scavenge digest-named bucketed-table dirs left by killed runs.
+STALE_WAREHOUSE_HOURS = 24.0
 
-    LOCAL warehouses only, with a live-owner check: bkt_* tables are
+
+def prune_stale_warehouse(fs: HadoopFS, wh_uri: str, pattern: str) -> None:
+    """Scavenge pid-suffixed table dirs left in the warehouse by killed
+    runs: every dir whose name matches ``pattern`` (a regex ending in
+    the ``_<pid>`` suffix) and whose mtime is older than
+    STALE_WAREHOUSE_HOURS.
+
+    LOCAL warehouses only, with a live-owner check: such tables are
     written once (mtime never refreshes while a long run reuses them),
     so the age test alone would evict a live >24h run's table — skip
     any whose pid suffix is a live process (owner_pid_alive, the
@@ -122,15 +126,13 @@ def _prune_stale_bucketed(
     liveness is meaningless across machines — another driver's pid is
     invisible here — so pruning is not attempted at all; remote
     warehouse hygiene belongs to a real catalog/TTL policy."""
-    from urllib.parse import urlparse
-
     from smallquery_spark.queries.tmpdirs import owner_pid_alive
 
     if urlparse(wh_uri).scheme not in ("", "file"):
         return
-    cutoff = time.time() - max_age_hours * 3600.0
+    cutoff = time.time() - STALE_WAREHOUSE_HOURS * 3600.0
     for st in fs.list_status(wh_uri):
-        if not re.match(r"bkt_[0-9a-f]{12}_\d+$", st["name"]):
+        if not re.match(pattern, st["name"]):
             continue
         if owner_pid_alive(st["name"]):
             continue
@@ -170,7 +172,6 @@ def delete_bucketed(
     table: str,
     ids,
     id_col: str,
-    broadcast_ids_max: int = 1_000_000,
 ) -> int:
     """HARD-delete rows from a live BUCKETED table by id — the takedown
     primitive for the at-rest stores a partitioned rewrite cannot reach
@@ -225,21 +226,21 @@ def delete_bucketed(
     (IndexBusyError; the delete is idempotent, retry it).
 
     ``ids`` is a DataFrame with column ``id_col`` or a Python list/set;
-    DataFrame id sets broadcast only under ``broadcast_ids_max`` (the
-    delete_ivfpq size-gate rule — bulk takedowns must not carry the
-    broadcast-OOM shape)."""
+    DataFrame id sets broadcast only under
+    ``takedown.BROADCAST_IDS_MAX`` rows (the delete_ivfpq size-gate
+    rule — bulk takedowns must not carry the broadcast-OOM shape)."""
     import uuid
 
     from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from smallquery_spark.errors import IndexBusyError
-    from smallquery_spark.fsio import dir_lease, table_location
+    from smallquery_spark.fsio import dir_lease, table_location, work_trees
+    from smallquery_spark.operators.takedown import BROADCAST_IDS_MAX
 
     loc = table_location(spark, table)
     fs = fs_for(spark, loc)
-    staging = loc.rstrip("/") + ".delete_tmp"
-    aside = loc.rstrip("/") + ".delete_old"
+    staging, aside = work_trees(loc, "delete")
     n_buckets, bcols, scols = _bucket_spec(spark, table)
     with dir_lease(fs, loc, "delete_bucketed") as lease:
         _recover_bucketed_delete(fs, loc, aside)
@@ -284,7 +285,7 @@ def delete_bucketed(
             ids_df = ids.select(
                 F.col(id_col).cast(id_type).alias(id_col)
             ).distinct()
-            small_ids = ids_df.count() <= int(broadcast_ids_max)
+            small_ids = ids_df.count() <= BROADCAST_IDS_MAX
         else:
             ids_df = spark.createDataFrame(
                 [(i,) for i in set(ids)],

@@ -256,27 +256,23 @@ def pq_train(
     return PQCodebooks(books)
 
 
-def _encode_udf(centroids, codebooks: PQCodebooks, code_format: str = "array"):
-    """Arrow-vectorized (vec, cell) -> PQ codes. Centroids + codebooks
-    ride the closure as numpy (index metadata); per batch: normalize,
-    subtract the row's cell centroid, and argmin each subspace against
-    its codebook — three matmuls per subspace.
+def _encode_udf(centroids, codebooks: PQCodebooks):
+    """Arrow-vectorized (vec, cell) -> PQ codes as array<smallint>.
+    Centroids + codebooks ride the closure as numpy (index metadata);
+    per batch: normalize, subtract the row's cell centroid, and argmin
+    each subspace against its codebook — three matmuls per subspace.
 
-    ``code_format="array"`` (the measured DEFAULT) emits
-    array<smallint>; ``"binary"`` emits m raw bytes (BinaryType) —
-    implemented for the r10 packing study and REJECTED as default by
-    it (IVFPQ_CODEFMT_gen100.json at 2M x 64-dim, m=16: parquet
-    dictionary-encodes the smallint codes to ~1 byte already, while
-    BYTE_ARRAY pays a 4-byte length prefix per value and loses the
-    dictionary — binary lands BIGGER at rest, 11.07x vs 12.02x
-    compression, with ADC wall a wash)."""
+    Parquet dictionary-encodes the smallint codes to ~1 byte each; raw
+    m-byte binary codes measured BIGGER at rest (IVFPQ_CODEFMT_gen100
+    .json at 2M x 64-dim, m=16: BYTE_ARRAY pays a 4-byte length prefix
+    per value and loses the dictionary, 11.07x vs 12.02x compression,
+    with ADC wall a wash), so that layout was deleted."""
     import numpy as np
     import pandas as pd
 
     Cn = _normalized(np.asarray(centroids, dtype=np.float64), np)
     books = codebooks.books.astype(np.float64)
     m, dsub = codebooks.m, codebooks.dsub
-    binary = code_format == "binary"
 
     def encode(v, cell):
         X = _normalized(np.stack(v.to_numpy()).astype(np.float64), np)
@@ -293,9 +289,6 @@ def _encode_udf(centroids, codebooks: PQCodebooks, code_format: str = "array"):
                 + (Bj * Bj).sum(1)[None, :]
             )
             codes[:, j] = d2.argmin(axis=1).astype(np.int16)
-        if binary:
-            u8 = codes.astype(np.uint8)
-            return pd.Series([row.tobytes() for row in u8])
         return pd.Series(list(codes))
 
     encode.__annotations__ = {
@@ -303,7 +296,7 @@ def _encode_udf(centroids, codebooks: PQCodebooks, code_format: str = "array"):
         "cell": pd.Series,
         "return": pd.Series,
     }
-    return F.pandas_udf(encode, "binary" if binary else "array<smallint>")
+    return F.pandas_udf(encode, "array<smallint>")
 
 
 def pq_encode(
@@ -313,29 +306,14 @@ def pq_encode(
     vec_col: str = "vec",
     cell_col: str = "cell",
     code_col: str = "code",
-    code_format: str = "array",
 ) -> DataFrame:
-    """Add the PQ ``code`` column to an ivf_assign output — a narrow
-    partition-local projection (no shuffle), so it composes with both
-    the initial materialize and every append batch.
-
-    ``code_format``: "array" (default — parquet dictionary-encodes
-    the codes to ~1 byte, measured SMALLER at rest than raw binary
-    packing, IVFPQ_CODEFMT_gen100.json; also the only layout when
-    ksub > 256) or "binary" (m raw bytes per row — kept as the
-    measured-and-rejected variant)."""
-    if code_format not in ("binary", "array"):
-        raise ValueError(f"unknown code_format {code_format!r}")
-    if code_format == "binary" and codebooks.ksub > 256:
-        raise ValueError(
-            f"code_format='binary' stores one byte per code but"
-            f" ksub={codebooks.ksub} > 256 — use code_format='array'"
-        )
+    """Add the PQ ``code`` column (array<smallint>, see _encode_udf) to
+    an ivf_assign output — a narrow partition-local projection (no
+    shuffle), so it composes with both the initial materialize and
+    every append batch."""
     return assigned.withColumn(
         code_col,
-        _encode_udf(centroids, codebooks, code_format)(
-            F.col(vec_col), F.col(cell_col)
-        ),
+        _encode_udf(centroids, codebooks)(F.col(vec_col), F.col(cell_col)),
     )
 
 
@@ -347,7 +325,6 @@ def materialize_ivfpq(
     name: str,
     corpus_id: str = "c_id",
     vec_col: str = "vec",
-    code_format: str = "array",
 ) -> str:
     """Persist the PQ-coded corpus as a cell-partitioned table —
     (id, code) per row, the full vector DROPPED — and return the table
@@ -367,10 +344,7 @@ def materialize_ivfpq(
     tname = f"ivfpqx_{name}"
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
     (
-        pq_encode(
-            assigned, centroids, codebooks, vec_col=vec_col,
-            code_format=code_format,
-        )
+        pq_encode(assigned, centroids, codebooks, vec_col=vec_col)
         .select(corpus_id, "cell", "code")
         .repartition(F.col("cell"))
         .write.mode("overwrite")
@@ -425,13 +399,8 @@ def append_ivfpq(
     assigned = ivf_assign(
         new_corpus, centroids, corpus_id=corpus_id, vec_col=vec_col
     )
-    # encode in the format the table already stores (detected from its
-    # schema) — appends never mix code layouts within one index
-    fmt = _code_format_of(spark, index_table)
     (
-        pq_encode(
-            assigned, centroids, codebooks, vec_col=vec_col, code_format=fmt
-        )
+        pq_encode(assigned, centroids, codebooks, vec_col=vec_col)
         .select(corpus_id, "cell", "code")
         .repartition(F.col("cell"))
         .write.mode("append")
@@ -614,14 +583,12 @@ def append_ivfpq_epoch(
         )
         from smallquery_spark.operators.similarity import ivf_assign
 
-        fmt = _code_format_of(spark, index_table)
         staging = join_uri(loc, f"_append_epoch_{int(epoch_id):010d}")
         encoded = pq_encode(
             ivf_assign(new_corpus, centroids, corpus_id=corpus_id, vec_col=vec_col),
             centroids,
             codebooks,
             vec_col=vec_col,
-            code_format=fmt,
         ).select(corpus_id, "cell", "code")
 
         marker_uri = _epoch_marker_uri(loc, epoch_id)
@@ -835,16 +802,6 @@ def _index_scan(spark, index_table: str) -> DataFrame:
             .schema(spark.table(index_table).schema)
             .parquet(loc)
         )
-
-
-def _code_format_of(spark, index_table: str) -> str:
-    """'binary' or 'array', detected from the code column's stored
-    type — searches and appends adapt to what the index holds, so
-    both layouts are probed by the same code path."""
-    from pyspark.sql.types import BinaryType
-
-    dt = _index_scan(spark, index_table).schema["code"].dataType
-    return "binary" if isinstance(dt, BinaryType) else "array"
 
 
 def quantizer_token(
@@ -1117,10 +1074,10 @@ def load_index_meta(
 
 
 def _retrain_paths(spark, index_table: str) -> tuple[str, str, str]:
-    from smallquery_spark.fsio import table_location
+    from smallquery_spark.fsio import table_location, work_trees
 
     loc = table_location(spark, index_table)
-    return loc, loc.rstrip("/") + ".retrain_tmp", loc.rstrip("/") + ".retrain_old"
+    return (loc, *work_trees(loc, "retrain"))
 
 
 def _recover_index_swap(spark, index_table: str, cleanup: bool = False) -> bool:
@@ -1177,10 +1134,9 @@ def _sync_partitions(spark, index_table: str) -> None:
 
 
 def drop_index(spark, index_table: str) -> None:
-    """Drop an IVF / IVF-PQ index table AND any retrain scratch trees
-    parked beside its location. The staged/old trees live at
-    ``<location>.retrain_tmp`` / ``.retrain_old`` — siblings inside the
-    warehouse, NOT under the table directory — so a plain DROP TABLE
+    """Drop an IVF / IVF-PQ index table AND the maintenance work trees
+    (``fsio.work_trees``) parked beside its location — siblings inside
+    the warehouse, NOT under the table directory — so a plain DROP TABLE
     after a crashed staging orphans them forever: recovery/cleanup is
     keyed to the live table, and the table no longer exists (ADVICE
     r10). This is the blessed drop for lifecycle-managed indexes;
@@ -1188,24 +1144,28 @@ def drop_index(spark, index_table: str) -> None:
     runs, so a drop retried after a partial failure converges)."""
     from pyspark.errors import AnalysisException
 
-    from smallquery_spark.fsio import fs_for, lease_path
+    from smallquery_spark.fsio import (
+        WORK_OPS,
+        fs_for,
+        lease_path,
+        table_location,
+        work_trees,
+    )
 
     try:
-        loc, staged, old = _retrain_paths(spark, index_table)
+        loc = table_location(spark, index_table)
     except AnalysisException:
         # table already gone from the catalog: its location (and the
         # sibling scratch naming) is unrecoverable — nothing to sweep
         spark.sql(f"DROP TABLE IF EXISTS {index_table}")
         return
     fs = fs_for(spark, loc)
-    fs.delete(staged)
-    fs.delete(old)
+    for op in WORK_OPS:
+        for tree in work_trees(loc, op):
+            fs.delete(tree)
     # the maintenance lease is a sibling too (it must survive retrain's
-    # directory swap) — sweep it with the scratch trees, and the
-    # delete/compact per-cell work trees beside them
+    # directory swap) — sweep it with the work trees
     fs.delete(lease_path(loc))
-    for suffix in (".delete_tmp", ".delete_old", ".compact_tmp", ".compact_old"):
-        fs.delete(loc.rstrip("/") + suffix)
     spark.sql(f"DROP TABLE IF EXISTS {index_table}")
 
 
@@ -1242,8 +1202,7 @@ def fsck_index(
                                          #   content check impossible,
                                          #   stated rather than skipped
                                          #   silently
-          "leftover_trees": [str],       # .retrain/.delete/.compact
-                                         #   tmp/aside trees present
+          "leftover_trees": [str],       # fsio.work_trees present
           "stale_lease": str | None,     # lease held by a dead
                                          #   same-host pid (or torn
                                          #   past its grace)
@@ -1269,11 +1228,13 @@ def fsck_index(
     import re as _re
 
     from smallquery_spark.fsio import (
+        WORK_OPS,
         _lease_stale,
         fs_for,
         join_uri,
         lease_path,
         table_location,
+        work_trees,
     )
 
     loc = table_location(spark, index_table)
@@ -1362,16 +1323,10 @@ def fsck_index(
                     {"epoch": e, "committed": want, "found": got}
                 )
 
-    for suffix in (
-        ".retrain_tmp",
-        ".retrain_old",
-        ".delete_tmp",
-        ".delete_old",
-        ".compact_tmp",
-        ".compact_old",
-    ):
-        if fs.exists(loc.rstrip("/") + suffix):
-            report["leftover_trees"].append(loc.rstrip("/") + suffix)
+    for op in WORK_OPS:
+        report["leftover_trees"] += [
+            tree for tree in work_trees(loc, op) if fs.exists(tree)
+        ]
 
     lp = lease_path(loc)
     if fs.exists(lp):
@@ -1554,18 +1509,11 @@ def _retrain_ivfpq_locked(
     _refuse_pending_epochs(fs_for(spark, loc_chk), loc_chk, index_table)
     token = quantizer_token(cents, books)
 
-    # the staged tree keeps the live index's code layout: the swap
-    # never touches the catalog entry, whose declared column type must
-    # keep describing the files (a layout change is a re-materialize,
-    # not a retrain)
-    code_format = _code_format_of(spark, index_table)
     loc, staged, old = _retrain_paths(spark, index_table)
     fs = fs_for(spark, loc)
     assigned = ivf_assign(corpus, cents, corpus_id=corpus_id, vec_col=vec_col)
     (
-        pq_encode(
-            assigned, cents, books, vec_col=vec_col, code_format=code_format
-        )
+        pq_encode(assigned, cents, books, vec_col=vec_col)
         .select(corpus_id, "cell", "code")
         .repartition(F.col("cell"))
         .write.mode("overwrite")
@@ -1713,7 +1661,6 @@ def delete_ivfpq(
     index_table: str,
     ids,
     corpus_id: str = "c_id",
-    broadcast_ids_max: int = 1_000_000,
 ) -> dict[int, int]:
     """HARD-delete rows from a live IVF-PQ index by id — the
     takedown/PII-removal primitive a training-data index legally needs
@@ -1725,12 +1672,10 @@ def delete_ivfpq(
     Spark-first shape: one path-scan semi-join finds the TOUCHED cells
     (ids are scattered; only their cells are rewritten), each touched
     cell is re-written WITHOUT the deleted ids into a durable staging
-    tree, then swapped in per cell by the same rename-aside protocol
-    compaction uses — a crash at any point leaves every committed row
-    reachable, and the recovery branch at the head of the next call
-    (or of compact_ivf_cells, which shares the aside naming rules)
-    restores any cell caught between renames. Work is proportional to
-    the touched cells' bytes, not the index.
+    tree, then committed by the per-cell rename-aside swap compaction
+    also uses (``fsio.swap_children``; its head recovery,
+    ``fsio.recover_children``, runs before the victim scan). Work is
+    proportional to the touched cells' bytes, not the index.
 
     Protocol interplay, each rule load-bearing:
 
@@ -1759,59 +1704,52 @@ def delete_ivfpq(
     ``ids`` is a DataFrame with column ``corpus_id`` or a Python
     list/set of ids (driver-bounded). A DataFrame id set is COUNTED
     first and the semi/anti joins carry a broadcast hint only when it
-    holds at most ``broadcast_ids_max`` rows (the takedown regime the
-    operator was built for: scattered handfuls of ids, where broadcast
-    is the right plan). Above the gate — a bulk takedown deleting an
-    entire contaminated source — no hint is attached and AQE picks the
-    join strategy: an unconditional hint would ship the whole id set to
-    every executor, the classic broadcast-OOM shape, on exactly the
-    code path that exists for 100 TB compliance work (ADVICE r12 /
-    VERDICT r12 #2; both plan shapes pinned in tests/test_plans.py).
-    The default gate (1M single-column rows ≈ tens of MB serialized)
-    sits comfortably inside any executor that can run the rewrite
-    itself; list/set ids are driver-bounded by construction and always
-    broadcast."""
+    holds at most ``takedown.BROADCAST_IDS_MAX`` rows (the takedown
+    regime the operator was built for: scattered handfuls of ids,
+    where broadcast is the right plan). Above the gate — a bulk
+    takedown deleting an entire contaminated source — no hint is
+    attached and AQE picks the join strategy: an unconditional hint
+    would ship the whole id set to every executor, the classic
+    broadcast-OOM shape, on exactly the code path that exists for
+    100 TB compliance work (ADVICE r12 / VERDICT r12 #2; both plan
+    shapes pinned in tests/test_plans.py). The gate (1M single-column
+    rows ≈ tens of MB serialized) sits comfortably inside any executor
+    that can run the rewrite itself; list/set ids are driver-bounded
+    by construction and always broadcast."""
     import re as _re
 
     from smallquery_spark.errors import IndexBusyError
-    from smallquery_spark.fsio import dir_lease, fs_for, join_uri, table_location
+    from smallquery_spark.fsio import (
+        child_unchanged,
+        dir_lease,
+        fs_for,
+        join_uri,
+        recover_children,
+        swap_children,
+        table_location,
+        work_trees,
+    )
+    from smallquery_spark.operators.takedown import BROADCAST_IDS_MAX
 
     loc = table_location(spark, index_table)
     fs = fs_for(spark, loc)
-    staging = loc.rstrip("/") + ".delete_tmp"
-    aside = loc.rstrip("/") + ".delete_old"
     with dir_lease(fs, loc, "delete_ivfpq") as lease:
         _recover_index_swap(spark, index_table)
         # recovery FIRST, before any victim scan (ADVICE r12 high): a
-        # prior delete (or compaction) that crashed between
-        # rename(live->aside) and rename(staging->live) left cell X
-        # visible only in an aside tree. Running this after the scan —
-        # the r12 shape — meant the scan could not see X's rows: when
-        # every remaining victim lived in X the call returned {} ("ids
-        # not present") while a later compaction's recovery resurrected
-        # the victims; when other victims remained, the old mid-protocol
-        # recovery restored X AFTER victims were computed, so X's
-        # victims survived a call that reported success. Both asides are
-        # healed here (compaction's head-recovery symmetrically heals
-        # ours), then all four work trees are cleared — we hold the
-        # lease, so no other maintenance can be mid-protocol.
-        recovered = False
-        for aside_tree in (aside, loc.rstrip("/") + ".compact_old"):
-            for n in fs.list_names(aside_tree):
-                if n.startswith("cell=") and not fs.exists(join_uri(loc, n)):
-                    fs.rename(join_uri(aside_tree, n), join_uri(loc, n))
-                    recovered = True
-            fs.delete(aside_tree)
-        fs.delete(staging)
-        fs.delete(loc.rstrip("/") + ".compact_tmp")
-        if recovered:
+        # prior delete (or compaction) that crashed between its two
+        # renames left cell X visible only in an aside tree, where the
+        # scan cannot see X's rows — the call would report "ids not
+        # present" (or leave X's victims) while a later recovery
+        # resurrected them. We hold the lease, so no other maintenance
+        # can be mid-protocol.
+        if recover_children(fs, loc):
             spark.catalog.refreshTable(index_table)
         if isinstance(ids, DataFrame):
             ids_df = ids.select(corpus_id).distinct()
             # one count against the maintenance op's cost: the size
             # gate needs a bound, and a wrong guess here is an
             # executor-OOM cliff at bulk-takedown scale
-            small_ids = ids_df.count() <= int(broadcast_ids_max)
+            small_ids = ids_df.count() <= BROADCAST_IDS_MAX
         else:
             ids_df = spark.createDataFrame(
                 [(i,) for i in set(ids)],
@@ -1835,10 +1773,10 @@ def delete_ivfpq(
         # swap guard's changed-since-scan baseline
         marked = _epoch_marker_ids(fs, loc)
         pat = _re.compile(r"^part-epoch-(\d+)\.parquet$")
-        snapshot: dict[int, set[str]] = {}
-        for c in victims:
+        snapshot: dict[str, set[str]] = {}
+        for c in sorted(victims):
             names = fs.list_names(join_uri(loc, f"cell={c}"))
-            snapshot[c] = {n for n in names if n.endswith(".parquet")}
+            snapshot[f"cell={c}"] = {n for n in names if n.endswith(".parquet")}
             for n in names:
                 m = pat.match(n)
                 if m and int(m.group(1)) not in marked:
@@ -1850,56 +1788,40 @@ def delete_ivfpq(
                     )
         # stage the rewritten cells (touched cells minus the ids),
         # durable before any live directory moves
-        cells = sorted(victims)
         survivors = (
             spark.read.option("basePath", loc)
-            .parquet(*[join_uri(loc, f"cell={c}") for c in cells])
+            .parquet(*[join_uri(loc, name) for name in snapshot])
             .join(ids_hinted, corpus_id, "left_anti")
         )
         (
             survivors.repartition(F.col("cell"))
             .write.mode("overwrite")
             .partitionBy("cell")
-            .parquet(staging)
+            .parquet(work_trees(loc, "delete")[0])
         )
-        fs.mkdirs(aside)
-        from smallquery_spark.operators.similarity import _cell_swap_safe
 
-        for c in cells:
-            cell = f"cell={c}"
-            # changed-since-scan guard, per cell immediately before its
-            # rename-aside (ADVICE r12 medium — mirrors compaction's):
-            # plain appenders are deliberately lease-free, and a row
-            # file landing in a touched cell between the survivors
-            # snapshot and this rename would be swept into the aside
-            # tree and deleted — lost committed rows. Compaction may
-            # SKIP such a cell (it just stays fragmented); deletion
-            # cannot (the cell holds rows that must go, and skipping
-            # would report success while victims survive — exactly the
-            # silent-loss shape of the r12 high finding), so it RAISES.
+        def unchanged_or_raise(name: str) -> bool:
+            # changed-since-scan guard (ADVICE r12 medium): plain
+            # appenders are lease-free, and a file landing in a touched
+            # cell after the snapshot would be swept aside and lost.
+            # Compaction may SKIP such a cell; deletion cannot (skipping
+            # would report success while victims survive), so it RAISES.
             # delete_ivfpq is idempotent: retry after the appender
             # settles; cells swapped before the raise stay deleted.
-            if not _cell_swap_safe(fs, loc, c, snapshot[c]):
+            if not child_unchanged(fs, loc, name, snapshot[name]):
                 raise IndexBusyError(
-                    f"delete_ivfpq: cell {c} of {index_table!r} changed"
+                    f"delete_ivfpq: {name} of {index_table!r} changed"
                     " between the survivors snapshot and its swap (a"
                     " concurrent append landed) — aborting before the"
                     " appended rows could be lost; the delete is"
                     " idempotent, retry it (already-swapped cells stay"
                     " deleted)"
                 )
-            # commit-point fence + renewal (r13): abort before this
-            # cell's renames if a TTL takeover evicted us during the
-            # staging write (LeaseLostError; retry converges)
-            lease.fence(f"cell {c} swap")
-            fs.rename(join_uri(loc, cell), join_uri(aside, cell))
-            if fs.exists(join_uri(staging, cell)):
-                fs.rename(join_uri(staging, cell), join_uri(loc, cell))
-            # a cell whose EVERY row was deleted has no staged dir: the
-            # rename-aside IS the deletion (the empty partition simply
-            # disappears; catalog synced below)
-        fs.delete(aside)
-        fs.delete(staging)
+            return True
+
+        # a cell whose EVERY row was deleted has no staged dir: its
+        # rename-aside is the deletion (catalog synced below)
+        swap_children(fs, loc, "delete", snapshot, lease, unchanged_or_raise)
         _sync_partitions(spark, index_table)
         return victims
 
@@ -1985,7 +1907,6 @@ def delete_rerank_corpus(
     rerank_table: str,
     ids,
     corpus_id: str = "c_id",
-    broadcast_ids_max: int = 1_000_000,
 ) -> int:
     """HARD-delete documents' FULL vectors from a materialized rerank
     corpus — the second leg of the family-wide takedown (VERDICT r12
@@ -2012,36 +1933,25 @@ def delete_rerank_corpus(
     vectors are gone (pinned end-to-end in tests/test_takedown.py)."""
     from smallquery_spark.operators.bucketing import delete_bucketed
 
-    return delete_bucketed(
-        spark, rerank_table, ids, corpus_id, broadcast_ids_max
-    )
+    return delete_bucketed(spark, rerank_table, ids, corpus_id)
 
 
-def _adc_udf(q_index: dict, luts, offsets, code_format: str = "array"):
+def _adc_udf(q_index: dict, luts, offsets):
     """Arrow-vectorized ADC score: (q_id, cell, code) -> double.
     ``luts`` (n_q, m, ksub) and ``offsets`` (n_q, n_cells) are
     search-batch-bounded driver metadata riding the closure; per batch
     the score is one fancy-indexed gather + row sum — no per-row
-    Python, no per-row LUT rebuild. Binary codes decode in one
-    ``frombuffer`` over the joined batch bytes (a single C-level
-    pass), array codes in one ``np.stack``."""
+    Python, no per-row LUT rebuild; the codes decode in one
+    ``np.stack``."""
     import numpy as np
     import pandas as pd
 
     m = luts.shape[1]
-    binary = code_format == "binary"
 
     def adc(q_id, cell, code):
         qi = q_id.map(q_index).to_numpy().astype(np.int64)
         cells = cell.to_numpy().astype(np.int64)
-        if binary:
-            codes = (
-                np.frombuffer(b"".join(code.tolist()), dtype=np.uint8)
-                .astype(np.int64)
-                .reshape(len(code), m)
-            )
-        else:
-            codes = np.stack(code.to_numpy()).astype(np.int64)
+        codes = np.stack(code.to_numpy()).astype(np.int64)
         scores = offsets[qi, cells] + luts[
             qi[:, None], np.arange(m)[None, :], codes
         ].sum(axis=1)
@@ -2268,21 +2178,14 @@ def ivfpq_search(
         route == "auto"
         and _use_pruned_scan(len(cells), len(centroids), prune_coverage_cutoff)
     )
-    from pyspark.sql.types import BinaryType
-
     cand = _index_scan(spark, index_table)
-    fmt = (
-        "binary"
-        if isinstance(cand.schema["code"].dataType, BinaryType)
-        else "array"
-    )
     if prune:
         cand = cand.filter(F.col("cell").isin(cells))
     pairs = cand.join(
         F.broadcast(probes.select(query_id, "cell")), "cell"
     ).filter(F.col(query_id) != F.col(corpus_id))
     scored = pairs.withColumn(
-        "adc", _adc_udf(q_index, luts, offsets, fmt)(query_id, "cell", "code")
+        "adc", _adc_udf(q_index, luts, offsets)(query_id, "cell", "code")
     )
     w = Window.partitionBy(query_id).orderBy(F.col("adc").desc(), F.col(corpus_id))
     keep = k if rerank_corpus is None else max(k, rerank * k)

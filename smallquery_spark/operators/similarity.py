@@ -936,28 +936,18 @@ def compact_ivf_cells(spark, index_table: str) -> int:
     from one recursive listing of the table DIRECTORY — the filesystem
     truth, covering cells the catalog never registered, ADVICE r12 —
     and renames/deletes go through the Hadoop FileSystem API) and
-    crash-safe: compacted cells are STAGED
-    to a durable sibling tree first, then each live ``cell=`` directory
-    is renamed aside and the staged one renamed in — a crash at any
-    point leaves every committed row reachable, and the recovery branch
-    at the top of the next call restores any cell caught between the
-    two renames. (The previous dynamic-partition-overwrite form kept
-    the rewritten rows only in an ephemeral localCheckpoint while
-    Spark's commit deleted the old directories — a driver crash in
-    that window lost the fragmented cells for good.)
+    crash-safe: compacted cells are staged durably, then committed by
+    the per-cell rename-aside swap of ``fsio.swap_children``, whose
+    head recovery (``fsio.recover_children``) runs at the top of the
+    next call.
 
     Concurrent appends: the staging read is a snapshot, so an
     ``append_ivf`` landing between stage and swap would otherwise be
     silently REPLACED by the staged (pre-append) copy of its cell. The
-    swap therefore re-lists each cell INSIDE the rename loop,
-    immediately before that cell's own rename-aside, and SKIPS any
-    cell whose data-file set changed since the scan
-    (``_cell_swap_safe``) — the skipped cell stays fragmented and the
-    next compaction picks it up. This closes the minutes-long staging
-    window AND the loop-long window a batch safe-list would reopen
-    (for the Nth cell such a list is stale by N-1 renames — on object
-    stores, seconds each); the re-list-to-rename gap that remains is
-    the same instant-race every rename-based maintenance protocol has.
+    swap's ``check`` (``fsio.child_unchanged``) re-lists each cell
+    immediately before its renames and SKIPS any cell whose data-file
+    set changed since the scan — the skipped cell stays fragmented and
+    the next compaction picks it up.
     CONCURRENT MAINTENANCE (another compaction, a retrain, an epoch
     append) is excluded outright via the fsio maintenance lease
     (IndexBusyError — the single-writer assumption enforced, r12);
@@ -993,28 +983,17 @@ def compact_ivf_cells(spark, index_table: str) -> int:
 
 
 def _compact_ivf_cells_locked(spark, index_table: str, loc: str, fs, re, lease):
-    from smallquery_spark.fsio import join_uri
+    from smallquery_spark.fsio import (
+        child_unchanged,
+        join_uri,
+        recover_children,
+        swap_children,
+        work_trees,
+    )
 
-    staging = loc.rstrip("/") + ".compact_tmp"
-    aside = loc.rstrip("/") + ".compact_old"
-    # recovery: a compact that died mid-swap leaves cell dirs in the
-    # aside tree; any whose live dir is MISSING were caught between the
-    # two renames — restore them, then clear both work trees. The same
-    # branch recovers a crashed delete_ivfpq (its .delete_old aside
-    # follows the same per-cell rules), so EITHER maintenance entry
-    # point heals the other's crash (r12).
-    recovered = False
-    for aside_tree in (aside, loc.rstrip("/") + ".delete_old"):
-        for name in fs.list_names(aside_tree):
-            if name.startswith("cell=") and not fs.exists(
-                join_uri(loc, name)
-            ):
-                fs.rename(join_uri(aside_tree, name), join_uri(loc, name))
-                recovered = True
-        fs.delete(aside_tree)
-    fs.delete(staging)
-    fs.delete(loc.rstrip("/") + ".delete_tmp")
-    if recovered:
+    # head recovery: restores cells a crashed compaction OR delete_ivfpq
+    # left between their two renames, then clears the work trees
+    if recover_children(fs, loc):
         spark.catalog.refreshTable(index_table)
 
     # fragmentation scan from the FILESYSTEM's file index (ADVICE r12:
@@ -1100,36 +1079,21 @@ def _compact_ivf_cells_locked(spark, index_table: str, loc: str, fs, re, lease):
         .repartition(F.col("cell"))
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(staging)
+        .parquet(work_trees(loc, "compact")[0])
     )
-    # swap per cell: aside <- live, live <- staged (see recovery above);
-    # cells whose live file set changed since the scan (a concurrent
-    # append landed mid-stage) are skipped — swapping them in would
-    # replace the appended file with the staged pre-append copy
-    fs.mkdirs(aside)
-    swapped = 0
-    for c in fragmented:
-        cell = f"cell={c}"
-        # the guard runs per-rename, IMMEDIATELY before this cell's
-        # rename-aside — not as a batch list before the loop, which
-        # would be stale by N-1 renames for the Nth cell (on an object
-        # store whose renames are copies, that staleness is the whole
-        # swap loop's wall time, ADVICE r9). The residual window is
-        # one list-to-rename gap per cell.
-        if not _cell_swap_safe(fs, loc, c, scanned[c]):
-            continue
-        # commit-point fence + renewal (r13): the staging write above
-        # is minutes at scale — if a TTL takeover evicted us during it,
-        # this cell's renames would interleave with the new owner's
-        # protocol; abort (the swapped-so-far cells are committed, the
-        # rest stay fragmented for the next compaction). One control-
-        # file read per cell, same order as the swap guard's list.
-        lease.fence(f"cell {c} swap")
-        fs.rename(join_uri(loc, cell), join_uri(aside, cell))
-        fs.rename(join_uri(staging, cell), join_uri(loc, cell))
-        swapped += 1
-    fs.delete(aside)
-    fs.delete(staging)
+    # swap per cell (fsio.swap_children); a cell whose live file set
+    # changed since the scan (a concurrent append landed mid-stage) is
+    # skipped — swapping it would replace the appended file with the
+    # staged pre-append copy
+    baseline = {f"cell={c}": scanned[c] for c in fragmented}
+    swapped = swap_children(
+        fs,
+        loc,
+        "compact",
+        baseline,
+        lease,
+        check=lambda name: child_unchanged(fs, loc, name, baseline[name]),
+    )
     # epoch-ledger GC: drop markers no remaining part-epoch file
     # references, keeping the newest (the only epoch Spark can still
     # replay against its marker) — bounds the ledger to the compaction
@@ -1145,25 +1109,7 @@ def _compact_ivf_cells_locked(spark, index_table: str, loc: str, fs, re, lease):
         for e in marked - referenced - {max(marked)}:
             fs.delete(_epoch_marker_uri(loc, e))
     spark.catalog.refreshTable(index_table)
-    return swapped
-
-
-def _cell_swap_safe(fs, loc: str, c: int, scanned_names: set) -> bool:
-    """True when cell ``c``'s live data-file set still equals the set
-    recorded at scan time — only then may the cell be swapped for its
-    staged rewrite without discarding a concurrently appended file.
-    Called per cell, immediately before that cell's rename-aside (a
-    batch check computed up front is stale by every earlier cell's
-    rename). Pure predicate over one fsio listing, unit-testable with
-    a stub filesystem."""
-    from smallquery_spark.fsio import join_uri
-
-    live = {
-        n
-        for n in fs.list_names(join_uri(loc, f"cell={c}"))
-        if n.endswith(".parquet")
-    }
-    return live == scanned_names
+    return len(swapped)
 
 
 def assignment_fit(

@@ -48,6 +48,13 @@ _PRUNABLE_TYPES = (
     T.StringType,
 )
 
+# Size gate of every takedown's id-set joins (this module, delete_ivfpq,
+# delete_bucketed): a DataFrame id set of at most this many rows is
+# broadcast; above it AQE picks the join (an unconditional hint would
+# ship a bulk takedown's whole id set to every executor). 1M
+# single-column rows is tens of MB serialized.
+BROADCAST_IDS_MAX = 1_000_000
+
 
 def _stats_name(id_col: str) -> str:
     # ONE file at the STORE ROOT holding every epoch's range (hidden
@@ -111,13 +118,12 @@ def delete_epoch_store(
     store_dir: str,
     ids,
     id_col: str = "doc_id",
-    broadcast_ids_max: int = 1_000_000,
 ) -> int:
     """HARD-delete rows from a ``_SUCCESS``-marked epoch-directory store
     by id. Returns the number of rows deleted (0 = none present;
     idempotent). ``ids`` is a DataFrame with column ``id_col`` or a
     Python list/set; DataFrame sets broadcast only under
-    ``broadcast_ids_max`` (the delete_ivfpq size-gate rule). Pass
+    ``BROADCAST_IDS_MAX`` (the delete_ivfpq size-gate rule). Pass
     ``id_col="__h"`` to delete by fingerprint instead of doc id — both
     columns are content-derived, so either identifies the takedown
     target.
@@ -139,12 +145,10 @@ def delete_epoch_store(
       with the staged data), so a committed epoch stays committed —
       post-delete replays of it still short-circuit and the deletion
       sticks.
-    - **crash-safe per-epoch swap**: survivors are staged durably
-      (``<store>.delete_tmp/epoch_<id>``), then per epoch the live
-      directory is renamed into the aside tree and the staged one
-      renamed in; the recovery branch at the HEAD of the next call
-      (before any victim scan — the r12 delete_ivfpq lesson) restores
-      any epoch caught between the two renames.
+    - **crash-safe per-epoch swap**: every touched epoch's survivors
+      are staged durably, then committed by ``fsio.swap_children``;
+      its head recovery, ``fsio.recover_children``, runs before any
+      victim scan (the r12 delete_ivfpq lesson).
 
     Cost (r15, VERDICT r14 #9): victim discovery prunes epochs through
     a store-root ``_minmax_<id_col>.json`` stats file holding every
@@ -164,20 +168,18 @@ def delete_epoch_store(
     to the touched epochs' bytes (a takedown of k documents rewrites
     ≤k epochs)."""
     from smallquery_spark.errors import IndexBusyError
-    from smallquery_spark.fsio import dir_lease, fs_for, join_uri
+    from smallquery_spark.fsio import (
+        dir_lease,
+        fs_for,
+        join_uri,
+        recover_children,
+        swap_children,
+        work_trees,
+    )
 
     fs = fs_for(spark, store_dir)
-    staging = store_dir.rstrip("/") + ".delete_tmp"
-    aside = store_dir.rstrip("/") + ".delete_old"
     with dir_lease(fs, store_dir, "delete_epoch_store") as lease:
-        # head recovery: restore any epoch caught between the renames
-        for n in fs.list_names(aside):
-            if n.startswith("epoch_") and not fs.exists(
-                join_uri(store_dir, n)
-            ):
-                fs.rename(join_uri(aside, n), join_uri(store_dir, n))
-        fs.delete(aside)
-        fs.delete(staging)
+        recover_children(fs, store_dir)
 
         epochs = sorted(
             n for n in fs.list_names(store_dir) if n.startswith("epoch_")
@@ -204,7 +206,7 @@ def delete_epoch_store(
         id_values = None  # driver-held id set, when the caller gave one
         if isinstance(ids, DataFrame):
             ids_df = ids.select(id_col).distinct()
-            small_ids = ids_df.count() <= int(broadcast_ids_max)
+            small_ids = ids_df.count() <= BROADCAST_IDS_MAX
         else:
             sample = spark.read.parquet(join_uri(store_dir, committed[0]))
             id_values = set(ids)
@@ -392,22 +394,15 @@ def delete_epoch_store(
             victims.update({r["e"]: int(r["count"]) for r in hits})
         if not victims:
             return 0
+        staging = work_trees(store_dir, "delete")[0]
         for e in sorted(victims):
-            live = join_uri(store_dir, e)
-            staged = join_uri(staging, e)
             (
-                spark.read.parquet(live)
+                spark.read.parquet(join_uri(store_dir, e))
                 .join(ids_hinted, id_col, "left_anti")
                 .write.mode("overwrite")
-                .parquet(staged)  # _SUCCESS lands with it: still committed
+                .parquet(join_uri(staging, e))  # _SUCCESS lands with it
             )
-            lease.fence(f"epoch {e} swap")
-            fs.mkdirs(aside)
-            fs.rename(live, join_uri(aside, e))
-            fs.rename(staged, live)
-            # (the store-root stats file needs no touch-up here: a
-            # delete only removes rows, so the rewritten epoch's
-            # recorded range remains a valid superset)
-        fs.delete(aside)
-        fs.delete(staging)
+        # the store-root stats file needs no touch-up: a delete only
+        # removes rows, so each rewritten epoch's range stays a superset
+        swap_children(fs, store_dir, "delete", sorted(victims), lease)
         return int(sum(victims.values()))

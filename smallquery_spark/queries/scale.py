@@ -240,7 +240,10 @@ def c8_salted_join(spark, sf_dir):
 def _bucketed_tables(spark, sf_dir) -> tuple[str, str]:
     """Idempotently materialize bucketed copies of orders/lineitem for
     this sf_dir; returns (orders_table, lineitem_table)."""
-    from smallquery_spark.operators.bucketing import write_bucketed
+    from smallquery_spark.operators.bucketing import (
+        prune_stale_warehouse,
+        write_bucketed,
+    )
 
     # pid-suffixed like every other scratch artifact: two concurrent
     # processes (e.g. pytest + tools.check) share the default
@@ -271,34 +274,10 @@ def _bucketed_tables(spark, sf_dir) -> tuple[str, str]:
             parsed = urlparse(wh_uri)
             if parsed.scheme in ("", "file"):
                 register_cleanup(os.path.join(parsed.path, table))
-            _prune_stale_warehouse(fs, wh_uri)
+            prune_stale_warehouse(
+                fs, wh_uri, r"(orders|lineitem)_bkt_.*_\d+$"
+            )
     return ot, lt
-
-
-def _prune_stale_warehouse(fs, wh_uri: str, max_age_hours: float = 24.0) -> None:
-    """Scavenge pid-suffixed bucketed-table dirs left by killed runs —
-    local warehouses only, skipping live owners (same rule and
-    rationale as operators/bucketing._prune_stale_bucketed)."""
-    import re
-    import time
-    from urllib.parse import urlparse
-
-    from smallquery_spark.fsio import join_uri
-    from smallquery_spark.queries.tmpdirs import owner_pid_alive
-
-    if urlparse(wh_uri).scheme not in ("", "file"):
-        return
-    cutoff = time.time() - max_age_hours * 3600.0
-    for st in fs.list_status(wh_uri):
-        if not re.match(r"(orders|lineitem)_bkt_.*_\d+$", st["name"]):
-            continue
-        if owner_pid_alive(st["name"]):
-            continue
-        try:
-            if st["is_dir"] and st["mtime"] < cutoff:
-                fs.delete(join_uri(wh_uri, st["name"]))
-        except OSError:
-            continue
 
 
 @query(

@@ -1079,8 +1079,8 @@ def c3_ann_ivfpq(spark, sf_dir):
             " meta_ok boolean, stale_raises boolean",
         )
     finally:
-        # drop_index (not plain DROP TABLE): sweeps any .retrain_tmp/_old
-        # scratch a crashed maintenance op parked beside the location
+        # drop_index (not plain DROP TABLE): sweeps the work trees a
+        # crashed maintenance op parked beside the location
         from smallquery_spark.operators.pq import drop_index
 
         drop_index(spark, t_pq)
@@ -1595,7 +1595,7 @@ def c_fsck_index(spark, sf_dir):
     incident must never BE maintenance). The full per-class injection
     matrix (tamper, stale lease, missing stamp, unregistered cell,
     in-flight epoch) is pinned in tests/test_pq.py::test_fsck_index."""
-    from smallquery_spark.fsio import fs_for, join_uri, table_location
+    from smallquery_spark.fsio import fs_for, join_uri, table_location, work_trees
     from smallquery_spark.operators.pq import (
         append_ivfpq_epoch,
         drop_index,
@@ -1634,7 +1634,8 @@ def c_fsck_index(spark, sf_dir):
         # cannot cover it) and a leftover aside tree
         orphan = join_uri(loc, "cell=9999", "part-epoch-0000000001.parquet")
         fs.write_text(orphan, "orphan")
-        fs.mkdirs(loc.rstrip("/") + ".compact_old")
+        aside = work_trees(loc, "compact")[1]
+        fs.mkdirs(aside)
         snap = sorted(fs.list_files_recursive(loc))
         r = fsck_index(spark, tname)
         readonly = sorted(fs.list_files_recursive(loc)) == snap
@@ -1643,7 +1644,7 @@ def c_fsck_index(spark, sf_dir):
         ]
         detects_leftover = bool(r["leftover_trees"])
         fs.delete(join_uri(loc, "cell=9999"))
-        fs.delete(loc.rstrip("/") + ".compact_old")
+        fs.delete(aside)
         return spark.createDataFrame(
             [(clean_on_healthy, detects_orphan, detects_leftover, readonly)],
             "clean_on_healthy boolean, detects_orphan boolean,"

@@ -1490,12 +1490,12 @@ def test_fsio_non_file_scheme_viewfs(spark, tmp_path):
 
 
 def test_cell_swap_safe_guard():
-    """_cell_swap_safe: a cell may swap only while its live data-file
+    """fsio.child_unchanged: a cell may swap only while its live data-file
     set still equals the scan-time set — a changed set means a
     concurrent append landed mid-stage and swapping would discard it.
     Per-cell predicate (called inside the rename loop, right before
     that cell's rename — ADVICE r9), tested with a stub filesystem."""
-    from smallquery_spark.operators.similarity import _cell_swap_safe
+    from smallquery_spark.fsio import child_unchanged
 
     class StubFS:
         def __init__(self, listing):
@@ -1513,12 +1513,143 @@ def test_cell_swap_safe_guard():
             "wh/t/cell=1": ["part-c.parquet", "part-d.parquet", ".crc"],
         }
     )
-    assert not _cell_swap_safe(fs, "wh/t", 0, scanned[0])
-    assert _cell_swap_safe(fs, "wh/t", 1, scanned[1])
+    assert not child_unchanged(fs, "wh/t", "cell=0", scanned[0])
+    assert child_unchanged(fs, "wh/t", "cell=1", scanned[1])
     # the per-cell shape means a mutation BETWEEN two cells' renames is
     # seen by the later cell's own check
     fs.listing["wh/t/cell=1"].append("part-x.parquet")
-    assert not _cell_swap_safe(fs, "wh/t", 1, scanned[1])
+    assert not child_unchanged(fs, "wh/t", "cell=1", scanned[1])
+
+
+class _DirFS:
+    """The HadoopFS calls swap_children/recover_children make, over a
+    local directory — Spark-free. ``fail_at`` makes the Nth rename
+    (0-based) raise, before (``landed=False``) or after it happens."""
+
+    def __init__(self, fail_at=None, landed=False):
+        self.renames, self.fail_at, self.landed = 0, fail_at, landed
+
+    def exists(self, uri):
+        import os
+
+        return os.path.exists(uri)
+
+    def list_names(self, uri):
+        import os
+
+        return sorted(os.listdir(uri)) if os.path.isdir(uri) else []
+
+    def mkdirs(self, uri):
+        import os
+
+        os.makedirs(uri, exist_ok=True)
+
+    def delete(self, uri):
+        import shutil
+
+        shutil.rmtree(uri, ignore_errors=True)
+
+    def rename(self, src, dst):
+        import os
+
+        n, self.renames = self.renames, self.renames + 1
+        if n == self.fail_at and not self.landed:
+            raise OSError(f"injected rename failure {n}")
+        os.rename(src, dst)
+        if n == self.fail_at:
+            raise OSError(f"injected crash after rename {n}")
+
+
+class _NoLease:
+    def fence(self, phase=""):
+        pass
+
+
+def _swap_tree(root):
+    """Three live children with file ``old`` and their staged copies
+    (file ``new``) under the delete staging tree."""
+    import os
+
+    from smallquery_spark.fsio import work_trees
+
+    staging = work_trees(str(root), "delete")[0]
+    for name in ("cell=0", "cell=1", "cell=2"):
+        os.makedirs(os.path.join(root, name))
+        open(os.path.join(root, name, "old"), "w").close()
+        os.makedirs(os.path.join(staging, name))
+        open(os.path.join(staging, name, "new"), "w").close()
+
+
+def test_swap_children_crash_at_every_rename_recovers(tmp_path):
+    """fsio.swap_children + recover_children: whichever of the six
+    renames fails (before or after it lands), recovery leaves every
+    child live with either its old or its staged files — none missing,
+    none mixed — and no work tree behind."""
+    import os
+
+    import pytest
+
+    from smallquery_spark.fsio import (
+        WORK_OPS,
+        recover_children,
+        swap_children,
+        work_trees,
+    )
+
+    names = ["cell=0", "cell=1", "cell=2"]
+    for landed in (False, True):
+        for k in range(2 * len(names)):
+            root = tmp_path / f"t_{int(landed)}_{k}"
+            _swap_tree(root)
+            fs = _DirFS(fail_at=k, landed=landed)
+            with pytest.raises(OSError, match="injected"):
+                swap_children(fs, str(root), "delete", names, _NoLease())
+            fs.fail_at = None
+            recover_children(fs, str(root))
+            for name in names:
+                assert os.listdir(root / name) in (["old"], ["new"]), (k, name)
+            for op in WORK_OPS:
+                assert not any(os.path.exists(w) for w in work_trees(str(root), op))
+    # no failure: every child swapped, in the caller's order
+    root = tmp_path / "clean"
+    _swap_tree(root)
+    assert swap_children(_DirFS(), str(root), "delete", names, _NoLease()) == names
+    assert all(os.listdir(root / n) == ["new"] for n in names)
+    assert not recover_children(_DirFS(), str(root))
+
+
+def test_swap_children_check_skips_or_aborts(tmp_path):
+    """swap_children's ``check``: False leaves the child live, untouched
+    and out of the returned list; a raise aborts before that child's
+    renames (earlier children stay swapped, later ones untouched)."""
+    import os
+
+    import pytest
+
+    from smallquery_spark.fsio import swap_children
+
+    names = ["cell=0", "cell=1", "cell=2"]
+    root = tmp_path / "skip"
+    _swap_tree(root)
+    got = swap_children(
+        _DirFS(), str(root), "delete", names, _NoLease(),
+        check=lambda n: n != "cell=1",
+    )
+    assert got == ["cell=0", "cell=2"]
+    assert [os.listdir(root / n) for n in names] == [["new"], ["old"], ["new"]]
+
+    def refuse(name):
+        if name == "cell=1":
+            raise RuntimeError("changed between")
+        return True
+
+    root = tmp_path / "abort"
+    _swap_tree(root)
+    fs = _DirFS()
+    with pytest.raises(RuntimeError, match="changed between"):
+        swap_children(fs, str(root), "delete", names, _NoLease(), check=refuse)
+    assert fs.renames == 2  # cell=0's two renames, none for cell=1
+    assert [os.listdir(root / n) for n in names] == [["new"], ["old"], ["old"]]
 
 
 def test_ivf_compact_skips_concurrently_appended_cell(spark, monkeypatch):
@@ -1677,15 +1808,18 @@ def test_prune_stale_skips_live_owner(tmp_path, monkeypatch):
 
 
 def test_warehouse_pruners_guard_live_and_remote(spark, tmp_path):
-    """The warehouse pruners (bucketing/scale) must skip live-owner
-    bkt_* tables and must not prune AT ALL on a non-local warehouse —
+    """The warehouse pruner (bucketing and scale both call it) must skip
+    live-owner bkt_* tables and must not prune AT ALL on a non-local
+    warehouse —
     pid liveness is a single-box concept; another driver's pid is
     invisible across machines."""
     import os
     import time
 
     from smallquery_spark.fsio import fs_for
-    from smallquery_spark.operators.bucketing import _prune_stale_bucketed
+    from smallquery_spark.operators.bucketing import prune_stale_warehouse
+
+    bkt = r"bkt_[0-9a-f]{12}_\d+$"
 
     wh = tmp_path / "wh"
     live = wh / f"bkt_{'a' * 12}_{os.getpid()}"
@@ -1696,7 +1830,7 @@ def test_warehouse_pruners_guard_live_and_remote(spark, tmp_path):
     os.utime(live, (old, old))
     os.utime(dead, (old, old))
     fs = fs_for(spark, str(wh))
-    _prune_stale_bucketed(fs, str(wh))
+    prune_stale_warehouse(fs, str(wh), bkt)
     assert live.exists() and not dead.exists()
 
     # remote scheme: returns before touching the filesystem at all
@@ -1704,10 +1838,8 @@ def test_warehouse_pruners_guard_live_and_remote(spark, tmp_path):
         def __getattr__(self, name):
             raise AssertionError("remote warehouse must not be pruned")
 
-    _prune_stale_bucketed(Untouchable(), "s3a://bucket/warehouse")
-    from smallquery_spark.queries.scale import _prune_stale_warehouse
-
-    _prune_stale_warehouse(Untouchable(), "hdfs://nn/warehouse")
+    prune_stale_warehouse(Untouchable(), "s3a://bucket/warehouse", bkt)
+    prune_stale_warehouse(Untouchable(), "hdfs://nn/warehouse", bkt)
 
 
 def test_parquet_stats_under_hidden_ancestor(spark, tmp_path):

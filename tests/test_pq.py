@@ -75,40 +75,21 @@ def test_pq_train_contract(spark, corpus):
 
 
 def test_pq_encode_dense_in_range_codes(spark, corpus, trained):
-    from smallquery_spark.operators.pq import pq_encode, pq_train
+    from smallquery_spark.operators.pq import pq_encode
     from smallquery_spark.operators.similarity import ivf_assign
 
     cents, books = trained
     assigned = ivf_assign(corpus, cents)
-    rows = pq_encode(
-        assigned, cents, books, code_format="array"
-    ).select("c_id", "code").collect()
+    rows = pq_encode(assigned, cents, books).select("c_id", "code").collect()
     assert len(rows) == 300
     for r in rows:
         assert len(r["code"]) == books.m
         assert all(0 <= c < books.ksub for c in r["code"])
 
-    # the DEFAULT layout is array (measured smaller at rest than raw
-    # binary packing — IVFPQ_CODEFMT_gen100.json)
+    # the layout is array (measured smaller at rest than raw binary
+    # packing — IVFPQ_CODEFMT_gen100.json)
     drow = pq_encode(assigned, cents, books).select("code").first()
     assert isinstance(drow["code"], list)
-
-    # binary layout (the measured-and-rejected variant, kept working):
-    # identical codes, m raw bytes per row
-    arr = {r["c_id"]: [int(c) for c in r["code"]] for r in rows}
-    brows = pq_encode(
-        assigned, cents, books, code_format="binary"
-    ).select("c_id", "code").collect()
-    for r in brows:
-        assert isinstance(r["code"], (bytes, bytearray))
-        assert len(r["code"]) == books.m
-        assert list(r["code"]) == arr[r["c_id"]]
-
-    # one byte per code caps ksub at 256: a wider codebook must refuse
-    wide = pq_train(corpus, cents, m=4, nbits=10)
-    assert wide.ksub == 300
-    with pytest.raises(ValueError):
-        pq_encode(assigned, cents, wide, code_format="binary")
 
 
 def test_ivfpq_rerank_recovers_exact_topk(spark, corpus, trained):
@@ -600,62 +581,6 @@ def test_tampered_gen_stamp_fails_loudly(spark, corpus, trained):
             load_index_meta(spark, t)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_binary_and_array_indexes_answer_identically(spark, corpus, trained):
-    """The code layout ('array' default vs 'binary') is storage only:
-    probes against both answer value-identically (format is detected
-    from the stored schema), and appends encode in the table's own
-    layout."""
-    from pyspark.sql.types import BinaryType
-    from smallquery_spark.operators.pq import (
-        _index_scan,
-        append_ivfpq,
-        ivfpq_search,
-        materialize_ivfpq,
-    )
-    from smallquery_spark.operators.similarity import ivf_assign
-
-    cents, books = trained
-    pid = os.getpid()
-    base = corpus.filter("c_id % 2 = 0")
-    arriving = corpus.filter("c_id % 2 = 1")
-    t_b = materialize_ivfpq(
-        spark, ivf_assign(base, cents), cents, books, f"pqfmtb_{pid}",
-        code_format="binary",
-    )
-    t_a = materialize_ivfpq(
-        spark, ivf_assign(base, cents), cents, books, f"pqfmta_{pid}"
-    )
-    try:
-        append_ivfpq(spark, t_b, arriving, cents, books)
-        append_ivfpq(spark, t_a, arriving, cents, books)
-        assert isinstance(
-            _index_scan(spark, t_b).schema["code"].dataType, BinaryType
-        )
-        assert not isinstance(
-            _index_scan(spark, t_a).schema["code"].dataType, BinaryType
-        )
-        qs = corpus.filter("c_id < 6").select(
-            F.col("c_id").alias("q_id"), "vec"
-        )
-        rb = ivfpq_search(spark, qs, t_b, cents, books, k=5, n_probe=4)
-        ra = ivfpq_search(spark, qs, t_a, cents, books, k=5, n_probe=4)
-        assert rb.exceptAll(ra).count() == 0
-        assert ra.exceptAll(rb).count() == 0
-        rbr = ivfpq_search(
-            spark, qs, t_b, cents, books, k=5, n_probe=4,
-            rerank=3, rerank_corpus=corpus,
-        )
-        rar = ivfpq_search(
-            spark, qs, t_a, cents, books, k=5, n_probe=4,
-            rerank=3, rerank_corpus=corpus,
-        )
-        assert rbr.exceptAll(rar).count() == 0
-        assert rar.exceptAll(rbr).count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_b}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_a}")
 
 
 def test_pq_fit_gap_and_qerr_trigger(spark, corpus, trained):
@@ -2212,6 +2137,7 @@ def test_delete_broadcast_size_gate(spark, corpus, trained, monkeypatch):
     build side; below it the hint forces broadcast even with the auto
     threshold off. Values are identical on both paths."""
     import smallquery_spark.operators.pq as pqmod
+    import smallquery_spark.operators.takedown as takedown
     from smallquery_spark.operators.pq import (
         _index_scan,
         delete_ivfpq,
@@ -2251,11 +2177,12 @@ def test_delete_broadcast_size_gate(spark, corpus, trained, monkeypatch):
             return orig_broadcast(df)
 
         monkeypatch.setattr(pqmod.F, "broadcast", spy)
-        d_large = delete_ivfpq(
-            spark, t, ids_df, broadcast_ids_max=0
-        )
+        gate = takedown.BROADCAST_IDS_MAX
+        monkeypatch.setattr(takedown, "BROADCAST_IDS_MAX", 0)
+        d_large = delete_ivfpq(spark, t, ids_df)
         assert not calls, "large id-set delete must not broadcast-hint"
         assert sum(d_large.values()) == 3
+        monkeypatch.setattr(takedown, "BROADCAST_IDS_MAX", gate)
         # below the gate (and for driver lists) the hint is attached
         ids2 = spark.range(2).select((F.col("id") * 11 + 30).alias("c_id"))
         d_small = delete_ivfpq(spark, t, ids2)

@@ -504,6 +504,31 @@ def test_catch_all_handlers_only_where_pinned():
     assert {h[:2] for h in found} == set(_CATCH_ALL_ALLOWED)
 
 
+def test_work_tree_names_spelled_only_in_fsio():
+    """The maintenance work-tree names (``<root>.<op>_tmp``/``_old``) are
+    spelled only in fsio.py: every other module gets them from
+    ``fsio.work_trees``, so the swap protocols cannot drift apart."""
+    import ast
+    import pathlib
+
+    names = tuple(
+        f".{op}_{kind}"
+        for op in ("compact", "delete", "retrain")
+        for kind in ("tmp", "old")
+    )
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "smallquery_spark"
+    offenders = [
+        (path.relative_to(pkg).as_posix(), node.lineno)
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "fsio.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and any(n in node.value for n in names)
+    ]
+    assert offenders == []
+
+
 def test_stage_slices_orders_frames_then_parts(spark):
     """Every part file of every frame is one slice, in frame order and
     then part order, with ascending mtimes."""
