@@ -121,6 +121,31 @@ def _calibrate_cpu_parallel() -> float:
     return round(time.time() - t0, 3)
 
 
+def _jvm_fields(spark) -> dict:
+    """What the pass cost the driver JVM, read at pass end: JIT compile
+    wall summed over the compiler threads (CompilationMXBean) and the
+    JVM process's CPU (utime + stime from /proc/<pid>/stat), plus the
+    parallelism the pass ran at. The session runs the driver JIT on C1
+    only (session.py), which trades some row-loop wall for much less
+    compile CPU; these keys put both sides of that trade in the record."""
+    from smallquery_spark.session import _cpu_count
+
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    pid = int(jvm.java.lang.ProcessHandle.current().pid())
+    with open(f"/proc/{pid}/stat") as f:
+        stat = f.read()
+    # fields after the ")" closing the command name: utime is the 12th
+    fields = stat[stat.rindex(")") + 2:].split()
+    ticks = int(fields[11]) + int(fields[12])
+    return {
+        "jit_compile_ms": int(mf.getCompilationMXBean().getTotalCompilationTime()),
+        "jvm_cpu_s": round(ticks / os.sysconf("SC_CLK_TCK"), 2),
+        "cpus": _cpu_count(),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+    }
+
+
 def _single_pass() -> None:
     from smallquery_spark.queries import REGISTRY, load_all
     from smallquery_spark.session import get_session
@@ -193,6 +218,7 @@ def _single_pass() -> None:
                 # reads normal (the r13 pass-2 blind spot)
                 "calibration_par_sec": calibration_par,
                 "loadavg1": loadavg1,
+                **_jvm_fields(spark),
                 "sf": float(sf) if sf else None,
             }
         )
@@ -331,6 +357,14 @@ def main() -> None:
         for n in names
     }
     total = round(sum(queries.values()), 3)
+    # per pass: JIT compile time and JVM CPU (each pass is a fresh JVM);
+    # cores and parallelism are one setting for every pass
+    jvm = {
+        "jit_compile_ms": [r["jit_compile_ms"] for r in results],
+        "jvm_cpu_s": [r["jvm_cpu_s"] for r in results],
+        "cpus": results[0]["cpus"],
+        "default_parallelism": results[0]["default_parallelism"],
+    }
     # The FINAL stdout line is the driver's record and its tail capture
     # is size-bounded: r9's enriched single-line emit (spread + cold +
     # sentinels inline) overflowed it and BENCH_r09.json recorded
@@ -359,6 +393,7 @@ def main() -> None:
         ],
         "loadavg1": [r.get("loadavg1") for r in results],
         "contended_passes": _contended_passes(results),
+        **jvm,
         "vs_prior": _delta_vs_prior_sigma(queries),
         "sf": results[0]["sf"],
     }
@@ -384,6 +419,7 @@ def main() -> None:
                 ],
                 "loadavg1": [r.get("loadavg1") for r in results],
                 "contended_passes": _contended_passes(results),
+                **jvm,
                 "sf": results[0]["sf"],
             }
         )

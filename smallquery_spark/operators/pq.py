@@ -146,11 +146,6 @@ class PQCodebooks:
     def dim(self) -> int:
         return self.m * self.dsub
 
-    def code_bytes(self) -> int:
-        """Stored bytes per vector (smallint codes in parquet dictionary-
-        encode to ~1 byte at ksub<=256; the logical payload is m)."""
-        return self.m
-
 
 def _normalized(M, np):
     norms = np.linalg.norm(M, axis=1, keepdims=True)

@@ -203,15 +203,19 @@ def delete_epoch_store(
             )
         if not committed:
             return 0
+        # one schema read of the first committed epoch: the id frame's
+        # type for a driver list and the pruning dtype below
+        id_field = spark.read.parquet(
+            join_uri(store_dir, committed[0])
+        ).schema[id_col]
         id_values = None  # driver-held id set, when the caller gave one
         if isinstance(ids, DataFrame):
             ids_df = ids.select(id_col).distinct()
             small_ids = ids_df.count() <= BROADCAST_IDS_MAX
         else:
-            sample = spark.read.parquet(join_uri(store_dir, committed[0]))
             id_values = set(ids)
             ids_df = spark.createDataFrame(
-                [(i,) for i in id_values], sample.select(id_col).schema
+                [(i,) for i in id_values], T.StructType([id_field])
             )
             small_ids = True
         ids_hinted = F.broadcast(ids_df) if small_ids else ids_df
@@ -228,9 +232,7 @@ def delete_epoch_store(
         # per epoch lifetime, amortized, under the lease); an absent/
         # corrupt stats file and non-prunable id dtypes scan
         # everything, the pre-r15 behavior.
-        id_dtype = spark.read.parquet(
-            join_uri(store_dir, committed[0])
-        ).schema[id_col].dataType
+        id_dtype = id_field.dataType
         prunable = isinstance(id_dtype, _PRUNABLE_TYPES)
 
         def _refuse_non_epoch_keys(keys, allowed, what: str) -> None:

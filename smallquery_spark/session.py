@@ -76,6 +76,29 @@ _DEFAULTS = {
     ),
     # Quieter, faster local runs.
     "spark.ui.enabled": "false",
+    # Driver JIT on C1 only. This engine's traffic is short (a young
+    # server's requests, fresh-JVM bench passes, tests, CLI checks over
+    # small inputs), and there HotSpot's C2 compiling Spark's own
+    # planner code is the biggest CPU cost. Measured on a 4-core box
+    # (JIT_C1_AB.json), tiered -> C1-only: session start plus one
+    # action compiles for ~10 s -> ~1.2-1.8 s; a warm serve_read
+    # request compiles for ~140-150 ms -> ~22 ms; perfbench medians
+    # fall ~31% (serve_read cpu_ms_per_op), ~35% (library_ops
+    # cpu_ms_per_op) and ~43-45% (setup_s of both). The cost: C1 code
+    # is slower in hot row loops. The bench.py sf0.1 headline rose
+    # ~7% in wall (q18 x1.8, b19 x1.4) while each pass's JVM CPU fell
+    # ~46%. C1-only would shrink the code cache to 48 MB; one JVM
+    # running the full sf0.01 registry (tools.check) fills 87 MB of
+    # it, so the cache keeps its tiered size of 240 MB.
+    # defaultJavaOptions lands BEFORE spark.driver.extraJavaOptions on
+    # the JVM command line, so a user's own options compose with these
+    # and a later flag wins: SPARK_GRAFT_CONF=
+    # "spark.driver.extraJavaOptions=-XX:TieredStopAtLevel=4" restores
+    # C2 for a row-heavy run. Executor JVMs (local-cluster, a real
+    # cluster) keep tiered C2: that is where a cluster's row loops run.
+    "spark.driver.defaultJavaOptions": (
+        "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+    ),
 }
 
 

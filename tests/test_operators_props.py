@@ -1098,6 +1098,28 @@ def test_rocksdb_state_posture(spark):
     assert spark.conf.get(fmt_key, None) == before_fmt
 
 
+def test_driver_jit_defaults_are_c1_with_full_code_cache():
+    """The session runs the driver JIT on C1 only, with the code cache
+    at its tiered size, through defaultJavaOptions; extraJavaOptions is
+    left to the user, whose flags come later and win."""
+    from smallquery_spark.session import _DEFAULTS
+
+    opts = _DEFAULTS["spark.driver.defaultJavaOptions"].split()
+    assert "-XX:TieredStopAtLevel=1" in opts
+    assert "-XX:ReservedCodeCacheSize=240m" in opts
+    assert "spark.driver.extraJavaOptions" not in _DEFAULTS
+
+
+def test_driver_jvm_runs_c1_only(spark):
+    """The flags reach the driver JVM the session launched."""
+    jvm = spark.sparkContext._jvm
+    diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert diag.getVMOption("TieredStopAtLevel").getValue() == "1"
+    assert diag.getVMOption("ReservedCodeCacheSize").getValue() == str(240 << 20)
+
+
 def test_incremental_sessionize_exact_under_any_split(spark):
     """The span-merge exactness claim (operators/sessionize.py): for
     ANY partition of events into epochs, sessionize-per-epoch +
